@@ -37,6 +37,8 @@ from debezium_spark.operators.reduce import apply_truncates, reduce_last_per_key
 from debezium_spark.operators.unwrap import extract_new_record_state
 
 BUCKET_COL = "__bucket"
+#: name suffix of a dir renamed aside during a swap (``_replace_dir``)
+_ASIDE = ".aside"
 
 
 def footer_rows_exceed(env_batch: DataFrame, limit: int) -> bool:
@@ -730,6 +732,7 @@ class ParquetMergeSink:
         )
 
     def write_batch(self, env_batch: DataFrame, epoch_id: int | None = None) -> None:
+        self._recover_swap()
         try:
             verdict, payload = self._prepare_inline_arrow(env_batch, epoch_id)
         except Exception:  # pragma: no cover - Arrow-unfriendly schema
@@ -836,7 +839,9 @@ class ParquetMergeSink:
         # of the same batch against ANY mix of old/new buckets re-derives
         # the same per-bucket output (upsert of the same final state;
         # deleted keys already absent) — so checkpoint-driven re-delivery
-        # converges, which is the exactly-once-in-effect contract.
+        # converges, which is the exactly-once-in-effect contract. Within
+        # one bucket the rename-aside swap (``_replace_dir``) keeps a whole
+        # copy of its rows outside the staging dir a replay deletes.
         #
         # The pre-write repartition on the bucket id bounds the table's file
         # count: each touched bucket gets exactly ONE new file per batch
@@ -853,8 +858,7 @@ class ParquetMergeSink:
         out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
 
         if has_truncate or not self._has_buckets():
-            shutil.rmtree(self.path, ignore_errors=True)
-            os.replace(staging, self.path)
+            self._replace_dir(staging, self.path)
             self._write_schema_sidecar(row_schema)
             return
         self._swap_staged(staging, affected, row_schema)
@@ -869,15 +873,62 @@ class ParquetMergeSink:
         for entry in os.listdir(staging):
             if entry.startswith(f"{BUCKET_COL}="):
                 written.add(int(entry.split("=", 1)[1]))
-                dst = os.path.join(self.path, entry)
-                shutil.rmtree(dst, ignore_errors=True)
-                os.replace(os.path.join(staging, entry), dst)
+                self._replace_dir(
+                    os.path.join(staging, entry),
+                    os.path.join(self.path, entry),
+                )
         for b in set(affected) - written:
             pdir = os.path.join(self.path, f"{BUCKET_COL}={b}")
             if os.path.isdir(pdir):
-                shutil.rmtree(pdir)
+                self._replace_dir(None, pdir)
         shutil.rmtree(staging, ignore_errors=True)
         self._write_schema_sidecar(row_schema)
+
+    @staticmethod
+    def _aside(dst: str) -> str:
+        """Where ``dst`` waits during a swap: a '.'-prefixed sibling, which
+        Spark's file listing and ``_has_buckets`` both skip."""
+        head, tail = os.path.split(dst)
+        return os.path.join(head, f".{tail}{_ASIDE}")
+
+    def _replace_dir(self, src: str | None, dst: str) -> None:
+        """Rename-aside swap of ``dst`` for ``src`` (None drops ``dst``):
+        ``dst`` → aside, ``src`` → ``dst``, drop the aside copy. At every
+        step a complete copy of ``dst``'s rows lives in ``dst`` or in its
+        aside name, never only in a staging dir a replay deletes;
+        ``_recover_swap`` settles an interrupted swap."""
+        import shutil
+
+        aside = self._aside(dst)
+        if os.path.exists(dst):
+            os.replace(dst, aside)
+        if src is not None:
+            os.replace(src, dst)
+        shutil.rmtree(aside, ignore_errors=True)
+
+    def _recover_swap(self) -> None:
+        """Settle a swap a crash interrupted, before anything else touches
+        the table: an aside copy whose target is missing goes back (the
+        staged dir never moved in, so the replay re-derives it from the old
+        rows); one whose target exists is a finished swap's leftover."""
+        import shutil
+
+        asides = [self._aside(self.path)]
+        if os.path.isdir(self.path):
+            asides += [
+                os.path.join(self.path, e)
+                for e in os.listdir(self.path)
+                if e.startswith(".") and e.endswith(_ASIDE)
+            ]
+        for aside in asides:
+            if not os.path.isdir(aside):
+                continue
+            head, tail = os.path.split(aside)
+            dst = os.path.join(head, tail[1 : -len(_ASIDE)])
+            if os.path.exists(dst):
+                shutil.rmtree(aside)
+            else:
+                os.replace(aside, dst)
 
     def read(self) -> DataFrame:
         """The materialized table (without the bucketing column)."""

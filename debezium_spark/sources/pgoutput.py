@@ -25,21 +25,24 @@ Wire format (all integers big-endian, matching the protocol):
 * TupleData: int16 column count, then per column 't' (int32 length +
   UTF-8 bytes), 'n' (null), or 'u' (unchanged TOAST value not sent).
 
-Spark shape: the decode itself is an Arrow-batched ``mapInPandas``
-kernel over the BinaryType message column (never a per-row UDF);
-RELATION messages — rare, bounded by table count × schema changes — are
-parsed driver-side into a versioned registry (valid-from/to LSN
-intervals, same shape as T13's schema history) and column naming is a
-broadcast range join plus JVM-side ``zip_with``/``map_from_entries``.
-Transaction metadata rides the BEGIN message's final-LSN field: each tx
-is an ``[begin_lsn, final_lsn]`` interval, so data messages attach their
-xid/commit-ts by a bucketed broadcast interval join — no global window,
-no stateful pairing. Protocol v2 (PG14 streamed transactions — the
-reference pins proto_version 1, so this is the scale extension) is also
-decoded: Stream Start/Stop/Commit/Abort messages plus the int32-xid
-prefix in-segment data messages carry, which turns the tx attach into a
-plain equi-join on ``stream_xid`` (see ``decode_frames``'s
-``in_stream_col``).
+Spark shape: a micro-batch decodes with ONE driver-side control-plane
+collect plus ONE ``mapInArrow`` data kernel. The control plane is a
+prefix-filtered collect of the control messages (RELATION, BEGIN,
+Stream Start/Stop/Commit/Abort; bounded by tables × schema changes plus
+transactions per batch) folded on the driver, as the reference
+decoder holds that state in memory: the protocol-v2 stream segments, the
+versioned relation registry (valid-from/to LSN intervals, same shape as
+T13's schema history), the sorted v1 BEGIN intervals ``[begin_lsn,
+final_lsn]``, the v2 Stream Commit map and the subtransaction-abort
+guard. The data kernel decodes the INSERT/UPDATE/DELETE messages
+(vectorized numpy walk, never a per-row UDF), names their columns from
+the relation version in effect at each LSN and stamps xid/commit-ts — v1
+by ``searchsorted`` into the BEGIN intervals, v2 by the commit map on the
+int32 xid prefix in-segment messages carry — all inside the consumer's
+action; the envelope projection is JVM-side ``zip_with``/
+``map_from_entries``. Protocol v2 (PG14 streamed transactions — the
+reference pins proto_version 1, so this is the scale extension) is
+decoded alongside v1.
 
 No live Postgres exists in this sandbox, so fixtures are generated
 offline by the encoder half below (byte-identical to the protocol; the
@@ -72,7 +75,7 @@ MESSAGE_CODES = {
     # proto_version 1 (PostgresReplicationConnection's slot options), so
     # v1 is the parity surface; v2 is the SCALE extension — a large tx
     # streams before commit and every data message carries its xid, which
-    # turns the tx attach from an interval join into a plain equi-join.
+    # turns the tx attach from an interval lookup into a commit-map lookup.
     "S": "stream_start",
     "E": "stream_stop",
     "c": "stream_commit",
@@ -99,6 +102,13 @@ def _read_tuple_data(buf: bytes, off: int) -> tuple[list[tuple], int]:
         if kind == "t":
             (length,) = struct.unpack_from(">i", buf, off)
             off += 4
+            if length < 0 or off + length > len(buf):
+                # ByteBuffer.get(byte[]) underflows in the reference; a
+                # Python slice would silently return the short tail
+                raise ValueError(
+                    f"tuple value of {length} bytes at offset {off} "
+                    f"overruns the {len(buf)}-byte message"
+                )
             cols.append(("t", buf[off : off + length].decode("utf-8")))
             off += length
         elif kind in ("n", "u"):
@@ -483,9 +493,10 @@ def _be(data, idx, nbytes):
     return v
 
 
-def _walk_tuples(data, pos):
+def _walk_tuples(data, pos, limit):
     """Vectorized TupleData walk over many messages at once: ``pos`` holds
-    each message's tuple-start byte offset. Byte layout per the module
+    each message's tuple-start byte offset and ``limit`` its message's end
+    offset (no read may cross it). Byte layout per the module
     docstring (int16 ncols, then 't' len+bytes / 'n' / 'u' cells). The walk
     advances all messages one CELL INDEX per numpy pass — O(max columns)
     passes total, each a gather over the active messages — instead of one
@@ -493,12 +504,18 @@ def _walk_tuples(data, pos):
 
     Returns ``(kinds, vstart, vlen, ncols, end_pos)`` where the 2-D arrays
     are [n, max_ncols] cell matrices (vlen = -1 marks 'n'/'u'/padding).
-    Raises ValueError on an unsupported cell kind (caller falls back to the
-    per-row parser, which reports the exact offending byte)."""
+    Raises ValueError on an unsupported cell kind or a read past the
+    message end (caller falls back to the per-row parser, which reports
+    the exact offending byte)."""
     import numpy as np
 
     n = len(pos)
+    if np.any(pos + 2 > limit):
+        raise ValueError("truncated tuple header")
     ncols = _be(data, pos, 2)
+    # every cell takes at least one byte: bounds the cell matrices below
+    if np.any(ncols > limit - pos - 2):
+        raise ValueError("column count overruns the message")
     p = pos + 2
     maxn = int(ncols.max()) if n else 0
     kinds = np.zeros((n, maxn), dtype=np.uint8)
@@ -508,13 +525,19 @@ def _walk_tuples(data, pos):
         act = np.nonzero(c < ncols)[0]
         if not len(act):
             break
+        if np.any(p[act] >= limit[act]):
+            raise ValueError("truncated tuple data")
         k = data[p[act]]
         is_t = k == ord("t")
         if not np.all(is_t | (k == ord("n")) | (k == ord("u"))):
             raise ValueError("unsupported tuple sub-message")
         kinds[act, c] = k
         t_idx = act[is_t]
+        if np.any(p[t_idx] + 5 > limit[t_idx]):
+            raise ValueError("truncated tuple value length")
         ln = _be(data, p[t_idx] + 1, 4)
+        if np.any((ln >= 1 << 31) | (p[t_idx] + 5 + ln > limit[t_idx])):
+            raise ValueError("tuple value overruns its message")
         vstart[t_idx, c] = p[t_idx] + 5
         vlen[t_idx, c] = ln
         p[act] += 1
@@ -595,8 +618,10 @@ def _decode_data_vectorized(lsn_arr, msg_arr):
     guarantees the message class; the caller verified no v2 framing).
     Pure numpy offset walks over the Arrow binary buffer — the per-row
     ``parse_message`` loop only runs for control messages and anomalies.
-    Raises on any protocol violation; the caller re-runs the row path,
-    which reports the reference's exact error."""
+    Every read is bounded by its own message's end, and each message must
+    end exactly where its last tuple does. Raises ValueError on any
+    protocol violation; the caller re-runs the row path, which reports
+    the reference's exact error."""
     import numpy as np
     import pyarrow as pa
 
@@ -612,7 +637,11 @@ def _decode_data_vectorized(lsn_arr, msg_arr):
     ].astype(np.int64)
     data = np.frombuffer(msg_arr.buffers()[2], dtype=np.uint8)
     starts = offs[:-1]
+    ends = offs[1:]
     n = len(starts)
+    # the shortest data message: code, int32 relid, tuple marker, int16 ncols
+    if np.any(ends - starts < 8):
+        raise ValueError("truncated data message")
 
     mtype = data[starts]
     is_i = mtype == ord("I")
@@ -637,15 +666,25 @@ def _decode_data_vectorized(lsn_arr, msg_arr):
 
     # walk 1: the tuple every message carries at offset 6 (I/U: new unless
     # the update has an old image first; D: old image)
-    k1, vs1, vl1, nc1, end1 = _walk_tuples(data, starts + 6)
+    k1, vs1, vl1, nc1, end1 = _walk_tuples(data, starts + 6, ends)
     t1_is_before = has_old  # U with K/O, or D
 
     # walk 2: the 'N' tuple following a U's old image
     u_old = np.nonzero(is_u & has_old)[0]
+    one = np.ones(n, dtype=bool)
+    one[u_old] = False
+    if np.any(end1[one] != ends[one]):
+        raise ValueError("trailing bytes after the tuple data")
     if len(u_old):
-        if not np.all(data[end1[u_old]] == ord("N")):
+        if np.any(end1[u_old] >= ends[u_old]) or not np.all(
+            data[end1[u_old]] == ord("N")
+        ):
             raise ValueError("UPDATE missing 'N' tuple after old image")
-        k2, vs2, vl2, nc2, _ = _walk_tuples(data, end1[u_old] + 1)
+        k2, vs2, vl2, nc2, end2 = _walk_tuples(
+            data, end1[u_old] + 1, ends[u_old]
+        )
+        if np.any(end2 != ends[u_old]):
+            raise ValueError("trailing bytes after the tuple data")
         # align walk-2 into full-width [n, max] matrices
         w = max(k1.shape[1], k2.shape[1])
 
@@ -750,6 +789,38 @@ def _frame_batch_rowpath(lsn_vals, msg_vals, stream_flags):
     )
 
 
+def _frame_batch(lsn_arr, msg_arr, flags=None):
+    """Decode one Arrow batch of messages into a frame RecordBatch.
+
+    A batch with no protocol-v2 in-segment rows (``flags`` None or all
+    false) takes the vectorized kernel; a batch it declines — control
+    messages, or a protocol violation it detects itself — and every
+    batch carrying in-segment rows take the per-row ``parse_message``
+    loop, which raises the reference's exact error for malformed input.
+    Only the kernel's own decline reasons reroute: ``ValueError`` from
+    its protocol and bounds checks, ``IndexError`` from a read past the
+    buffer, ``pa.ArrowInvalid`` from the strict UTF-8 validation. Any
+    other exception is a bug and surfaces."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(msg_arr, pa.ChunkedArray):  # pragma: no cover
+        msg_arr = msg_arr.combine_chunks()
+    n = len(msg_arr)
+    if n == 0:
+        return _frame_batch_rowpath([], [], [])
+    if flags is None or not (pc.any(flags).as_py() or False):
+        try:
+            return _decode_data_vectorized(lsn_arr, msg_arr)
+        except (ValueError, IndexError, pa.ArrowInvalid):
+            pass
+    return _frame_batch_rowpath(
+        lsn_arr.to_pylist(),
+        msg_arr.to_pylist(),
+        [False] * n if flags is None else flags.to_pylist(),
+    )
+
+
 def decode_frames(
     df: DataFrame,
     msg_col: str = "msg",
@@ -757,58 +828,24 @@ def decode_frames(
     in_stream_col: str | None = None,
 ) -> DataFrame:
     """Arrow-batched decode of every message into a positional frame
-    (column names attach later from the relation registry). One Python
-    pass per Arrow batch.
-
-    The hot shape — a batch of plain v1 I/U/D data messages, which is what
-    the data branch's message-class prefilter feeds in — decodes through a
-    fully vectorized numpy walk over the Arrow binary buffers
-    (``_decode_data_vectorized``): O(max columns) gather passes instead of
-    a Python loop per row, and the cell values leave as one gathered
-    buffer, never per-row Python strings. Control messages, protocol-v2
-    segments, and any batch that violates the protocol fall back to the
-    per-row ``parse_message`` loop (which raises the exact reference
-    error for malformed input).
+    (``_FRAME_SCHEMA``; column names are not attached). One Python pass
+    per Arrow batch through ``_frame_batch``: plain v1 I/U/D batches take
+    the vectorized numpy walk over the Arrow binary buffers, anything
+    else the per-row parser.
 
     ``in_stream_col`` names a boolean column stamped by the WAL reader's
     framing (true between Stream Start and Stream Stop): those messages
-    parse in protocol-v2 in-segment form and surface their ``stream_xid``
-    — with it, tx attach is a plain equi-join instead of the v1
-    BEGIN-interval join."""
-    import numpy as np  # noqa: F401 (imported for the kernel closure)
-
+    parse in protocol-v2 in-segment form and surface their
+    ``stream_xid``."""
     sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
     has_stream = in_stream_col is not None
 
     def run(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         for batch in batches:
-            if batch.num_rows == 0:
-                yield _frame_batch_rowpath([], [], [])
-                continue
-            lsn_arr = batch.column(0)
-            msg_arr = batch.column(1)
-            if isinstance(msg_arr, pa.ChunkedArray):  # pragma: no cover
-                msg_arr = msg_arr.combine_chunks()
-            any_stream = has_stream and bool(
-                pc.any(batch.column(2)).as_py() or False
-            )
-            if not any_stream:
-                try:
-                    yield _decode_data_vectorized(lsn_arr, msg_arr)
-                    continue
-                except Exception:  # noqa: BLE001 - fall back to exact path
-                    pass
-            flags = (
-                (v.as_py() for v in batch.column(2))
-                if has_stream
-                else (False for _ in range(batch.num_rows))
-            )
-            yield _frame_batch_rowpath(
-                (v.as_py() for v in lsn_arr), (v.as_py() for v in msg_arr),
-                flags,
+            yield _frame_batch(
+                batch.column(0),
+                batch.column(1),
+                batch.column(2) if has_stream else None,
             )
 
     return df.select(*sel).mapInArrow(run, _FRAME_SCHEMA)
@@ -861,38 +898,117 @@ def _stamp_expr(segments, lsn_col: str):
     return cond
 
 
-def derive_in_stream(
-    df: DataFrame,
-    msg_col: str = "msg",
-    lsn_col: str = "lsn",
-    open_at_start: bool = False,
-    out_col: str = "in_stream",
-) -> tuple[DataFrame, bool, int]:
-    """The WAL-reader fold: derive protocol-v2 segment membership from the
-    Stream Start/Stop framing itself, instead of trusting a caller-stamped
-    column. Returns ``(df + out_col, open_at_end, n_segments)``.
+#: first bytes of the control messages the driver folds: RELATION, BEGIN,
+#: Stream Start/Stop/Commit/Abort (a raw-byte prefix compare, codegen)
+_CONTROL_FILTER = (
+    "substring({msg}, 1, 1) IN (X'52', X'42', X'53', X'45', X'63', X'41')"
+)
+#: first bytes of the data messages the kernel decodes: INSERT/UPDATE/DELETE
+_DATA_FILTER = "substring({msg}, 1, 1) IN (X'49', X'55', X'44')"
 
-    Framing messages are rare (two per streamed segment), so the mark scan
-    is a bounded codegen prefix-filter + collect; the stamp itself is pure
-    JVM expression (closed segments become strict-LSN intervals, an
-    open tail becomes one ``lsn > s`` term). ``open_at_start`` carries a
-    segment left open by the previous micro-batch
-    (``PgOutputStreamDecoder`` persists it)."""
-    marks = sorted(
-        (r[lsn_col], bytes(r["c"]))
-        for r in df.filter(
-            F.expr(f"substring({msg_col}, 1, 1) IN (X'53', X'45')")
-        )
-        .select(lsn_col, F.expr(f"substring({msg_col}, 1, 1)").alias("c"))
+
+class _ControlPlane:
+    """One frame's control messages folded on the driver — the state
+    ``PgOutputMessageDecoder`` keeps in memory while it reads the stream.
+
+    * ``segments`` / ``open_at_end``: protocol-v2 Stream Start/Stop
+      framing as strict LSN intervals.
+    * ``relations``: parsed 'R' messages as ``[(lsn, parsed)]``, sorted on
+      ``(lsn, relation_id)``.
+    * ``begins``: v1 BEGIN intervals ``[begin_lsn, final_lsn]`` as an
+      ``int64[k, 4]`` array of (begin, final, xid, commit_ts_us) rows,
+      sorted and disjoint.
+    * ``commits``: v2 Stream Commit xid → commit_ts_us.
+    * ``resolved``: streamed xids closed by a commit or a whole-tx abort.
+    * ``started``: streamed xids named by a Stream Start.
+    """
+
+    def __init__(self, ctl, open_at_start: bool = False, flagged: bool = False):
+        import numpy as np
+
+        ctl = sorted(ctl, key=lambda t: t[0])
+        if flagged:
+            self.segments, self.open_at_end = [], False
+        else:
+            self.segments, self.open_at_end = _segments_from_marks(
+                sorted((lsn, m[:1]) for lsn, m, _ in ctl if m[:1] in (b"S", b"E")),
+                open_at_start,
+            )
+        self.relations: list[tuple[int, dict]] = []
+        self.commits: dict[int, int] = {}
+        self.resolved: set[int] = set()
+        self.started: set[int] = set()
+        begins = []
+        for lsn, m, flag in ctl:
+            code = m[:1]
+            if code == b"R":
+                in_stream = (
+                    bool(flag) if flagged else _in_segment(lsn, self.segments)
+                )
+                self.relations.append(
+                    (lsn, parse_message(m, in_stream=in_stream))
+                )
+            elif code == b"B":
+                p = parse_message(m)
+                # an interval ending before it starts can match no row
+                if p["final_lsn"] >= lsn:
+                    begins.append(
+                        (lsn, p["final_lsn"], p["xid"], p["commit_ts_us"])
+                    )
+            elif code == b"S":
+                self.started.add(parse_message(m)["xid"])
+            elif code == b"c":
+                p = parse_message(m)
+                self.commits[p["xid"]] = p["commit_ts_us"]
+                self.resolved.add(p["xid"])
+            elif code == b"A":
+                # a subtransaction abort discards only that subxact's rows,
+                # which this envelope does not track — raise rather than
+                # emit a corrupted partial transaction
+                p = parse_message(m)
+                if p["subtransaction_xid"] != p["xid"]:
+                    raise ValueError(
+                        "stream abort of subtransaction "
+                        f"{p['subtransaction_xid']} within tx {p['xid']}: "
+                        "partial-tx rollback is unsupported, refusing to emit"
+                    )
+                self.resolved.add(p["xid"])
+        self.relations.sort(key=lambda t: (t[0], t[1]["relation_id"]))
+        begins.sort()
+        # v1 transactions are serialized onto the stream, so a data row
+        # lies in at most one BEGIN interval; overlap is corrupt input
+        for a, b in zip(begins, begins[1:]):
+            if b[0] <= a[1]:
+                raise ValueError(
+                    f"BEGIN intervals overlap: tx {a[2]} spans lsn "
+                    f"[{a[0]}, {a[1]}] and tx {b[2]} begins at {b[0]}"
+                )
+        self.begins = np.array(begins, dtype=np.int64).reshape(-1, 4)
+
+
+def _control_plane(
+    df: DataFrame,
+    msg_col: str,
+    lsn_col: str,
+    in_stream_col: str | None = None,
+    open_at_start: bool = False,
+) -> _ControlPlane:
+    """ONE prefix-filtered collect of the frame's control messages, folded
+    driver-side. Control messages are bounded by tables × schema changes
+    plus transactions per batch."""
+    sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
+    rows = (
+        df.filter(F.expr(_CONTROL_FILTER.format(msg=msg_col)))
+        .select(*sel)
         .collect()
     )
-    segments, open_at_end = _segments_from_marks(marks, open_at_start)
-    if not segments:
-        return df.withColumn(out_col, F.lit(False)), False, 0
-    return (
-        df.withColumn(out_col, _stamp_expr(segments, lsn_col)),
-        open_at_end,
-        len(segments),
+    return _ControlPlane(
+        [
+            (r[0], bytes(r[1]), r[2] if in_stream_col else None)
+            for r in rows
+        ],
+        open_at_start=open_at_start,
+        flagged=in_stream_col is not None,
     )
 
 
@@ -902,43 +1018,30 @@ def collect_relations(
     lsn_col: str = "lsn",
     in_stream_col: str | None = None,
 ) -> list[tuple[int, dict]]:
-    """Parse a frame's 'R' messages driver-side into [(lsn, parsed)].
-    RELATION messages are rare (tables × schema changes), so the collect
-    is bounded. ``in_stream_col`` flags v2 in-segment 'R' messages (xid
-    prefix before the relation body)."""
-    sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
-    rel_rows = (
-        df.filter(F.expr(f"substring({msg_col}, 1, 1) = X'52'"))  # 'R'
-        .select(*sel)
-        .collect()
-    )
-    if in_stream_col:
-        return sorted(
-            (
-                (
-                    r[lsn_col],
-                    parse_message(
-                        bytes(r[msg_col]), in_stream=bool(r[in_stream_col])
-                    ),
-                )
-                for r in rel_rows
-            ),
-            key=lambda t: (t[0], t[1]["relation_id"]),
-        )
-    # key= keeps the sort on (lsn, relation_id) only: two RELATIONs sharing
-    # an LSN (a multi-table bootstrap stamped at lsn 0) must never fall
-    # through to dict<dict comparison (TypeError).
-    return sorted(
-        ((r[lsn_col], parse_message(bytes(r[msg_col]))) for r in rel_rows),
-        key=lambda t: (t[0], t[1]["relation_id"]),
-    )
+    """Parse a frame's 'R' messages driver-side into [(lsn, parsed)],
+    sorted on (lsn, relation_id) — two RELATIONs sharing an LSN (a
+    multi-table bootstrap stamped at lsn 0) never fall through to
+    dict<dict comparison. In-segment 'R' messages parse in v2 form: by
+    ``in_stream_col`` when given, else by the frame's own Stream
+    Start/Stop framing."""
+    return _control_plane(
+        df, msg_col, lsn_col, in_stream_col=in_stream_col
+    ).relations
 
 
-def registry_df(spark, parsed: list[tuple[int, dict]]) -> DataFrame:
-    """Versioned relation registry: one row per (relation_id, version)
-    with a [valid_from_lsn, valid_to_lsn) LSN interval — the same
-    validity shape as T13's schema history. Intervals are built with a
-    plain sort, never a Spark window."""
+_REGISTRY_SCHEMA = (
+    "relation_id int, schema string, table string,"
+    " replica_identity string, col_names array<string>,"
+    " col_flags array<int>, col_oids array<int>,"
+    " col_typmods array<int>,"
+    " valid_from_lsn long, valid_to_lsn long"
+)
+
+
+def _registry_rows(parsed: list[tuple[int, dict]]) -> list[tuple]:
+    """One row per (relation_id, version) with a [valid_from_lsn,
+    valid_to_lsn) LSN interval — the same validity shape as T13's schema
+    history — built with a plain sort, never a Spark window."""
     by_relid: dict[int, list] = {}
     for lsn, m in sorted(parsed, key=lambda t: (t[0], t[1]["relation_id"])):
         by_relid.setdefault(m["relation_id"], []).append((lsn, m))
@@ -960,14 +1063,12 @@ def registry_df(spark, parsed: list[tuple[int, dict]]) -> DataFrame:
                     valid_to,
                 )
             )
-    return spark.createDataFrame(
-        rows,
-        "relation_id int, schema string, table string,"
-        " replica_identity string, col_names array<string>,"
-        " col_flags array<int>, col_oids array<int>,"
-        " col_typmods array<int>,"
-        " valid_from_lsn long, valid_to_lsn long",
-    )
+    return rows
+
+
+def registry_df(spark, parsed: list[tuple[int, dict]]) -> DataFrame:
+    """Versioned relation registry as a DataFrame (``_registry_rows``)."""
+    return spark.createDataFrame(_registry_rows(parsed), _REGISTRY_SCHEMA)
 
 
 def relation_registry(
@@ -984,6 +1085,175 @@ def relation_registry(
             df, msg_col=msg_col, lsn_col=lsn_col, in_stream_col=in_stream_col
         ),
     )
+
+
+def _name_index(versions) -> dict:
+    """Driver-side naming table for the data kernel from registry rows
+    ``(relation_id, schema, table, col_names, valid_from, valid_to)``: per
+    relation id, its versions' sorted interval starts/ends and their
+    indices into the flat ``schema``/``table``/``col_names`` lists.
+    Registries are bounded by tables × schema versions."""
+    import numpy as np
+
+    by_relid: dict[int, list] = {}
+    flat: dict[str, list] = {"schema": [], "table": [], "col_names": []}
+    for relid, schema, table, names, lo, hi in versions:
+        if hi <= lo:
+            continue  # a version superseded at its own LSN names nothing
+        by_relid.setdefault(int(relid), []).append((lo, hi, len(flat["schema"])))
+        flat["schema"].append(schema)
+        flat["table"].append(table)
+        flat["col_names"].append(list(names) if names is not None else None)
+    index = {}
+    for relid, vs in by_relid.items():
+        vs.sort()
+        for a, b in zip(vs, vs[1:]):
+            if b[0] < a[1]:
+                raise ValueError(
+                    f"relation {relid} has overlapping registry versions "
+                    f"[{a[0]}, {a[1]}) and [{b[0]}, {b[1]})"
+                )
+        index[relid] = np.array(vs, dtype=np.int64).reshape(-1, 3)
+    return {"index": index, **flat}
+
+
+#: the data kernel's output: the frame's data fields plus the relation
+#: naming and the transaction stamp, ready for ``_envelope_select``
+_NAMED_SCHEMA = (
+    "lsn long, kind string, schema string, table string,"
+    " col_names array<string>, before_kind string,"
+    " before array<struct<k:string, v:string>>,"
+    " after array<struct<k:string, v:string>>,"
+    " __xid long, __tx_ts_us long"
+)
+
+
+def _name_and_stamp(frame, names, begins, commits):
+    """Attach relation naming and transaction metadata to one decoded
+    frame batch, in numpy over the driver-folded control state:
+
+    * naming: per relation id present, ``searchsorted`` of the row LSNs
+      into that relation's version starts, kept when ``lsn < valid_to``;
+      a row with no version gets NULL schema/table/names;
+    * v1 tx: ``searchsorted`` into the disjoint BEGIN intervals, kept when
+      ``lsn <= final_lsn``; a row outside every interval gets NULL xid;
+    * v2 tx (rows with a ``stream_xid``): the Stream Commit map stamps
+      committed xids; rows of uncommitted (pending or aborted) xids are
+      withheld, matching the reference's commit-gated emission."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = frame.num_rows
+    lsn = frame.column("lsn").to_numpy(zero_copy_only=False)
+    relid = pc.fill_null(frame.column("relation_id"), -1).to_numpy(
+        zero_copy_only=False
+    )
+
+    ver = np.full(n, -1, dtype=np.int64)
+    for r in np.unique(relid):
+        vs = names["index"].get(int(r))
+        if vs is None:
+            continue
+        m = relid == r
+        at = lsn[m]
+        i = np.searchsorted(vs[:, 0], at, side="right") - 1
+        ic = np.maximum(i, 0)
+        ver[m] = np.where((i >= 0) & (at < vs[ic, 1]), vs[ic, 2], -1)
+    vtake = pa.array(ver, mask=ver < 0)
+
+    def take(key, typ):
+        return pa.array(names[key], type=typ).take(vtake)
+
+    sx_col = frame.column("stream_xid")
+    v2 = sx_col.is_valid().to_numpy(zero_copy_only=False)
+    xid = np.zeros(n, dtype=np.int64)
+    ts = np.zeros(n, dtype=np.int64)
+    stamped = np.zeros(n, dtype=bool)
+    if len(begins):
+        i = np.searchsorted(begins[:, 0], lsn, side="right") - 1
+        ic = np.maximum(i, 0)
+        stamped = (i >= 0) & (lsn <= begins[ic, 1]) & ~v2
+        xid = np.where(stamped, begins[ic, 2], 0)
+        ts = np.where(stamped, begins[ic, 3], 0)
+    keep = None
+    if v2.any():
+        sx = pc.fill_null(sx_col, -1).to_numpy(zero_copy_only=False)
+        committed = np.zeros(n, dtype=bool)
+        if commits:
+            cx = np.array(sorted(commits), dtype=np.int64)
+            cts = np.array([commits[x] for x in cx.tolist()], dtype=np.int64)
+            j = np.minimum(np.searchsorted(cx, sx), len(cx) - 1)
+            committed = v2 & (cx[j] == sx)
+            xid = np.where(committed, sx, xid)
+            ts = np.where(committed, cts[j], ts)
+        stamped |= committed
+        keep = ~v2 | committed
+
+    out = pa.RecordBatch.from_arrays(
+        [
+            frame.column("lsn"),
+            frame.column("kind"),
+            take("schema", pa.utf8()),
+            take("table", pa.utf8()),
+            take("col_names", pa.list_(pa.utf8())),
+            frame.column("before_kind"),
+            frame.column("before"),
+            frame.column("after"),
+            pa.array(xid, mask=~stamped),
+            pa.array(ts, mask=~stamped),
+        ],
+        names=[
+            "lsn", "kind", "schema", "table", "col_names", "before_kind",
+            "before", "after", "__xid", "__tx_ts_us",
+        ],
+    )
+    if keep is not None and not keep.all():
+        out = out.filter(pa.array(keep))
+    return out
+
+
+def _decode_data(
+    df: DataFrame,
+    msg_col: str,
+    lsn_col: str,
+    in_stream_col: str | None,
+    versions,
+    ctl: _ControlPlane,
+) -> DataFrame:
+    """The data plane: ONE ``mapInArrow`` over the frame's I/U/D messages
+    decodes, names and stamps each Arrow batch (``_frame_batch`` then
+    ``_name_and_stamp``); the envelope projection stays JVM-side. It runs
+    inside the consumer's action — no job of its own. The naming table
+    and the BEGIN/commit state travel in the kernel's closure: O(relation
+    versions + transactions in the batch), and PySpark broadcasts any
+    pickled command over 1 MB by itself."""
+    names = _name_index(versions)
+    begins, commits = ctl.begins, ctl.commits
+    sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
+    has_stream = in_stream_col is not None
+
+    def run(batches):
+        for batch in batches:
+            frame = _frame_batch(
+                batch.column(0),
+                batch.column(1),
+                batch.column(2) if has_stream else None,
+            )
+            yield _name_and_stamp(frame, names, begins, commits)
+
+    data = (
+        df.filter(F.expr(_DATA_FILTER.format(msg=msg_col)))
+        .select(*sel)
+        .mapInArrow(run, _NAMED_SCHEMA)
+    )
+    return _envelope_select(data)
+
+
+def _version_rows(rows: list[tuple]) -> list[tuple]:
+    """Registry rows → the naming table's ``(relation_id, schema, table,
+    col_names, valid_from, valid_to)`` projection."""
+    return [(r[0], r[1], r[2], r[4], r[8], r[9]) for r in rows]
 
 
 def _named(cells, names):
@@ -1029,197 +1299,41 @@ def decode_pgoutput_binary(
     and ``after_toasted`` names unchanged-TOAST 'u' cells the server did
     not resend (UnchangedToastedReplicationMessageColumn).
 
-    Plan shape: the relation registry and the begin-interval table are
-    both tiny relative to the stream and join broadcast; column naming is
-    JVM-side array/map expressions; the only Python is the Arrow decode
-    kernel. The tx attach is a broadcast LSN-range join against BEGIN
-    intervals ([message lsn, final-LSN field]) — per micro-batch the
-    begin side is bounded by transactions-per-batch. ``registry`` injects
-    a prebuilt relation registry (the streaming decoder persists one
-    across micro-batches — a batch's 'R' message must outlive its batch);
-    None derives it from this frame's own 'R' messages.
+    Plan shape: ONE prefix-filtered driver collect of the control
+    messages (R/B/S/E/c/A) folds the framing, the relation versions, the
+    BEGIN intervals, the Stream Commit map and the subtransaction-abort
+    guard (``_ControlPlane``); then ONE ``mapInArrow`` kernel over the
+    I/U/D messages decodes them, names their columns from the relation
+    version in effect at each LSN, and stamps xid/commit-ts — v1 by a
+    ``searchsorted`` into the BEGIN intervals (``[message lsn, final-LSN
+    field]``; overlapping intervals raise), v2 by the commit map. The
+    envelope projection is JVM-side ``zip_with``/``map_from_entries``.
+    ``registry`` injects a prebuilt relation registry (``registry_df``
+    shape; collected once, bounded by tables × schema versions); None
+    derives it from this frame's own 'R' messages.
 
     Protocol-v2 streamed transactions: ``in_stream_col`` names a boolean
-    segment-membership column (the streaming decoder stamps it across
-    batches); when None the framing is DERIVED from the frame's own
-    Stream Start/Stop marks (``derive_in_stream``) so v2 input can never
-    silently misparse through the v1 path. In-segment data rows attach
-    their tx by a broadcast equi-join on ``stream_xid`` against Stream
-    Commit messages — data whose commit is absent from the frame
-    (still-pending or aborted) is withheld, matching the reference's
-    commit-gated emission; subtransaction aborts raise (no silent
-    partial-tx corruption)."""
-    has_v2 = in_stream_col is not None
-    if in_stream_col is None and registry is None:
-        # ONE bounded control-message collect bootstraps BOTH the framing
-        # fold and the relation registry — separate R and S/E scans would
-        # cost an extra driver job per batch for the same bytes.
-        ctl = (
-            df.filter(
-                F.expr(
-                    f"substring({msg_col}, 1, 1) IN (X'52', X'53', X'45')"
-                )
-            )
-            .select(lsn_col, msg_col)
-            .collect()
-        )
-        marks = sorted(
-            (r[lsn_col], bytes(r[msg_col])[:1])
-            for r in ctl
-            if bytes(r[msg_col])[:1] in (b"S", b"E")
-        )
-        segments, _open = _segments_from_marks(marks, False)
-        has_v2 = bool(segments)
+    segment-membership column stamped by the caller; when None the
+    framing is DERIVED from the frame's own Stream Start/Stop marks, so
+    v2 input can never silently misparse through the v1 path. Data whose
+    Stream Commit is absent from the frame (still pending, or aborted) is
+    withheld; subtransaction aborts raise (no silent partial-tx
+    corruption). ``spark`` is unused and kept for API compatibility."""
+    ctl = _control_plane(df, msg_col, lsn_col, in_stream_col=in_stream_col)
+    if in_stream_col is None and ctl.segments:
         in_stream_col = "__in_stream"
-        df = df.withColumn(
-            in_stream_col,
-            _stamp_expr(segments, lsn_col) if segments else F.lit(False),
-        )
-        parsed = sorted(
-            (
-                (
-                    r[lsn_col],
-                    parse_message(
-                        bytes(r[msg_col]),
-                        in_stream=_in_segment(r[lsn_col], segments),
-                    ),
-                )
-                for r in ctl
-                if bytes(r[msg_col])[:1] == b"R"
-            ),
-            key=lambda t: (t[0], t[1]["relation_id"]),
-        )
-        reg = registry_df(spark, parsed)
+        df = df.withColumn(in_stream_col, _stamp_expr(ctl.segments, lsn_col))
+    if registry is None:
+        versions = _version_rows(_registry_rows(ctl.relations))
     else:
-        if in_stream_col is None:
-            df, _open, nsegs = derive_in_stream(
-                df, msg_col=msg_col, lsn_col=lsn_col, out_col="__in_stream"
-            )
-            in_stream_col = "__in_stream"
-            has_v2 = nsegs > 0
-        reg = (
-            registry
-            if registry is not None
-            else relation_registry(
-                spark, df, msg_col=msg_col, lsn_col=lsn_col,
-                in_stream_col=in_stream_col,
-            )
-        )
-
-    # Pre-filter each branch by message code on the RAW bytes (a codegen
-    # substring compare) so the Python parse kernel runs once per message
-    # of the relevant class — decoding the whole stream twice (once for
-    # data, once for begins) would double the kernel cost for nothing.
-    data = decode_frames(
-        df.filter(
-            F.expr(f"substring({msg_col}, 1, 1) IN (X'49', X'55', X'44')")
-        ),
-        msg_col=msg_col,
-        lsn_col=lsn_col,
-        in_stream_col=in_stream_col,
-    )
-    named_data = data.join(
-        F.broadcast(reg),
-        (data["relation_id"] == reg["relation_id"])
-        & (data["lsn"] >= reg["valid_from_lsn"])
-        & (data["lsn"] < reg["valid_to_lsn"]),
-        "left",
-    ).drop(reg["relation_id"])
-    v1_data = (
-        named_data.filter(F.col("stream_xid").isNull())
-        if has_v2
-        else named_data
-    )
-
-    begins = (
-        decode_frames(
-            df.filter(F.expr(f"substring({msg_col}, 1, 1) = X'42'")),
-            msg_col=msg_col,
-            lsn_col=lsn_col,
-        )
-        .select(
-            F.col("lsn").alias("__begin_lsn"),
-            F.col("final_lsn").alias("__end_lsn"),
-            F.col("xid").alias("__xid"),
-            F.col("commit_ts_us").alias("__tx_ts_us"),
-        )
-        .localCheckpoint(eager=True)  # reused for the width agg + join
-    )
-    # Bucketed interval join, not a nested-loop range join: a plain
-    # broadcast range join costs O(txs-per-batch × data rows) comparisons
-    # — ruinous once a batch carries many transactions. With bucket width
-    # W = the widest tx interval, every interval spans ≤ 2 buckets, so
-    # begins explode to ≤ 2 rows each and the data side EQUI-joins on its
-    # single bucket (hash lookup), then one residual range filter. Tx
-    # intervals never overlap in protocol v1 (the server serializes
-    # transactions onto the stream), so each data row matches ≤ 1 tx.
-    width = (
-        begins.agg(
-            F.max(F.col("__end_lsn") - F.col("__begin_lsn") + 1)
-        ).first()[0]
-        or 1
-    )
-    banded = begins.select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("__begin_lsn") / width),
-                F.floor(F.col("__end_lsn") / width),
-            )
-        ).alias("__bkt"),
-    )
-    # The range belongs in the JOIN condition (Catalyst hashes the bucket
-    # equality and evaluates the range as the join's residual), so a
-    # bucket shared by several small intervals still matches each data
-    # row at most once — a post-join filter would instead emit one row
-    # per co-bucketed interval.
-    keyed = v1_data.withColumn("__bkt", F.floor(F.col("lsn") / width))
-    with_tx = keyed.join(
-        F.broadcast(banded),
-        (keyed["__bkt"] == banded["__bkt"])
-        & (F.col("lsn") >= F.col("__begin_lsn"))
-        & (F.col("lsn") <= F.col("__end_lsn")),
-        "left",
-    ).drop("__bkt")
-
-    if has_v2:
-        # Guard: a subtransaction abort discards only that subxact's
-        # rows, which this envelope does not track — raise rather than
-        # emit a corrupted partial transaction. Abort messages are rare;
-        # the collect is prefix-filtered and bounded.
-        for r in (
-            df.filter(F.expr(f"substring({msg_col}, 1, 1) = X'41'"))  # 'A'
-            .select(msg_col)
-            .collect()
-        ):
-            m = parse_message(bytes(r[msg_col]))
-            if m["subtransaction_xid"] != m["xid"]:
-                raise ValueError(
-                    "stream abort of subtransaction "
-                    f"{m['subtransaction_xid']} within tx {m['xid']}: "
-                    "partial-tx rollback is unsupported, refusing to emit"
-                )
-        # v2 tx attach: Stream Commit carries (xid, commit ts); the
-        # inner equi-join both names the tx AND gates emission on commit
-        # (pending/aborted xids simply have no commit row).
-        commits = decode_frames(
-            df.filter(F.expr(f"substring({msg_col}, 1, 1) = X'63'")),  # 'c'
-            msg_col=msg_col,
-            lsn_col=lsn_col,
-        ).select(
-            F.col("xid").alias("__commit_xid"),
-            F.col("xid").alias("__xid"),
-            F.col("commit_ts_us").alias("__tx_ts_us"),
-        )
-        v2_with_tx = named_data.filter(F.col("stream_xid").isNotNull()).join(
-            F.broadcast(commits),
-            F.col("stream_xid") == F.col("__commit_xid"),
-            "inner",
-        )
-        return _envelope_select(with_tx).unionByName(
-            _envelope_select(v2_with_tx)
-        )
-    return _envelope_select(with_tx)
+        versions = [
+            tuple(r)
+            for r in registry.select(
+                "relation_id", "schema", "table", "col_names",
+                "valid_from_lsn", "valid_to_lsn",
+            ).collect()
+        ]
+    return _decode_data(df, msg_col, lsn_col, in_stream_col, versions, ctl)
 
 
 def _envelope_select(with_tx: DataFrame) -> DataFrame:
@@ -1269,27 +1383,30 @@ class PgOutputStreamDecoder:
             lambda b, _: sink.write(dec.decode_batch(b))
         )
 
-    The persisted state is (a) the parsed 'R' list — bounded by tables ×
-    schema changes, the same budget as schema history — plus, for
-    protocol-v2 streamed transactions, (b) whether a stream segment was
-    left open at the batch boundary and (c) the raw in-segment rows of
-    still-uncommitted txs (bounded by open streamed-tx size — the same
-    buffer the server itself holds before v2 existed). Segment membership
-    is DERIVED from the Stream Start/Stop framing per batch
-    (``derive_in_stream``), never caller-stamped. A tx streamed across
-    micro-batches emits exactly once — in the batch whose Stream Commit
-    arrives; an aborted tx's rows are discarded. Restart recovery: feed
-    ``bootstrap`` with the parsed relations persisted alongside the
-    checkpoint (``relations`` exposes them for exactly that) and replay
-    from the restart LSN (pending in-segment rows re-read from the WAL,
-    as the reference does — it keeps no cross-restart tx buffer
-    either)."""
+    Each batch costs ONE Spark job of its own: the control-plane collect
+    (``_ControlPlane``); the data kernel runs inside the consumer's
+    action. The persisted state is (a) the parsed 'R' list — bounded by
+    tables × schema changes, the same budget as schema history — plus,
+    for protocol-v2 streamed transactions, (b) whether a stream segment
+    was left open at the batch boundary and (c) the raw in-segment rows
+    of still-uncommitted txs (bounded by open streamed-tx size — the same
+    buffer the server itself holds before v2 existed), localCheckpointed
+    only in a batch that leaves a streamed xid unresolved (a second job).
+    Segment membership is DERIVED from the Stream Start/Stop framing per
+    batch, never caller-stamped. A tx streamed across micro-batches emits
+    exactly once — in the batch whose Stream Commit arrives; an aborted
+    tx's rows are discarded. Restart recovery: feed ``bootstrap`` with
+    the parsed relations persisted alongside the checkpoint
+    (``relations`` exposes them for exactly that) and replay from the
+    restart LSN (pending in-segment rows re-read from the WAL, as the
+    reference does — it keeps no cross-restart tx buffer either)."""
 
     def __init__(self, spark, bootstrap: list[tuple[int, dict]] | None = None):
         self.spark = spark
         self._relations: list[tuple[int, dict]] = list(bootstrap or [])
         self._open_segment = False
         self._pending: DataFrame | None = None
+        self._pending_xids: set[int] = set()
 
     @property
     def relations(self) -> list[tuple[int, dict]]:
@@ -1298,64 +1415,44 @@ class PgOutputStreamDecoder:
     def decode_batch(
         self, batch_df: DataFrame, msg_col: str = "msg", lsn_col: str = "lsn"
     ) -> DataFrame:
-        stamped, self._open_segment, _nsegs = derive_in_stream(
-            batch_df,
-            msg_col=msg_col,
-            lsn_col=lsn_col,
-            open_at_start=self._open_segment,
-            out_col="__in_stream",
+        ctl = _control_plane(
+            batch_df, msg_col, lsn_col, open_at_start=self._open_segment
         )
-        self._relations.extend(
-            collect_relations(
-                stamped,
-                msg_col=msg_col,
-                lsn_col=lsn_col,
-                in_stream_col="__in_stream",
-            )
+        self._open_segment = ctl.open_at_end
+        self._relations.extend(ctl.relations)
+        versions = _version_rows(_registry_rows(self._relations))
+        if not ctl.segments and self._pending is None:
+            # a plain v1 batch: no framing column, no pending buffer
+            return _decode_data(batch_df, msg_col, lsn_col, None, versions, ctl)
+
+        work = batch_df.select(
+            lsn_col, msg_col,
+            _stamp_expr(ctl.segments, lsn_col).alias("__in_stream"),
         )
-        work = stamped.select(lsn_col, msg_col, "__in_stream")
         if self._pending is not None:
             work = self._pending.unionByName(work)
-        # Resolve streamed-tx fates visible so far: commit or full abort
-        # closes a xid (subxact aborts flow through to the decode guard,
-        # which raises). The collect is prefix-filtered and bounded by
-        # streamed txs per batch.
-        resolved: set[int] = set()
-        for r in (
-            work.filter(
-                F.expr(f"substring({msg_col}, 1, 1) IN (X'63', X'41')")
+        # Stream Start names every streamed xid, so the xids still open
+        # after this batch are known without touching the data.
+        self._pending_xids = (self._pending_xids | ctl.started) - ctl.resolved
+        if self._pending_xids:
+            # Every in-segment message carries its xid at bytes 2-5 (v2's
+            # int32 prefix) — extracted JVM-side, no Python in the split.
+            xid_expr = F.expr(
+                f"cast(conv(hex(substring({msg_col}, 2, 4)), 16, 10) as long)"
             )
-            .select(msg_col)
-            .collect()
-        ):
-            m = parse_message(bytes(r[msg_col]))
-            if (
-                m["kind"] == "stream_commit"
-                or m["subtransaction_xid"] == m["xid"]
-            ):
-                resolved.add(m["xid"])
-        # Every in-segment message carries its xid at bytes 2-5 (v2's
-        # int32 prefix) — extracted JVM-side, no Python in the split.
-        xid_expr = F.expr(
-            f"cast(conv(hex(substring({msg_col}, 2, 4)), 16, 10) as long)"
-        )
-        pend_cond = F.col("__in_stream")
-        if resolved:
-            pend_cond = pend_cond & ~xid_expr.isin(
-                [int(x) for x in resolved]
-            )
-        # localCheckpoint truncates lineage so the pending buffer never
-        # re-derives through every prior micro-batch's plan.
-        self._pending = work.filter(pend_cond).localCheckpoint(eager=True)
-        ready = work.filter(~pend_cond)
-        return decode_pgoutput_binary(
-            self.spark,
-            ready,
-            msg_col=msg_col,
-            lsn_col=lsn_col,
-            registry=registry_df(self.spark, self._relations),
-            in_stream_col="__in_stream",
-        )
+            pend_cond = F.col("__in_stream")
+            if ctl.resolved:
+                pend_cond = pend_cond & ~xid_expr.isin(
+                    [int(x) for x in ctl.resolved]
+                )
+            # localCheckpoint truncates lineage so the pending buffer never
+            # re-derives through every prior micro-batch's plan.
+            self._pending = work.filter(pend_cond).localCheckpoint(eager=True)
+        else:
+            self._pending = None
+        # The kernel withholds in-segment rows whose xid has no Stream
+        # Commit in this batch, so `work` needs no ready-side filter.
+        return _decode_data(work, msg_col, lsn_col, "__in_stream", versions, ctl)
 
 
 # ---------------------------------------------------------------------------

@@ -1691,7 +1691,7 @@ def _pgoutput_fixture_stream(spark, sf_dir, key_by_user: bool = False):
         "lsn long, msg binary",
     )
     # Materialize the fixture once: the decoder walks the stream twice
-    # (relation-registry scan + frame decode) and a real deployment reads
+    # (control-plane collect + data kernel) and a real deployment reads
     # an already-written log, not a recomputed one.
     return _materialize_stream(spark, rel.unionByName(tx).unionByName(data), sf_dir)
 
@@ -1727,8 +1727,8 @@ def s18_pgoutput_binary_decode(spark, sf_dir):
     every decoded field — op, table naming via the relation registry,
     xid/commit micros via the BEGIN-interval attach, values, NULL cells,
     TOAST markers — from the closed-form fixture derivation, so the byte
-    encode, the parse, the registry range join, and the tx range join are
-    all value-checked end-to-end."""
+    encode, the parse, the relation-version naming, and the BEGIN-interval
+    tx stamp are all value-checked end-to-end."""
     from debezium_spark.sources.pgoutput import decode_pgoutput_binary
 
     stream = _pgoutput_fixture_stream(spark, sf_dir)

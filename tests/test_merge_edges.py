@@ -4,6 +4,7 @@ c on new key in ONE batch) and empty/degenerate batches.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_spark.sinks.merge import ParquetMergeSink
@@ -510,3 +511,77 @@ def test_driver_inline_merge_drops_emptied_bucket(spark, sf_dir, tmp_path):
         e.startswith("__bucket=") for e in os.listdir(tmp_path / "t")
     )
     assert sink.read().count() == 0
+
+
+def test_swap_crash_then_replay_converges(spark, sf_dir, tmp_path, monkeypatch):
+    """A crash at any step of the bucket swap loses no committed rows. The
+    k-th ``os.replace`` (or ``shutil.rmtree``) inside ``_swap_staged``
+    fails; a fresh sink then replays the same epoch and the table must
+    equal the uncrashed run. Crash points: replace 1, the first bucket's
+    aside rename; replace 2, the staged bucket's move into place, with
+    the old rows only in the aside copy; replace 3, the next bucket's
+    aside rename, one bucket already swapped; rmtree 1, the aside copy's
+    drop, old and new both on disk."""
+    import os
+    import shutil
+    from functools import reduce
+
+    env = accounts_changefeed(spark, sf_dir)
+
+    def batch(events):
+        return reduce(
+            lambda a, b: a.unionByName(b),
+            [_mk_event(env, key_id=i, op=op, pos=p) for i, op, p in events],
+        ).localCheckpoint()
+
+    # 16 keys over 2 buckets, then a batch touching a few keys of each:
+    # every swapped bucket also holds rows the second batch never names
+    first = batch([(i, "c", i) for i in range(16)])
+    second = batch([(1, "u", 20), (2, "u", 21), (3, "u", 22), (4, "d", 23)])
+
+    def sink(path):
+        return ParquetMergeSink(spark, path, ["id"], num_buckets=2)
+
+    def table(path):
+        return sorted(
+            (r.id, r.status, r.balance)
+            for r in sink(path).read().select("id", "status", "balance")
+            .collect()
+        )
+
+    base = str(tmp_path / "base")
+    sink(base).write_batch(first, 0)
+    ref = str(tmp_path / "ref")
+    shutil.copytree(base, ref)
+    sink(ref).write_batch(second, 1)
+    expected = table(ref)
+    assert len(expected) == 15
+
+    swap = ParquetMergeSink._swap_staged
+    for name, k in (("replace", 1), ("replace", 2), ("replace", 3),
+                    ("rmtree", 1)):
+        target = os if name == "replace" else shutil
+        real = getattr(target, name)
+        calls = []
+
+        def failing(*a, **kw):
+            calls.append(a[0])
+            if len(calls) == k:
+                raise OSError(f"injected crash at {name} #{k}")
+            return real(*a, **kw)
+
+        def crashing_swap(self, *a, **kw):
+            with monkeypatch.context() as m:
+                m.setattr(target, name, failing)
+                return swap(self, *a, **kw)
+
+        path = str(tmp_path / f"{name}{k}")
+        shutil.copytree(base, path)
+        with monkeypatch.context() as m:
+            m.setattr(ParquetMergeSink, "_swap_staged", crashing_swap)
+            with pytest.raises(OSError, match="injected crash"):
+                sink(path).write_batch(second, 1)
+        # checkpoint re-delivery of the same epoch on a fresh sink
+        sink(path).write_batch(second, 1)
+        assert table(path) == expected, (name, k)
+        assert not [e for e in os.listdir(path) if e.endswith(".aside")]

@@ -1446,3 +1446,279 @@ def test_pg_timetz_positional_parse_parity(spark):
         texp.append((int(hh) * 3600 + int(mm) * 60 + ss) * 1_000_000
                     + frac)
     assert tgot == texp
+
+
+# ---------------------------------------------------------------------------
+# Micro-batch decode shape: one control-plane collect + one data kernel
+# ---------------------------------------------------------------------------
+def _ref_cells(side, cells, names):
+    """One side of a reference envelope, named positionally."""
+    out = {side: None, f"{side}_nulls": None}
+    if side == "after":
+        out["after_toasted"] = None
+    if cells is None:
+        return out
+    named = list(zip(names, cells))
+    out[side] = {n: v for n, (k, v) in named if k == "t"}
+    out[f"{side}_nulls"] = [n for n, (k, _) in named if k == "n"]
+    if side == "after":
+        out["after_toasted"] = [n for n, (k, _) in named if k == "u"]
+    return out
+
+
+def _ref_fold(msgs):
+    """Row-by-row reference decoder: walks the messages in LSN order the
+    way PgOutputMessageDecoder does, holding the relation cache, the open
+    BEGIN and the stream segment in memory and parsing every message with
+    ``parse_message``. Returns the data envelopes in emission order (a
+    streamed tx emits at its Stream Commit)."""
+    rels, tx, seg, pending, out = {}, None, None, {}, []
+    for lsn, raw in sorted(msgs, key=lambda t: t[0]):
+        m = parse_message(raw, in_stream=seg is not None)
+        k = m["kind"]
+        if k == "relation":
+            rels[m["relation_id"]] = m
+        elif k == "begin":
+            tx = (m["xid"], m["commit_ts_us"])
+        elif k == "commit":
+            tx = None
+        elif k == "stream_start":
+            seg = m["xid"]
+        elif k == "stream_stop":
+            seg = None
+        elif k == "stream_commit":
+            out += [
+                dict(r, xid=m["xid"], commit_ts_us=m["commit_ts_us"])
+                for r in pending.pop(m["xid"], [])
+            ]
+        elif k == "stream_abort":
+            assert m["subtransaction_xid"] == m["xid"]
+            pending.pop(m["xid"], None)
+        elif k in ("insert", "update", "delete"):
+            rel = rels[m["relation_id"]]
+            names = [c["name"] for c in rel["columns"]]
+            row = {
+                "lsn": lsn,
+                "op": {"insert": "c", "update": "u", "delete": "d"}[k],
+                "schema": rel["schema"],
+                "table": rel["table"],
+                "before_kind": m.get("before_kind"),
+                **_ref_cells("before", m.get("before"), names),
+                **_ref_cells("after", m.get("after"), names),
+            }
+            if "stream_xid" in m:
+                pending.setdefault(m["stream_xid"], []).append(row)
+            else:
+                out.append(dict(
+                    row,
+                    xid=tx[0] if tx else None,
+                    commit_ts_us=tx[1] if tx else None,
+                ))
+    return out
+
+
+def _rows_by_lsn(rows):
+    return sorted((r.asDict() for r in rows), key=lambda d: d["lsn"])
+
+
+def _frame(spark, rows):
+    return spark.createDataFrame(
+        [(lsn, bytearray(m)) for lsn, m in rows], "lsn long, msg binary"
+    )
+
+
+def test_micro_batch_decode_matches_row_fold(spark):
+    """Both decode APIs agree with the row-by-row reference fold on a
+    batch of several transactions over two relations, with a RELATION
+    re-sent mid-batch with an added column (rows on each side of its LSN
+    get their own names) and a data row outside every BEGIN interval
+    (NULL xid)."""
+    from debezium_spark.sources.pgoutput import (
+        PgOutputStreamDecoder,
+        relation_registry,
+    )
+
+    v1 = [(1, "id", 20, -1), (0, "v", 25, -1)]
+    v2 = v1 + [(0, "w", 23, -1)]
+    msgs = [
+        (0, encode_relation(9, "public", "t", v1)),
+        (1, encode_begin(3, 1_000_000, 100)),
+        (2, encode_insert(9, [("t", "1"), ("t", "a")])),
+        (3, encode_commit(3, 3, 1_000_000)),
+        (4, encode_insert(9, [("t", "2"), ("n", None)])),  # no BEGIN
+        (5, encode_begin(9, 2_000_000, 101)),
+        (6, encode_update(9, [("t", "1"), ("u", None)],
+                          before=[("t", "1"), ("n", None)])),
+        (7, encode_relation(9, "public", "t", v2)),
+        (8, encode_insert(9, [("t", "3"), ("n", None), ("t", "7")])),
+        (9, encode_commit(9, 9, 2_000_000)),
+        (10, encode_relation(10, "app", "u", [(1, "k", 25, -1)])),
+        (11, encode_begin(14, 3_000_000, 102)),
+        (12, encode_delete(9, [("t", "3"), ("n", None), ("n", None)])),
+        (13, encode_insert(10, [("t", "x")])),
+        (14, encode_commit(14, 14, 3_000_000)),
+    ]
+    want = sorted(_ref_fold(msgs), key=lambda d: d["lsn"])
+    assert [r["xid"] for r in want] == [100, None, 101, 101, 102, 102]
+    df = _frame(spark, msgs)
+    assert _rows_by_lsn(decode_pgoutput_binary(spark, df).collect()) == want
+    reg = relation_registry(spark, df)
+    assert _rows_by_lsn(
+        decode_pgoutput_binary(spark, df, registry=reg).collect()
+    ) == want
+    dec = PgOutputStreamDecoder(spark)
+    assert _rows_by_lsn(dec.decode_batch(df).collect()) == want
+
+
+def test_overlapping_begin_intervals_raise(spark):
+    """v1 transactions are serialized onto the stream, so two BEGIN
+    intervals that overlap are corrupt input: the control-plane fold
+    raises instead of stamping a row with two transactions."""
+    msgs = [
+        (0, encode_relation(9, "public", "t", [(1, "id", 20, -1)])),
+        (1, encode_begin(5, 1_000_000, 100)),
+        (2, encode_insert(9, [("t", "1")])),
+        (3, encode_begin(6, 2_000_000, 101)),  # inside tx 100's interval
+        (4, encode_insert(9, [("t", "2")])),
+        (6, encode_commit(6, 6, 2_000_000)),
+    ]
+    with pytest.raises(ValueError, match="overlap"):
+        decode_pgoutput_binary(spark, _frame(spark, msgs))
+
+
+def test_stream_decoder_v2_matches_row_fold_across_batches(spark):
+    """Protocol v2 across micro-batches against the reference fold: an
+    uncommitted streamed xid is withheld while its segment is open, then
+    emitted exactly once in the batch whose Stream Commit arrives; a v1
+    tx in the same batches decodes alongside; a later subtransaction
+    abort raises."""
+    from debezium_spark.sources.pgoutput import (
+        PgOutputStreamDecoder,
+        encode_stream_abort,
+        encode_stream_commit,
+        encode_stream_start,
+        encode_stream_stop,
+        with_stream_xid,
+    )
+
+    batches = [
+        [
+            (0, encode_relation(9, "public", "t", [(1, "id", 20, -1),
+                                                   (0, "v", 25, -1)])),
+            (1, encode_begin(3, 1_000_000, 70)),
+            (2, encode_insert(9, [("t", "1"), ("t", "a")])),
+            (3, encode_commit(3, 3, 1_000_000)),
+            (4, encode_stream_start(60)),
+            (5, with_stream_xid(encode_insert(9, [("t", "2"), ("n", None)]),
+                                60)),
+            # segment left OPEN at the batch boundary
+        ],
+        [
+            (6, with_stream_xid(encode_delete(9, [("t", "1"), ("n", None)]),
+                                60)),
+            (7, encode_stream_stop()),
+            (8, encode_begin(10, 2_000_000, 71)),
+            (9, encode_insert(9, [("t", "3"), ("u", None)])),
+            (10, encode_commit(10, 10, 2_000_000)),
+            (11, encode_stream_commit(60, 11, 11, 5_000_000)),
+        ],
+    ]
+    dec = PgOutputStreamDecoder(spark)
+    seen: list = []
+    emitted = 0
+    for batch in batches:
+        seen += batch
+        ref = _ref_fold(seen)
+        want = sorted(ref[emitted:], key=lambda d: d["lsn"])
+        emitted = len(ref)
+        assert _rows_by_lsn(dec.decode_batch(_frame(spark, batch)).collect()) \
+            == want
+    assert emitted == 4 and dec._pending is None
+    with pytest.raises(ValueError, match="subtransaction"):
+        dec.decode_batch(_frame(spark, [
+            (12, encode_stream_start(61)),
+            (13, with_stream_xid(encode_insert(9, [("t", "4"), ("n", None)]),
+                                 61)),
+            (14, encode_stream_stop()),
+            (15, encode_stream_abort(61, 62)),
+        ]))
+
+
+def test_stream_decoder_job_budget(spark, tmp_path):
+    """A v1 micro-batch decodes with ONE Spark job of its own (the
+    control-plane collect); the data kernel runs inside the consumer's
+    action. A v2 batch that leaves a segment open adds exactly one job:
+    the pending buffer's checkpoint."""
+    from debezium_spark.sources.pgoutput import (
+        PgOutputStreamDecoder,
+        encode_stream_start,
+        with_stream_xid,
+    )
+
+    rel = (0, encode_relation(9, "public", "t", [(1, "id", 20, -1)]))
+    v1 = [
+        rel,
+        (1, encode_begin(3, 1_000_000, 70)),
+        (2, encode_insert(9, [("t", "1")])),
+        (3, encode_commit(3, 3, 1_000_000)),
+    ]
+    v2_open = [
+        (4, encode_stream_start(60)),
+        (5, with_stream_xid(encode_insert(9, [("t", "2")]), 60)),
+    ]
+    dec = PgOutputStreamDecoder(spark)
+    sc = spark.sparkContext
+    jobs = []
+    for i, rows in enumerate((v1, v2_open)):
+        path = str(tmp_path / f"b{i}")
+        _frame(spark, rows).coalesce(1).write.parquet(path)
+        batch = spark.read.parquet(path)  # a file-backed micro-batch
+        group = f"pgoutput-job-budget-{i}"
+        sc.setJobGroup(group, "job budget")
+        try:
+            out = dec.decode_batch(batch).toArrow()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert out.num_rows == (1 if i == 0 else 0)
+    assert jobs == [2, 3]
+
+
+def test_truncated_data_message_raises_row_path_error():
+    """The vectorized kernel bounds every read by its own message: a
+    truncated data message declines to the row path, which raises the
+    exact error ``parse_message`` gives — even when a well-formed
+    neighbour's bytes follow it in the Arrow buffer."""
+    import re
+
+    import pyarrow as pa
+
+    from debezium_spark.sources.pgoutput import _frame_batch
+
+    good = encode_insert(5, [("t", "abc")])
+    for bad in (good[:-2], good[:12]):  # value cut short; length cut
+        with pytest.raises(Exception) as want:
+            parse_message(bad)
+        with pytest.raises(type(want.value), match=re.escape(str(want.value))):
+            _frame_batch(
+                pa.array([0, 1], type=pa.int64()),
+                pa.array([bad, good], type=pa.binary()),
+            )
+
+
+def test_vectorized_kernel_bug_surfaces(monkeypatch):
+    """Only the kernel's declared decline reasons reroute to the row
+    path; any other exception is a bug and surfaces."""
+    import pyarrow as pa
+
+    from debezium_spark.sources import pgoutput
+
+    def broken(lsn_arr, msg_arr):
+        raise TypeError("kernel bug")
+
+    monkeypatch.setattr(pgoutput, "_decode_data_vectorized", broken)
+    with pytest.raises(TypeError, match="kernel bug"):
+        pgoutput._frame_batch(
+            pa.array([0], type=pa.int64()),
+            pa.array([encode_insert(5, [("t", "1")])], type=pa.binary()),
+        )

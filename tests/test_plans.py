@@ -515,21 +515,20 @@ def test_composite_chunks_no_global_window(spark, qs):
     assert "SinglePartition" not in plan
 
 
-def test_pgoutput_tx_attach_is_hash_join_not_nested_loop(spark):
-    """s18's two attach joins (relation registry by lsn validity, tx
-    metadata by BEGIN interval) must both plan as BroadcastHashJoin on
-    the bucket/relation keys with the range as residual — a
-    BroadcastNestedLoopJoin here costs O(txs-per-batch x data rows) and
-    is the shape this operator exists to avoid."""
+def test_pgoutput_decode_is_one_kernel_without_joins(spark):
+    """s18 names and stamps its rows inside ONE MapInArrow kernel over the
+    I/U/D messages (relation versions and BEGIN intervals held
+    driver-side), so the plan has no join of any kind — in particular no
+    BroadcastNestedLoopJoin, whose O(txs-per-batch x data rows) cost is
+    the shape this operator exists to avoid."""
     from debezium_spark.suite import load_all
 
     q = load_all()["s18_pgoutput_binary_decode"]
     plan = (
         q.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
     )
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert plan.count("MapInArrow") == 1
 
 
 def test_binary_quant_broadcasts_queries_and_plans_literal_thresholds(
