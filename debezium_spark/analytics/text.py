@@ -2,14 +2,15 @@
 
 Design rules (these survive a 1000-executor / 100 TB scale-up):
 
-* Everything per-document is a narrow projection over native expressions —
-  no Python UDFs, no explode unless the algorithm is inherently set-based.
-* MinHash signatures are computed with array-lambda expressions (one row per
-  document, K min-reductions over the shingle array) instead of
+* Everything per-document is a narrow projection — native expressions or
+  an Arrow-batched kernel, never a row-at-a-time Python UDF — with no
+  explode unless the algorithm is inherently set-based.
+* MinHash signatures are one ``mapInArrow`` over the input's own partitions
+  (one row per document, numpy over whole Arrow batches) instead of
   explode+groupBy — zero shuffles for signature computation.
 * Near-dup candidate generation joins only within LSH band buckets
-  (banding → band-key equi-join), never all-pairs. The only shuffles in the
-  whole dedup pipeline are the band-key join and the final distinct.
+  (banding → band-key equi-join), never all-pairs, and exact Jaccard is
+  computed for candidate pairs only.
 * Hashes are md5-derived 60-bit ints so the DuckDB oracle can reproduce them
   exactly (Spark's `hash` is murmur3, DuckDB's is wyhash — not portable).
 """
@@ -44,9 +45,19 @@ def ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
     CPU-heavy per-row stage (hashing, UDFs) on a single core. The shuffle
     this inserts is O(input) — worth it exactly when per-row compute
     dominates; at real scale inputs already arrive well-partitioned and
-    this is a no-op. For Pandas-UDF stages pass a smaller ``target``
-    (Python worker startup is ~100ms each; measured optimum here is ~8 for
-    small inputs, while JVM codegen stages want all cores).
+    this is a no-op.
+
+    Python-worker stages (``mapInArrow``/``mapInPandas``/pandas UDFs) pay
+    a fixed toll per TASK, however few rows it holds: PySpark's worker
+    calls ``importlib.invalidate_caches()`` once per task
+    (``pyspark/worker_util.py``), which on Python 3.11 re-reads the
+    1328-entry directory of ``pyspark.zip`` once per cached zipimporter
+    (~0.1 CPU-s per call, measured in a bare interpreter with 14 cached),
+    plus the JVM side's per-task set-up. On a 4-core host an identity
+    ``mapInArrow`` over 16k rows cost 4.0-4.4 CPU-s as 16 tasks against
+    0.75-1.2 as one task: about 0.2 CPU-s per extra task. So a Python
+    stage over a small input should run on the input's own partitions
+    rather than be spread out here.
     """
     sc = df.sparkSession.sparkContext
     if target is None:
@@ -231,117 +242,83 @@ MINHASH_B = (
 )
 
 
+def _minhash_columns(
+    norm: list, num_hashes: int, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """MinHash of a batch of normalized texts: ``(sig, null)`` with ``sig``
+    an ``int64[num_hashes, n]`` and ``null`` flagging NULL texts.
+
+    The whole batch is one code-point array (one join + one UTF-32
+    encode); every document's window starts are gathered at once, their
+    polynomial base hashes summed column by column, and each affine map's
+    per-document min taken by ``np.minimum.reduceat`` over the window
+    segments. The min over the shingle multiset equals the min over the
+    distinct set, so no per-document ``unique`` is needed. A document
+    shorter than ``k`` has no window and keeps the ``P`` sentinel in every
+    slot, as the DuckDB oracle's single padded window does."""
+    P = MINHASH_PRIME
+    n = len(norm)
+    null = np.fromiter((t is None for t in norm), bool, n)
+    texts = [t or "" for t in norm]
+    lens = np.fromiter(map(len, texts), np.int64, n)
+    codes = np.frombuffer(
+        "".join(texts).encode("utf-32-le"), dtype=np.uint32
+    ).astype(np.int64)
+    nwin = np.maximum(lens - (k - 1), 0)
+    sig = np.full((num_hashes, n), P, dtype=np.int64)
+    total = int(nwin.sum())
+    if total:
+        seg = np.cumsum(nwin) - nwin  # each doc's first window slot
+        doc_start = np.cumsum(lens) - lens
+        pos = np.arange(total) + np.repeat(doc_start - seg, nwin)
+        base = sum(
+            codes[pos + i] * pow(SHINGLE_POLY_BASE, k - 1 - i, P)
+            for i in range(k)
+        ) % P
+        has = nwin > 0
+        starts = seg[has]
+        for j in range(num_hashes):
+            h = (MINHASH_A[j] * base + MINHASH_B[j]) % P
+            sig[j, has] = np.minimum.reduceat(h, starts)
+    return sig, null
+
+
 def minhash_signature(
     df: DataFrame, text_col: str = "text", num_hashes: int = 8, k: int = 5
 ) -> DataFrame:
-    """K MinHash values per document over character k-shingles.
+    """K MinHash values per document over character k-shingles, appended
+    as columns ``mh0..mh{K-1}``.
 
-    One row per document, no shuffle, Arrow-batched: normalization stays
-    JVM-side (codegen regexp), then a vectorized numpy pandas_udf does the
-    integer hot loop — sliding-window polynomial base hashes (one int64
-    matmul), distinct, K affine maps, per-hash min. Bit-identical to the
-    pure-expression variant (:func:`minhash_signature_expr`) and measured
-    ~3x faster at sf0.1 (0.48s vs 1.38s for 5k docs): Catalyst evaluates
-    higher-order lambdas interpreted per element, while numpy runs the
-    same arithmetic as C loops over Arrow batches. Per-doc cost dominates
-    at scale, so the gap widens with corpus size.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
+    One row per document, no shuffle: normalization stays JVM-side
+    (codegen regexp), then ONE ``mapInArrow`` over the input's own
+    partitions runs the integer arithmetic in numpy over whole Arrow
+    batches (:func:`_minhash_columns`). No repartition: every Python
+    task pays a fixed start-up toll (see :func:`ensure_parallelism`) that
+    dwarfs the per-document work here, so a small input is one task.
+    A NULL text gives NULL signatures."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     assert num_hashes <= len(MINHASH_A)
-    P = MINHASH_PRIME
-    pows = np.array(
-        [pow(SHINGLE_POLY_BASE, k - 1 - i, P) for i in range(k)], dtype=np.int64
+    schema = T.StructType(
+        df.schema.fields
+        + [T.StructField(f"mh{j}", T.LongType()) for j in range(num_hashes)]
     )
-    A = np.array(MINHASH_A[:num_hashes], dtype=np.int64)
-    B = np.array(MINHASH_B[:num_hashes], dtype=np.int64)
 
-    def sig_of(s):
-        if s is None:
-            return None
-        codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(
-            np.int64
-        )
-        if len(codes) < k:
-            # Mirrors the expression variant: a short doc's single padded
-            # window nulls out and every min stays at the P sentinel.
-            return [P] * num_hashes
-        wins = np.lib.stride_tricks.sliding_window_view(codes, k)
-        bases = np.unique((wins @ pows) % P)
-        h = (A[:, None] * bases[None, :] + B[:, None]) % P
-        return h.min(axis=1).tolist()
-
-    @pandas_udf(ArrayType(LongType()))
-    def mh(texts: pd.Series) -> pd.Series:
-        return texts.map(sig_of)
-
-    # Measured at sf0.1 on local[32]: 8 partitions 1.19s, 16 → 1.01s,
-    # 32 → 1.43s (Python worker startup outweighs extra cores) — 16 is the
-    # knee for Arrow-batched UDF stages on small inputs.
-    df = ensure_parallelism(df, target=16)
-    out = df.withColumn("__sig", mh(normalize_text(F.col(text_col))))
-    return out.select(
-        "*",
-        *[F.col("__sig")[j].alias(f"mh{j}") for j in range(num_hashes)],
-    ).drop("__sig")
-
-
-def minhash_signature_expr(
-    df: DataFrame, text_col: str = "text", num_hashes: int = 8, k: int = 5
-) -> DataFrame:
-    """Pure-Catalyst MinHash (no Python workers) — same bits as
-    :func:`minhash_signature`.
-
-    Kept as the zero-dependency fallback and as documentation of the
-    expression shape: char codes extracted once per document, K affine
-    maps per distinct base, all minima taken inside a single aggregate
-    fold so nothing is re-evaluated by project collapse. Prefer the numpy
-    path in hot pipelines (measured ~3x faster; see above).
-    """
-    assert num_hashes <= len(MINHASH_A)
-    df = ensure_parallelism(df)
-    P = MINHASH_PRIME
-    pows = [SHINGLE_POLY_BASE ** (k - 1 - i) % P for i in range(k)]
-
-    norm = normalize_text(F.col(text_col))
-    n = F.greatest(F.lit(1), F.length(norm) - F.lit(k - 1))
-    # split-to-chars so the lambda only touches its own variable — the
-    # sequence+substr form re-ran the normalize chain per CHARACTER
-    codes = F.transform(
-        F.split(norm, ""), lambda c: F.ascii(c).cast("long")
-    )
-    out = df.withColumn("__c", codes)
-    bases = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda p: sum(
-                F.element_at(F.col("__c"), p + i) * F.lit(pows[i])
-                for i in range(k)
-            ) % P,
-        )
-    )
-    consts = F.array(
-        *[
-            F.struct(
-                F.lit(MINHASH_A[j]).alias("a"), F.lit(MINHASH_B[j]).alias("b")
+    def run(batches):
+        for batch in batches:
+            sig, null = _minhash_columns(
+                batch.column(batch.num_columns - 1).to_pylist(), num_hashes, k
             )
-            for j in range(num_hashes)
-        ]
-    )
-    hash_all = lambda base: F.transform(  # noqa: E731
-        consts, lambda t: (t["a"] * base + t["b"]) % P
-    )
-    sig = F.aggregate(
-        bases,
-        F.array_repeat(F.lit(P).cast("long"), num_hashes),
-        lambda acc, b: F.zip_with(acc, hash_all(b), lambda x, y: F.least(x, y)),
-    )
-    out = out.withColumn("__sig", sig).drop("__c")
-    return out.select(
-        "*",
-        *[F.col("__sig")[j].alias(f"mh{j}") for j in range(num_hashes)],
-    ).drop("__sig")
+            yield pa.RecordBatch.from_arrays(
+                batch.columns[:-1]
+                + [pa.array(s, mask=null) for s in sig],
+                names=schema.fieldNames(),
+            )
+
+    return df.select(
+        "*", normalize_text(F.col(text_col)).alias("__norm")
+    ).mapInArrow(run, schema)
 
 
 def lsh_candidate_pairs(
@@ -392,7 +369,9 @@ def lsh_candidate_pairs(
     if impl != "expr":
         raise ValueError(f"unknown impl {impl!r} (want 'arrow' or 'expr')")
     num_bands = num_hashes // rows_per_band
-    sig = minhash_signature(df, text_col, num_hashes, k)
+    sig = minhash_signature(
+        df.select(id_col, text_col), text_col, num_hashes, k
+    )
     # Numeric band keys when they fit: rows_per_band ≤ 2 hashes pack into
     # one BIGINT (injective: each hash < P < 2^30), so the shuffle key is
     # 8 bytes of codegen arithmetic. Wider bands fall back to an md5 of the
@@ -508,7 +487,9 @@ def _lsh_candidate_pairs_arrow(
             impl="expr",
         )
     num_bands = num_hashes // rows_per_band
-    sig = minhash_signature(df, text_col, num_hashes, k)
+    sig = minhash_signature(
+        df.select(id_col, text_col), text_col, num_hashes, k
+    )
 
     def bkey_of(b: int) -> Column:
         cols = [
@@ -605,6 +586,38 @@ def _lsh_candidate_pairs_arrow(
     return parted.mapInPandas(emit, schema="a long, b long")
 
 
+def _shingle_jaccard(ta: list, tb: list, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Exact character k-shingle-set Jaccard of aligned normalized-text
+    pairs: ``(values, null)``; a pair with a NULL text is NULL.
+
+    Shingles are code-point windows, the DuckDB oracle's ``substr`` form;
+    a text shorter than ``k`` (``""`` included) is its own single shingle.
+    Each distinct text's set is built once per batch, since a document
+    sits in many candidate pairs."""
+    sets: dict[str, frozenset] = {}
+
+    def sset(t: str) -> frozenset:
+        s = sets.get(t)
+        if s is None:
+            s = sets[t] = frozenset(
+                [t[i:i + k] for i in range(len(t) - k + 1)] if len(t) >= k
+                else [t]
+            )
+        return s
+
+    n = len(ta)
+    out = np.zeros(n, dtype=np.float64)
+    null = np.zeros(n, dtype=bool)
+    for i, (x, y) in enumerate(zip(ta, tb)):
+        if x is None or y is None:
+            null[i] = True
+            continue
+        a, b = sset(x), sset(y)
+        inter = len(a & b)
+        out[i] = inter / (len(a) + len(b) - inter)
+    return out, null
+
+
 def near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -617,28 +630,49 @@ def near_dup_pairs(
 ) -> DataFrame:
     """LSH candidates verified by true shingle-set Jaccard ≥ threshold.
 
-    Verification joins the (small) candidate pair list back to the documents
-    — broadcast when it fits — and compares distinct-shingle arrays with
-    native set functions; no Python in the loop.
+    Verification touches candidate pairs only: the pair list joins
+    ``(id, normalize_text(text))`` on each side (broadcast when it fits),
+    and ONE ``mapInArrow`` computes each pair's exact Jaccard
+    (:func:`_shingle_jaccard`). Rounding to 4 places and the threshold
+    filter stay JVM-side.
     """
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
     cands = lsh_candidate_pairs(
         df, text_col, id_col,
         num_hashes=num_hashes, rows_per_band=rows_per_band, k=k,
     )
-    sets_df = df.select(
-        F.col(id_col), F.array_distinct(shingles(F.col(text_col), k)).alias("sset")
-    )
-    a = sets_df.alias("sa")
-    b = sets_df.alias("sb")
+
+    def side(c: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"__{c}"),
+            normalize_text(F.col(text_col)).alias(f"__t{c}"),
+        )
+
     joined = (
-        cands.join(a, cands["a"] == F.col(f"sa.{id_col}"))
-        .join(b, cands["b"] == F.col(f"sb.{id_col}"))
+        cands.join(side("a"), F.col("a") == F.col("__a"))
+        .join(side("b"), F.col("b") == F.col("__b"))
+        .select("a", "b", "__ta", "__tb")
     )
-    inter = F.size(F.array_intersect(F.col("sa.sset"), F.col("sb.sset")))
-    union = F.size(F.array_union(F.col("sa.sset"), F.col("sb.sset")))
-    jac = F.round(inter.cast("double") / union.cast("double"), 4)
+    schema = T.StructType(
+        [cands.schema["a"], cands.schema["b"],
+         T.StructField("__j", T.DoubleType())]
+    )
+
+    def run(batches):
+        for batch in batches:
+            jac, null = _shingle_jaccard(
+                batch.column(2).to_pylist(), batch.column(3).to_pylist(), k
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), batch.column(1), pa.array(jac, mask=null)],
+                names=["a", "b", "__j"],
+            )
+
     return (
-        joined.select("a", "b", jac.alias("jaccard"))
+        joined.mapInArrow(run, schema)
+        .select("a", "b", F.round("__j", 4).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 

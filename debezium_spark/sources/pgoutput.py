@@ -923,7 +923,13 @@ class _ControlPlane:
     * ``started``: streamed xids named by a Stream Start.
     """
 
-    def __init__(self, ctl, open_at_start: bool = False, flagged: bool = False):
+    def __init__(
+        self,
+        ctl,
+        open_at_start: bool = False,
+        flagged: bool = False,
+        carried_begin: tuple | None = None,
+    ):
         import numpy as np
 
         ctl = sorted(ctl, key=lambda t: t[0])
@@ -938,7 +944,9 @@ class _ControlPlane:
         self.commits: dict[int, int] = {}
         self.resolved: set[int] = set()
         self.started: set[int] = set()
-        begins = []
+        # the previous batch's last BEGIN: its transaction's rows may
+        # continue here (a replayed batch re-reads the same BEGIN, kept once)
+        begins = [carried_begin] if carried_begin is not None else []
         for lsn, m, flag in ctl:
             code = m[:1]
             if code == b"R":
@@ -951,10 +959,9 @@ class _ControlPlane:
             elif code == b"B":
                 p = parse_message(m)
                 # an interval ending before it starts can match no row
-                if p["final_lsn"] >= lsn:
-                    begins.append(
-                        (lsn, p["final_lsn"], p["xid"], p["commit_ts_us"])
-                    )
+                b = (lsn, p["final_lsn"], p["xid"], p["commit_ts_us"])
+                if p["final_lsn"] >= lsn and b != carried_begin:
+                    begins.append(b)
             elif code == b"S":
                 self.started.add(parse_message(m)["xid"])
             elif code == b"c":
@@ -992,6 +999,7 @@ def _control_plane(
     lsn_col: str,
     in_stream_col: str | None = None,
     open_at_start: bool = False,
+    carried_begin: tuple | None = None,
 ) -> _ControlPlane:
     """ONE prefix-filtered collect of the frame's control messages, folded
     driver-side. Control messages are bounded by tables × schema changes
@@ -1009,6 +1017,7 @@ def _control_plane(
         ],
         open_at_start=open_at_start,
         flagged=in_stream_col is not None,
+        carried_begin=carried_begin,
     )
 
 
@@ -1386,8 +1395,10 @@ class PgOutputStreamDecoder:
     Each batch costs ONE Spark job of its own: the control-plane collect
     (``_ControlPlane``); the data kernel runs inside the consumer's
     action. The persisted state is (a) the parsed 'R' list — bounded by
-    tables × schema changes, the same budget as schema history — plus,
-    for protocol-v2 streamed transactions, (b) whether a stream segment
+    tables × schema changes, the same budget as schema history — and the
+    last BEGIN interval seen, which stamps a v1 transaction's rows that
+    continue into the next micro-batch; plus, for protocol-v2 streamed
+    transactions, (b) whether a stream segment
     was left open at the batch boundary and (c) the raw in-segment rows
     of still-uncommitted txs (bounded by open streamed-tx size — the same
     buffer the server itself holds before v2 existed), localCheckpointed
@@ -1405,6 +1416,7 @@ class PgOutputStreamDecoder:
         self.spark = spark
         self._relations: list[tuple[int, dict]] = list(bootstrap or [])
         self._open_segment = False
+        self._last_begin: tuple | None = None
         self._pending: DataFrame | None = None
         self._pending_xids: set[int] = set()
 
@@ -1416,9 +1428,12 @@ class PgOutputStreamDecoder:
         self, batch_df: DataFrame, msg_col: str = "msg", lsn_col: str = "lsn"
     ) -> DataFrame:
         ctl = _control_plane(
-            batch_df, msg_col, lsn_col, open_at_start=self._open_segment
+            batch_df, msg_col, lsn_col, open_at_start=self._open_segment,
+            carried_begin=self._last_begin,
         )
         self._open_segment = ctl.open_at_end
+        if len(ctl.begins):
+            self._last_begin = tuple(int(v) for v in ctl.begins[-1])
         self._relations.extend(ctl.relations)
         versions = _version_rows(_registry_rows(self._relations))
         if not ctl.segments and self._pending is None:

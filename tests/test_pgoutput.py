@@ -1684,6 +1684,49 @@ def test_stream_decoder_job_budget(spark, tmp_path):
     assert jobs == [2, 3]
 
 
+def test_stream_decoder_v1_tx_across_micro_batches(spark, tmp_path):
+    """A v1 transaction whose BEGIN lands in one micro-batch and whose rows
+    continue into the next stamps every row with its xid and commit ts
+    (the decoder carries the last BEGIN interval across batches), at the
+    same one-job-per-batch budget."""
+    from debezium_spark.sources.pgoutput import PgOutputStreamDecoder
+
+    batches = [
+        [
+            (0, encode_relation(9, "public", "t", [(1, "id", 20, -1)])),
+            (1, encode_begin(4, 1_000_000, 70)),
+            (2, encode_insert(9, [("t", "1")])),
+        ],
+        [
+            (3, encode_insert(9, [("t", "2")])),
+            (4, encode_commit(4, 4, 1_000_000)),
+            (5, encode_insert(9, [("t", "3")])),  # after the commit: no tx
+        ],
+    ]
+    dec = PgOutputStreamDecoder(spark)
+    sc = spark.sparkContext
+    jobs, rows = [], []
+    for i, msgs in enumerate(batches):
+        path = str(tmp_path / f"b{i}")
+        _frame(spark, msgs).coalesce(1).write.parquet(path)
+        batch = spark.read.parquet(path)  # a file-backed micro-batch
+        group = f"pgoutput-v1-carry-{i}"
+        sc.setJobGroup(group, "v1 carry")
+        try:
+            out = dec.decode_batch(batch).toArrow()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        rows += out.select(["lsn", "xid", "commit_ts_us"]).to_pylist()
+    assert jobs == [2, 2]
+    assert sorted((r["lsn"], r["xid"], r["commit_ts_us"]) for r in rows) == [
+        (2, 70, 1_000_000), (3, 70, 1_000_000), (5, None, None),
+    ]
+    # replaying the second batch keeps the carried BEGIN once (no overlap)
+    again = dec.decode_batch(_frame(spark, batches[1])).collect()
+    assert sorted((r["lsn"], r["xid"]) for r in again) == [(3, 70), (5, None)]
+
+
 def test_truncated_data_message_raises_row_path_error():
     """The vectorized kernel bounds every read by its own message: a
     truncated data message declines to the row path, which raises the

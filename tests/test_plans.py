@@ -101,20 +101,135 @@ def test_merge_has_no_full_table_shuffle_on_probe_side(spark, qs):
     assert plan.count("BroadcastHashJoin") >= 1
 
 
-def test_minhash_numpy_matches_expression_variant(spark, sf_dir):
-    """The Arrow/numpy MinHash fast path is bit-identical to the
-    pure-Catalyst expression variant (same arithmetic, same sentinel for
-    short docs)."""
+def _minhash_signature_expr(df, text_col="text", num_hashes=8, k=5):
+    """Pure-Catalyst MinHash: the parity reference for the numpy kernel.
+
+    Char codes extracted once per document, K affine maps per distinct
+    base, all minima taken inside a single aggregate fold so nothing is
+    re-evaluated by project collapse."""
     from debezium_spark.analytics.text import (
-        minhash_signature,
-        minhash_signature_expr,
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_PRIME,
+        SHINGLE_POLY_BASE,
+        normalize_text,
     )
+
+    P = MINHASH_PRIME
+    pows = [SHINGLE_POLY_BASE ** (k - 1 - i) % P for i in range(k)]
+    norm = normalize_text(F.col(text_col))
+    n = F.greatest(F.lit(1), F.length(norm) - F.lit(k - 1))
+    # split-to-chars so the lambda only touches its own variable
+    codes = F.transform(F.split(norm, ""), lambda c: F.ascii(c).cast("long"))
+    out = df.withColumn("__c", codes)
+    bases = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), n),
+            lambda p: sum(
+                F.element_at(F.col("__c"), p + i) * F.lit(pows[i])
+                for i in range(k)
+            ) % P,
+        )
+    )
+    consts = F.array(
+        *[
+            F.struct(
+                F.lit(MINHASH_A[j]).alias("a"), F.lit(MINHASH_B[j]).alias("b")
+            )
+            for j in range(num_hashes)
+        ]
+    )
+
+    def hash_all(base):
+        return F.transform(consts, lambda t: (t["a"] * base + t["b"]) % P)
+
+    sig = F.aggregate(
+        bases,
+        F.array_repeat(F.lit(P).cast("long"), num_hashes),
+        lambda acc, b: F.zip_with(acc, hash_all(b), lambda x, y: F.least(x, y)),
+    )
+    out = out.withColumn("__sig", sig).drop("__c")
+    return out.select(
+        "*", *[F.col("__sig")[j].alias(f"mh{j}") for j in range(num_hashes)]
+    ).drop("__sig")
+
+
+def test_minhash_numpy_matches_expression_variant(spark, sf_dir):
+    """The Arrow/numpy MinHash kernel is bit-identical to the pure-Catalyst
+    expression form (same arithmetic, same sentinel for short docs)."""
+    from debezium_spark.analytics.text import minhash_signature
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cols = ["doc_id"] + [f"mh{j}" for j in range(8)]
     a = minhash_signature(docs).select(*cols)
-    b = minhash_signature_expr(docs).select(*cols)
+    b = _minhash_signature_expr(docs).select(*cols)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_jaccard_kernel_matches_jvm_shingle_sets(spark):
+    """The candidate-pair Jaccard kernel equals the JVM shingle-set
+    verification it replaced (distinct shingle arrays, array_intersect /
+    array_union) on every pair of edge texts: NULL, empty, shorter than k,
+    case and whitespace variants, non-BMP characters, identical texts.
+    Both give NULL for a NULL text; the DuckDB x7 oracle gives 0.0 there,
+    which the threshold filter drops the same way."""
+    from debezium_spark.analytics.text import (
+        _shingle_jaccard,
+        normalize_text,
+        shingles,
+    )
+
+    texts = [
+        None, "", "abc", "ab  C", "  Ab c ",
+        "The quick brown fox", "the   QUICK brown fox ",
+        "smile \U0001F600 here \U0001F600 now",
+        "smile \U0001F600 here \U0001F603 now",
+        "x\U0001F600y\U0001F600z", "x\U0001F600y\U0001F600zz",
+        "same text here", "same text here",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).select(
+        "doc_id",
+        normalize_text(F.col("text")).alias("norm"),
+        F.array_distinct(shingles(F.col("text"), 5)).alias("sset"),
+    )
+    a, b = docs.alias("x"), docs.alias("y")
+    inter = F.size(F.array_intersect(F.col("x.sset"), F.col("y.sset")))
+    union = F.size(F.array_union(F.col("x.sset"), F.col("y.sset")))
+    rows = (
+        a.join(b, F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(
+            F.col("x.norm").alias("ta"), F.col("y.norm").alias("tb"),
+            (inter.cast("double") / union.cast("double")).alias("jvm"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(texts) * (len(texts) - 1) // 2
+    jac, null = _shingle_jaccard(
+        [r["ta"] for r in rows], [r["tb"] for r in rows], 5
+    )
+    got = [None if nl else float(v) for v, nl in zip(jac, null)]
+    assert got == [r["jvm"] for r in rows]
+    assert 1.0 in got and 0.0 in got and None in got
+
+
+def test_near_dup_pairs_runs_no_repartition_or_shingle_arrays(spark, sf_dir):
+    """On a one-partition input the near-dup chain neither round-robins
+    the documents into more Python tasks nor evaluates a per-row Python
+    UDF, and Jaccard is computed without JVM shingle arrays."""
+    from debezium_spark.analytics.text import near_dup_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").coalesce(1)
+    assert docs.rdd.getNumPartitions() == 1
+    plan = (
+        near_dup_pairs(docs, threshold=0.5)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "RoundRobinPartitioning" not in plan
+    assert "ArrowEvalPython" not in plan
+    assert "array_intersect" not in plan
+    assert plan.count("MapInArrow") == 2  # the MinHash and Jaccard kernels
 
 
 def test_simhash_numpy_matches_expression_variant(spark, sf_dir):
