@@ -2364,7 +2364,7 @@ def _poly_window_grams(
                 {"__id": ids, "__p": poss, "__k": keys, "__nsel": nsels}
             )
 
-    src = ensure_parallelism(df.select(id_col, text_col), target=16)
+    src = ensure_parallelism(df.select(id_col, text_col))
     out = src.mapInPandas(kernel, out_schema).localCheckpoint(eager=False)
     grams = out.filter(F.col("__p").isNotNull()).select("__id", "__p", "__k")
     totals = out.filter(F.col("__p").isNull()).select(
@@ -2509,7 +2509,7 @@ def _charlm_doc_counts(base: DataFrame):
                 {"__id": ids, "__bg": bgs, "__ch": chs, "__cnt": cnts}
             )
 
-    src = ensure_parallelism(base, target=16)
+    src = ensure_parallelism(base)
     out = src.mapInPandas(kernel, schema).localCheckpoint(eager=False)
     db = out.filter(F.col("__bg").isNotNull()).select(
         "__id", "__bg", "__cnt"
@@ -2665,9 +2665,6 @@ def dsir_topk(
     the model is ≤ n_buckets rows and BROADCASTS by construction; the
     final top-k is a distributed TakeOrdered (per-partition heads, never
     a global window)."""
-    # Token explode + per-bucket lambda folds off a one-split scan would
-    # run single-core (guide §2.5); spread first, no-op at scale.
-    docs = ensure_parallelism(docs, 16)
     Q = 1_000_000_000
 
     def q(x):
@@ -2760,10 +2757,6 @@ def nb_quality(
     Per-token log-probabilities are fixed-point quantized
     (floor(log2 p * 1e9) as int64, the x38 pattern) so per-doc sums are
     order-independent and engines agree bit-for-bit."""
-    # The seed-label pass folds an interpreted lambda over every token of
-    # every document; a one-split scan serializes it on one core (guide
-    # §2.5 input skew) — spread first, no-op on well-partitioned input.
-    df = ensure_parallelism(df, 16)
     Q = 1_000_000_000.0
     en_stop = LANG_MARKERS[0][1]
     norm = normalize_text(F.col(text_col))

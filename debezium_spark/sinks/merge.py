@@ -102,6 +102,94 @@ def arrow_last_per_key(tbl, n_keys: int):
     return order[winners]
 
 
+class InlineCollector:
+    """The inline micro-batch collect both sinks share.
+
+    ONE job flattens the batch (state already folded to the survivor's
+    side: before-image for deletes, after-image otherwise) and pulls it
+    driver-side as an Arrow table — no Row pickling; state columns never
+    leave Arrow, so a genuine NaN double survives. Last-per-key survivors
+    come from ``arrow_last_per_key``. The select list is built once per
+    batch schema (which also fixes whether ``ts_ns`` exists) and kept on
+    this instance, so a steady stream of same-schema batches builds no
+    Spark expression per batch. ``num_buckets`` adds the COW sink's
+    ``__b`` target-bucket column."""
+
+    def __init__(self, pk_cols: list[str], num_buckets: int | None = None):
+        self.pk_cols = pk_cols
+        self.num_buckets = num_buckets
+        self._selects: dict = {}
+
+    def select_for(self, schema):
+        """``(row_schema, where, select list)`` for a batch of ``schema``,
+        or None when a row field collides with a helper column name."""
+        if schema not in self._selects:
+            self._selects[schema] = self._build(schema)
+        return self._selects[schema]
+
+    def _build(self, schema):
+        import pyspark.sql.types as T
+
+        row_schema = T.StructType(schema["after"].dataType.fields)
+        field_names = [f.name for f in row_schema.fields]
+        reserved = {"__op", "__pos", "__ts", "__deleted"}
+        if self.num_buckets is not None:
+            reserved.add("__b")
+        if reserved & set(field_names) or any(
+            f.startswith("__k_") for f in field_names
+        ):
+            return None
+        keys = [F.col(f"key.{c}") for c in self.pk_cols]
+        ts = F.col("ts_ns") if "ts_ns" in schema.fieldNames() else F.lit(None)
+        bucket = (
+            []
+            if self.num_buckets is None
+            else [F.pmod(F.hash(*keys), F.lit(self.num_buckets)).alias("__b")]
+        )
+        is_delete = F.col("op") == "d"
+        sel = [
+            F.col("op").alias("__op"),
+            F.col("source.pos").alias("__pos"),
+            ts.cast("long").alias("__ts"),
+            *bucket,
+            *[k.alias(f"__k_{i}") for i, k in enumerate(keys)],
+            *[
+                F.when(is_delete, F.col(f"before.{f}"))
+                .otherwise(F.col(f"after.{f}"))
+                .alias(f)
+                for f in field_names
+            ],
+        ]
+        return row_schema, F.col("op").isNotNull(), sel
+
+    def collect(self, env_batch: DataFrame, max_rows: int):
+        """Pull one micro-batch inline: ``(tbl, won, row_schema)`` with the
+        collected rows and their last-per-key survivors, or None to take
+        the distributed plan — an over-``max_rows`` batch (the parquet
+        footers decide without a job when they can), a truncate (the
+        distributed plan owns its semantics), or a name collision."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if max_rows <= 0 or footer_rows_exceed(env_batch, max_rows):
+            return None
+        built = self.select_for(env_batch.schema)
+        if built is None:
+            return None
+        row_schema, where, sel = built
+        tbl = env_batch.filter(where).select(*sel).limit(max_rows + 1).toArrow()
+        if tbl.num_rows > max_rows:
+            return None
+        if tbl.num_rows and pc.any(
+            pc.equal(tbl.column("__op"), OP_TRUNCATE)
+        ).as_py():
+            return None
+        if tbl.num_rows == 0:
+            return tbl, tbl, row_schema
+        take_idx = arrow_last_per_key(tbl, len(self.pk_cols))
+        return tbl, tbl.take(pa.array(take_idx, type=pa.int64())), row_schema
+
+
 def merge_changes(
     target_df: DataFrame,
     env_df: DataFrame,
@@ -236,6 +324,7 @@ class ParquetMergeSink:
         # of two. Bounds driver memory to (threshold + batch) Arrow rows;
         # big tables/buckets keep the distributed merge.
         self.inline_merge_target_rows = inline_merge_target_rows
+        self._inline = InlineCollector(pk_cols, num_buckets)
 
     def _bucket_of(self) -> F.Column:
         return F.pmod(F.hash(*self.pk_cols), F.lit(self.num_buckets))
@@ -335,83 +424,29 @@ class ParquetMergeSink:
         return footer_rows_exceed(env_batch, self.inline_max_rows)
 
     def _prepare_inline_arrow(self, env_batch: DataFrame, epoch_id):
-        """Arrow-vectorized inline micro-batch preparation.
-
-        ONE job flattens the batch (state already folded to the survivor's
-        side: before-image for deletes, after-image otherwise) and pulls it
-        driver-side as an Arrow table — no Row pickling. Last-per-key
-        survivor selection is a stable numpy lexsort on (pos, ts_ns, op)
-        plus a keep-last dedup on the key columns; the chosen rows go back
-        to the JVM as ONE Arrow batch. State columns never leave Arrow, so
-        a genuine NaN double survives (the pandas detour the row path needs
-        would conflate it with NULL).
+        """Arrow-vectorized inline micro-batch preparation: the shared
+        ``InlineCollector`` pulls the batch and picks its last-per-key
+        survivors (a stable numpy lexsort on (pos, ts_ns, op) plus a
+        keep-last dedup on the key columns); the chosen rows go back to
+        the JVM as ONE Arrow batch.
 
         Returns ``("done", None)`` when the batch was fully handled,
-        ``("inline", (flat_local, affected))`` ready for the merge, or
-        ``("distributed", None)`` to take the distributed plan. Raises on
-        the unexpected — write_batch falls back to the row-based path.
+        ``("inline", (won, affected, row_schema))`` ready for the merge,
+        or ``("distributed", None)`` to take the distributed plan. Raises
+        on the unexpected — write_batch falls back to the row-based path.
         """
-        import numpy as np
-        import pandas as pd
-        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyspark.sql.types as T
 
-        if self.inline_max_rows <= 0 or self._footer_rows_exceed_limit(
-            env_batch
-        ):
+        got = self._inline.collect(env_batch, self.inline_max_rows)
+        if got is None:
             return ("distributed", None)
-        row_schema = T.StructType(env_batch.schema["after"].dataType.fields)
+        tbl, won, row_schema = got
         field_names = [f.name for f in row_schema.fields]
-        reserved = {"__op", "__pos", "__ts", "__b", "__deleted"}
-        if reserved & set(field_names) or any(
-            f.startswith("__k_") for f in field_names
-        ):
-            return ("distributed", None)  # name collision: let Rows handle
-        has_ts = "ts_ns" in env_batch.columns
-        bucket = F.pmod(
-            F.hash(*[F.col(f"key.{c}") for c in self.pk_cols]),
-            F.lit(self.num_buckets),
-        )
-        sel = [
-            F.col("op").alias("__op"),
-            F.col("source.pos").alias("__pos"),
-            (F.col("ts_ns") if has_ts else F.lit(None)).cast("long").alias("__ts"),
-            bucket.alias("__b"),
-            *[
-                F.col(f"key.{c}").alias(f"__k_{i}")
-                for i, c in enumerate(self.pk_cols)
-            ],
-            *[
-                F.when(F.col("op") == "d", F.col(f"before.{f}"))
-                .otherwise(F.col(f"after.{f}"))
-                .alias(f)
-                for f in field_names
-            ],
-        ]
-        tbl = (
-            env_batch.filter(F.col("op").isNotNull())
-            .select(*sel)
-            .limit(self.inline_max_rows + 1)
-            .toArrow()
-        )
-        if tbl.num_rows > self.inline_max_rows:
-            return ("distributed", None)
-        if tbl.num_rows and pc.any(
-            pc.equal(tbl.column("__op"), OP_TRUNCATE)
-        ).as_py():
-            return ("distributed", None)
         if tbl.num_rows == 0:
             self._detect_evolution(field_names, lambda: 0)
             if not self._has_buckets():
                 self._write_schema_sidecar(row_schema)
             return ("done", None)
-
-        # Survivor per key: arrow_last_per_key (module-level, shared with
-        # the MOR sink's inline delta path) — max (pos, ts_ns, op) with
-        # nulls smallest, ties to the later batch row.
-        take_idx = arrow_last_per_key(tbl, len(self.pk_cols))
-        won = tbl.take(pa.array(take_idx, type=pa.int64()))
         affected = sorted(set(tbl.column("__b").to_pylist()))
         # Evolution is recorded LAST: everything above can throw (Arrow
         # conversion, exotic types), and write_batch's fallback re-runs

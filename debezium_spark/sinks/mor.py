@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from debezium_spark.envelope import OP_TRUNCATE
 from debezium_spark.operators.reduce import apply_truncates, reduce_last_per_key
 from debezium_spark.operators.unwrap import extract_new_record_state
+from debezium_spark.sinks.merge import InlineCollector
 
 _HELPER_COLS = ("__epoch", "__deleted", "__op", "epoch")
 _NO_BASE = -(2**62)
@@ -113,6 +114,7 @@ class LogMergeSink:
         # agg + window shuffle + write). Batches above the bound
         # (backfills) keep the fully distributed plan.
         self.inline_max_rows = inline_max_rows
+        self._inline = InlineCollector(pk_cols)
         os.makedirs(self._delta_root, exist_ok=True)
 
     # -- layout helpers ---------------------------------------------------
@@ -184,72 +186,23 @@ class LogMergeSink:
         return flat.unionByName(marker)
 
     def _prepare_delta_inline(self, env_batch: DataFrame):
-        """Arrow-vectorized inline delta preparation.
-
-        ONE job flattens the batch (state already folded to the survivor's
-        side: before-image for deletes, after-image otherwise) and pulls it
-        driver-side as an Arrow table; last-per-key survivor selection is
-        the shared ``arrow_last_per_key`` lexsort. Returns the reduced
-        delta as a pyarrow table (columns = row fields + ``__deleted`` +
-        ``__op`` — exactly the distributed ``_delta_frame`` schema, types
-        carried unchanged from the envelope's Arrow conversion), or
-        ``None`` to take the distributed path (over-threshold batch,
-        truncate present, reserved-name collision). Raises on the
-        unexpected — write_batch falls back to the distributed plan."""
+        """Arrow-vectorized inline delta preparation: the shared
+        ``InlineCollector`` pulls the batch and picks its last-per-key
+        survivors. Returns the reduced delta as a pyarrow table (columns =
+        row fields + ``__deleted`` + ``__op`` — exactly the distributed
+        ``_delta_frame`` schema, types carried unchanged from the
+        envelope's Arrow conversion), or ``None`` to take the distributed
+        path (over-threshold batch, truncate present, reserved-name
+        collision). Raises on the unexpected — write_batch falls back to
+        the distributed plan."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyspark.sql.types as T
 
-        from debezium_spark.sinks.merge import (
-            arrow_last_per_key,
-            footer_rows_exceed,
-        )
-
-        if self.inline_max_rows <= 0 or footer_rows_exceed(
-            env_batch, self.inline_max_rows
-        ):
+        got = self._inline.collect(env_batch, self.inline_max_rows)
+        if got is None:
             return None
-        row_schema = T.StructType(env_batch.schema["after"].dataType.fields)
+        _, won, row_schema = got
         field_names = [f.name for f in row_schema.fields]
-        reserved = {"__op", "__pos", "__ts", "__deleted"}
-        if reserved & set(field_names) or any(
-            f.startswith("__k_") for f in field_names
-        ):
-            return None  # name collision: let the distributed plan handle
-        has_ts = "ts_ns" in env_batch.columns
-        sel = [
-            F.col("op").alias("__op"),
-            F.col("source.pos").alias("__pos"),
-            (F.col("ts_ns") if has_ts else F.lit(None)).cast("long").alias("__ts"),
-            *[
-                F.col(f"key.{c}").alias(f"__k_{i}")
-                for i, c in enumerate(self.pk_cols)
-            ],
-            *[
-                F.when(F.col("op") == "d", F.col(f"before.{f}"))
-                .otherwise(F.col(f"after.{f}"))
-                .alias(f)
-                for f in field_names
-            ],
-        ]
-        tbl = (
-            env_batch.filter(F.col("op").isNotNull())
-            .select(*sel)
-            .limit(self.inline_max_rows + 1)
-            .toArrow()
-        )
-        if tbl.num_rows > self.inline_max_rows:
-            return None
-        if tbl.num_rows and pc.any(
-            pc.equal(tbl.column("__op"), OP_TRUNCATE)
-        ).as_py():
-            # the distributed plan owns truncate-marker semantics
-            return None
-        if tbl.num_rows == 0:
-            won = tbl
-        else:
-            take_idx = arrow_last_per_key(tbl, len(self.pk_cols))
-            won = tbl.take(pa.array(take_idx, type=pa.int64()))
         deleted = pc.fill_null(pc.equal(won.column("__op"), "d"), False)
         return pa.table(
             [*(won.column(f) for f in field_names), deleted,

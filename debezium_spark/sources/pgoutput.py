@@ -39,10 +39,11 @@ guard. The data kernel decodes the INSERT/UPDATE/DELETE messages
 the relation version in effect at each LSN and stamps xid/commit-ts — v1
 by ``searchsorted`` into the BEGIN intervals, v2 by the commit map on the
 int32 xid prefix in-segment messages carry — all inside the consumer's
-action; the envelope projection is JVM-side ``zip_with``/
-``map_from_entries``. Protocol v2 (PG14 streamed transactions — the
-reference pins proto_version 1, so this is the scale extension) is
-decoded alongside v1.
+action. The same kernel then builds the envelope columns in Arrow (the
+name-keyed ``before``/``after`` maps and the NULL/TOAST name lists), so
+no per-row JVM expression follows it. Protocol v2 (PG14 streamed
+transactions — the reference pins proto_version 1, so this is the scale
+extension) is decoded alongside v1.
 
 No live Postgres exists in this sandbox, so fixtures are generated
 offline by the encoder half below (byte-identical to the protocol; the
@@ -907,6 +908,15 @@ _CONTROL_FILTER = (
 _DATA_FILTER = "substring({msg}, 1, 1) IN (X'49', X'55', X'44')"
 
 
+def _message_filters(msg_col: str) -> tuple:
+    """The (control, data) message-class predicates on ``msg_col``, parsed
+    once per caller: a stream decoder keeps them for every batch."""
+    return (
+        F.expr(_CONTROL_FILTER.format(msg=msg_col)),
+        F.expr(_DATA_FILTER.format(msg=msg_col)),
+    )
+
+
 class _ControlPlane:
     """One frame's control messages folded on the driver — the state
     ``PgOutputMessageDecoder`` keeps in memory while it reads the stream.
@@ -995,21 +1005,19 @@ class _ControlPlane:
 
 def _control_plane(
     df: DataFrame,
+    where,
     msg_col: str,
     lsn_col: str,
     in_stream_col: str | None = None,
     open_at_start: bool = False,
     carried_begin: tuple | None = None,
 ) -> _ControlPlane:
-    """ONE prefix-filtered collect of the frame's control messages, folded
+    """ONE prefix-filtered collect (``where``: the control predicate of
+    ``_message_filters``) of the frame's control messages, folded
     driver-side. Control messages are bounded by tables × schema changes
     plus transactions per batch."""
     sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
-    rows = (
-        df.filter(F.expr(_CONTROL_FILTER.format(msg=msg_col)))
-        .select(*sel)
-        .collect()
-    )
+    rows = df.filter(where).select(*sel).collect()
     return _ControlPlane(
         [
             (r[0], bytes(r[1]), r[2] if in_stream_col else None)
@@ -1034,7 +1042,8 @@ def collect_relations(
     ``in_stream_col`` when given, else by the frame's own Stream
     Start/Stop framing."""
     return _control_plane(
-        df, msg_col, lsn_col, in_stream_col=in_stream_col
+        df, _message_filters(msg_col)[0], msg_col, lsn_col,
+        in_stream_col=in_stream_col,
     ).relations
 
 
@@ -1126,15 +1135,89 @@ def _name_index(versions) -> dict:
     return {"index": index, **flat}
 
 
-#: the data kernel's output: the frame's data fields plus the relation
-#: naming and the transaction stamp, ready for ``_envelope_select``
-_NAMED_SCHEMA = (
-    "lsn long, kind string, schema string, table string,"
-    " col_names array<string>, before_kind string,"
-    " before array<struct<k:string, v:string>>,"
-    " after array<struct<k:string, v:string>>,"
-    " __xid long, __tx_ts_us long"
+#: the data kernel's output, the finished envelope (``_envelope_batch``):
+#: ``before``/``after`` map the text ('t') cells by column name,
+#: ``*_nulls`` name the 'n' cells and ``after_toasted`` the
+#: unchanged-TOAST 'u' cells, all built in Arrow; ``op`` is never NULL
+_ENVELOPE_SCHEMA = (
+    "lsn long, op string not null, schema string, table string,"
+    " xid long, commit_ts_us long, before_kind string,"
+    " before map<string,string>, before_nulls array<string>,"
+    " after map<string,string>, after_nulls array<string>,"
+    " after_toasted array<string>"
 )
+
+
+def _envelope_side(cells, col_names, lsn, lists):
+    """One tuple side of the envelope, in Arrow over the flattened cells:
+    the ``map<string,string>`` of its 't' cells keyed by column name, plus
+    one ``list<string>`` of column names per cell kind in ``lists``. A row
+    whose tuple is NULL, or whose relation is unknown (NULL names), is
+    NULL in every output. A tuple whose cell count differs from its
+    relation's column count raises, naming the LSN; so does a name that
+    repeats among a row's 't' cells (Spark's ``map_from_entries`` refuses
+    duplicate keys the same way)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(cells)
+    present = np.logical_and(
+        cells.is_valid().to_numpy(zero_copy_only=False),
+        col_names.is_valid().to_numpy(zero_copy_only=False),
+    )
+    c_off = cells.offsets.to_numpy().astype(np.int64)
+    m_off = col_names.offsets.to_numpy().astype(np.int64)
+    cnt = np.diff(c_off)
+    bad = present & (cnt != np.diff(m_off))
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(
+            f"tuple at lsn {int(lsn[i])} carries {int(cnt[i])} cells but "
+            f"its relation names {int(m_off[i + 1] - m_off[i])} columns"
+        )
+    cnt = np.where(present, cnt, 0)
+    row = np.repeat(np.arange(n), cnt)
+    starts = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(cnt, out=starts[1:])
+    within = np.arange(starts[-1]) - starts[:-1][row]
+    cidx = pa.array(c_off[:-1][row] + within)
+    keys = col_names.values.take(pa.array(m_off[:-1][row] + within))
+    kinds = cells.values.field("k").take(cidx)
+    null_rows = np.append(~present, False)
+
+    def offsets_of(mask):
+        offs = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(np.bincount(row[mask], minlength=n), out=offs[1:])
+        return pa.array(offs, mask=null_rows)
+
+    is_t = pc.equal(kinds, "t").to_numpy(zero_copy_only=False)
+    t_keys = keys.filter(pa.array(is_t))
+    if len(t_keys):
+        codes = pc.dictionary_encode(t_keys).indices.to_numpy()
+        pairs = row[is_t] * (int(codes.max()) + 1) + codes
+        uniq, first = np.unique(pairs, return_index=True)
+        if len(uniq) < len(pairs):
+            dup = np.setdiff1d(np.arange(len(pairs)), first)[0]
+            raise ValueError(
+                f"Duplicate map key {t_keys[int(dup)].as_py()!r} in the "
+                f"tuple at lsn {int(lsn[row[is_t][dup]])}"
+            )
+    out = [
+        pa.MapArray.from_arrays(
+            offsets_of(is_t),
+            t_keys,
+            cells.values.field("v").take(cidx.filter(pa.array(is_t))),
+        )
+    ]
+    for kind in lists:
+        is_k = pc.equal(kinds, kind).to_numpy(zero_copy_only=False)
+        out.append(
+            pa.ListArray.from_arrays(
+                offsets_of(is_k), keys.filter(pa.array(is_k))
+            )
+        )
+    return out
 
 
 def _name_and_stamp(frame, names, begins, commits):
@@ -1148,7 +1231,10 @@ def _name_and_stamp(frame, names, begins, commits):
       ``lsn <= final_lsn``; a row outside every interval gets NULL xid;
     * v2 tx (rows with a ``stream_xid``): the Stream Commit map stamps
       committed xids; rows of uncommitted (pending or aborted) xids are
-      withheld, matching the reference's commit-gated emission."""
+      withheld, matching the reference's commit-gated emission.
+
+    The result keeps the frame's positional cells beside their relation's
+    ``col_names``; ``_envelope_batch`` turns it into envelope rows."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1169,11 +1255,6 @@ def _name_and_stamp(frame, names, begins, commits):
         i = np.searchsorted(vs[:, 0], at, side="right") - 1
         ic = np.maximum(i, 0)
         ver[m] = np.where((i >= 0) & (at < vs[ic, 1]), vs[ic, 2], -1)
-    vtake = pa.array(ver, mask=ver < 0)
-
-    def take(key, typ):
-        return pa.array(names[key], type=typ).take(vtake)
-
     sx_col = frame.column("stream_xid")
     v2 = sx_col.is_valid().to_numpy(zero_copy_only=False)
     xid = np.zeros(n, dtype=np.int64)
@@ -1185,7 +1266,6 @@ def _name_and_stamp(frame, names, begins, commits):
         stamped = (i >= 0) & (lsn <= begins[ic, 1]) & ~v2
         xid = np.where(stamped, begins[ic, 2], 0)
         ts = np.where(stamped, begins[ic, 3], 0)
-    keep = None
     if v2.any():
         sx = pc.fill_null(sx_col, -1).to_numpy(zero_copy_only=False)
         committed = np.zeros(n, dtype=bool)
@@ -1198,8 +1278,17 @@ def _name_and_stamp(frame, names, begins, commits):
             ts = np.where(committed, cts[j], ts)
         stamped |= committed
         keep = ~v2 | committed
+        if not keep.all():
+            # withheld rows never reach the envelope
+            frame = frame.filter(pa.array(keep))
+            lsn, ver = lsn[keep], ver[keep]
+            xid, ts, stamped = xid[keep], ts[keep], stamped[keep]
+    vtake = pa.array(ver, mask=ver < 0)
 
-    out = pa.RecordBatch.from_arrays(
+    def take(key, typ):
+        return pa.array(names[key], type=typ).take(vtake)
+
+    return pa.RecordBatch.from_arrays(
         [
             frame.column("lsn"),
             frame.column("kind"),
@@ -1214,16 +1303,49 @@ def _name_and_stamp(frame, names, begins, commits):
         ],
         names=[
             "lsn", "kind", "schema", "table", "col_names", "before_kind",
-            "before", "after", "__xid", "__tx_ts_us",
+            "before", "after", "xid", "commit_ts_us",
         ],
     )
-    if keep is not None and not keep.all():
-        out = out.filter(pa.array(keep))
-    return out
+
+
+def _envelope_batch(named):
+    """One named batch (``_name_and_stamp``) as finished envelope rows
+    (``_ENVELOPE_SCHEMA``): ``op`` from the message kind, and each tuple
+    side's name-keyed map and name lists (``_envelope_side``)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lsn = named.column("lsn").to_numpy(zero_copy_only=False)
+    col_names = named.column("col_names")
+    kind = named.column("kind")
+    op = np.array(["d", "c", "u"], dtype=object)[
+        pc.equal(kind, "insert").to_numpy(zero_copy_only=False)
+        + 2 * pc.equal(kind, "update").to_numpy(zero_copy_only=False)
+    ]
+    return pa.RecordBatch.from_arrays(
+        [
+            named.column("lsn"),
+            pa.array(op, type=pa.utf8()),
+            named.column("schema"),
+            named.column("table"),
+            named.column("xid"),
+            named.column("commit_ts_us"),
+            named.column("before_kind"),
+            *_envelope_side(named.column("before"), col_names, lsn, ["n"]),
+            *_envelope_side(named.column("after"), col_names, lsn, ["n", "u"]),
+        ],
+        names=[
+            "lsn", "op", "schema", "table", "xid", "commit_ts_us",
+            "before_kind", "before", "before_nulls", "after", "after_nulls",
+            "after_toasted",
+        ],
+    )
 
 
 def _decode_data(
     df: DataFrame,
+    where,
     msg_col: str,
     lsn_col: str,
     in_stream_col: str | None,
@@ -1231,12 +1353,13 @@ def _decode_data(
     ctl: _ControlPlane,
 ) -> DataFrame:
     """The data plane: ONE ``mapInArrow`` over the frame's I/U/D messages
-    decodes, names and stamps each Arrow batch (``_frame_batch`` then
-    ``_name_and_stamp``); the envelope projection stays JVM-side. It runs
-    inside the consumer's action — no job of its own. The naming table
-    and the BEGIN/commit state travel in the kernel's closure: O(relation
-    versions + transactions in the batch), and PySpark broadcasts any
-    pickled command over 1 MB by itself."""
+    (``where``: the data predicate of ``_message_filters``) decodes each
+    Arrow batch and emits its finished envelope rows (``_frame_batch``,
+    ``_name_and_stamp``, ``_envelope_batch``); no JVM projection follows.
+    It runs inside the consumer's action — no job of its own. The naming
+    table and the BEGIN/commit state travel in the kernel's closure:
+    O(relation versions + transactions in the batch), and PySpark
+    broadcasts any pickled command over 1 MB by itself."""
     names = _name_index(versions)
     begins, commits = ctl.begins, ctl.commits
     sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
@@ -1249,45 +1372,17 @@ def _decode_data(
                 batch.column(1),
                 batch.column(2) if has_stream else None,
             )
-            yield _name_and_stamp(frame, names, begins, commits)
+            yield _envelope_batch(
+                _name_and_stamp(frame, names, begins, commits)
+            )
 
-    data = (
-        df.filter(F.expr(_DATA_FILTER.format(msg=msg_col)))
-        .select(*sel)
-        .mapInArrow(run, _NAMED_SCHEMA)
-    )
-    return _envelope_select(data)
+    return df.filter(where).select(*sel).mapInArrow(run, _ENVELOPE_SCHEMA)
 
 
 def _version_rows(rows: list[tuple]) -> list[tuple]:
     """Registry rows → the naming table's ``(relation_id, schema, table,
     col_names, valid_from, valid_to)`` projection."""
     return [(r[0], r[1], r[2], r[4], r[8], r[9]) for r in rows]
-
-
-def _named(cells, names):
-    return F.zip_with(
-        names,
-        cells,
-        lambda n, c: F.struct(
-            n.alias("name"), c["k"].alias("k"), c["v"].alias("v")
-        ),
-    )
-
-
-def _text_map(named):
-    return F.map_from_entries(
-        F.transform(
-            F.filter(named, lambda x: x["k"] == "t"),
-            lambda x: F.struct(x["name"].alias("key"), x["v"].alias("value")),
-        )
-    )
-
-
-def _names_where(named, kind):
-    return F.transform(
-        F.filter(named, lambda x: x["k"] == kind), lambda x: x["name"]
-    )
 
 
 def decode_pgoutput_binary(
@@ -1315,8 +1410,9 @@ def decode_pgoutput_binary(
     I/U/D messages decodes them, names their columns from the relation
     version in effect at each LSN, and stamps xid/commit-ts — v1 by a
     ``searchsorted`` into the BEGIN intervals (``[message lsn, final-LSN
-    field]``; overlapping intervals raise), v2 by the commit map. The
-    envelope projection is JVM-side ``zip_with``/``map_from_entries``.
+    field]``; overlapping intervals raise), v2 by the commit map — and
+    emits the finished envelope columns (``_envelope_side``). A tuple
+    whose cell count differs from its relation's column count raises.
     ``registry`` injects a prebuilt relation registry (``registry_df``
     shape; collected once, bounded by tables × schema versions); None
     derives it from this frame's own 'R' messages.
@@ -1328,7 +1424,10 @@ def decode_pgoutput_binary(
     Stream Commit is absent from the frame (still pending, or aborted) is
     withheld; subtransaction aborts raise (no silent partial-tx
     corruption). ``spark`` is unused and kept for API compatibility."""
-    ctl = _control_plane(df, msg_col, lsn_col, in_stream_col=in_stream_col)
+    ctl_where, data_where = _message_filters(msg_col)
+    ctl = _control_plane(
+        df, ctl_where, msg_col, lsn_col, in_stream_col=in_stream_col
+    )
     if in_stream_col is None and ctl.segments:
         in_stream_col = "__in_stream"
         df = df.withColumn(in_stream_col, _stamp_expr(ctl.segments, lsn_col))
@@ -1342,36 +1441,8 @@ def decode_pgoutput_binary(
                 "valid_from_lsn", "valid_to_lsn",
             ).collect()
         ]
-    return _decode_data(df, msg_col, lsn_col, in_stream_col, versions, ctl)
-
-
-def _envelope_select(with_tx: DataFrame) -> DataFrame:
-    b = _named(F.col("before"), F.col("col_names"))
-    a = _named(F.col("after"), F.col("col_names"))
-    op = (
-        F.when(F.col("kind") == "insert", F.lit("c"))
-        .when(F.col("kind") == "update", F.lit("u"))
-        .otherwise(F.lit("d"))
-    )
-    return with_tx.select(
-        F.col("lsn"),
-        op.alias("op"),
-        F.col("schema"),
-        F.col("table"),
-        F.col("__xid").alias("xid"),
-        F.col("__tx_ts_us").alias("commit_ts_us"),
-        F.col("before_kind"),
-        F.when(F.col("before").isNotNull(), _text_map(b)).alias("before"),
-        F.when(F.col("before").isNotNull(), _names_where(b, "n")).alias(
-            "before_nulls"
-        ),
-        F.when(F.col("after").isNotNull(), _text_map(a)).alias("after"),
-        F.when(F.col("after").isNotNull(), _names_where(a, "n")).alias(
-            "after_nulls"
-        ),
-        F.when(F.col("after").isNotNull(), _names_where(a, "u")).alias(
-            "after_toasted"
-        ),
+    return _decode_data(
+        df, data_where, msg_col, lsn_col, in_stream_col, versions, ctl
     )
 
 
@@ -1419,6 +1490,8 @@ class PgOutputStreamDecoder:
         self._last_begin: tuple | None = None
         self._pending: DataFrame | None = None
         self._pending_xids: set[int] = set()
+        # msg column -> its (control, data) predicates, parsed once
+        self._filters: dict[str, tuple] = {}
 
     @property
     def relations(self) -> list[tuple[int, dict]]:
@@ -1427,9 +1500,12 @@ class PgOutputStreamDecoder:
     def decode_batch(
         self, batch_df: DataFrame, msg_col: str = "msg", lsn_col: str = "lsn"
     ) -> DataFrame:
+        if msg_col not in self._filters:
+            self._filters[msg_col] = _message_filters(msg_col)
+        ctl_where, data_where = self._filters[msg_col]
         ctl = _control_plane(
-            batch_df, msg_col, lsn_col, open_at_start=self._open_segment,
-            carried_begin=self._last_begin,
+            batch_df, ctl_where, msg_col, lsn_col,
+            open_at_start=self._open_segment, carried_begin=self._last_begin,
         )
         self._open_segment = ctl.open_at_end
         if len(ctl.begins):
@@ -1438,7 +1514,9 @@ class PgOutputStreamDecoder:
         versions = _version_rows(_registry_rows(self._relations))
         if not ctl.segments and self._pending is None:
             # a plain v1 batch: no framing column, no pending buffer
-            return _decode_data(batch_df, msg_col, lsn_col, None, versions, ctl)
+            return _decode_data(
+                batch_df, data_where, msg_col, lsn_col, None, versions, ctl
+            )
 
         work = batch_df.select(
             lsn_col, msg_col,
@@ -1467,7 +1545,9 @@ class PgOutputStreamDecoder:
             self._pending = None
         # The kernel withholds in-segment rows whose xid has no Stream
         # Commit in this batch, so `work` needs no ready-side filter.
-        return _decode_data(work, msg_col, lsn_col, "__in_stream", versions, ctl)
+        return _decode_data(
+            work, data_where, msg_col, lsn_col, "__in_stream", versions, ctl
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -2,7 +2,10 @@
 """Same-window per-leg timer for A/B sandwiches on this noisy host:
 2 warm-ups + median-of-3 noop-sink runs per named leg, with a 3-sample
 job-latency probe before and after (calm floor 0.03-0.08 s/job — read
-the probes before trusting any delta). Pair with `git stash` to measure
+the probes before trusting any delta). Each timed run also reports the
+CPU seconds its process tree spent (this driver, the Spark JVM, the
+Python workers): scheduler stalls inflate wall time but barely move CPU
+time, so CPU-s decides a noisy call. Pair with `git stash` to measure
 old-vs-new back-to-back in one window:
 
     python scripts/leg_ab.py s32_binlog_txn_payload x6_lsh_candidates
@@ -14,8 +17,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+from spans import tree_cpu_s  # noqa: E402  (the benchmark's /proc reader)
 
 
 def probe(spark, n=3):
@@ -39,17 +46,19 @@ def main():
     # session's JVM and first-job start-up
     spark.range(1).count()
     print("probe_pre", probe(spark), flush=True)
-    res = {}
+    res, me = {}, os.getpid()
     for name in legs:
         df = qs[name].fn(spark, sf_dir)
         df.schema  # warm the listing/analysis
-        ts = []
+        ts, cpu = [], []
         for _ in range(5):
-            t0 = time.perf_counter()
+            c0, t0 = tree_cpu_s(me), time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             ts.append(round(time.perf_counter() - t0, 3))
-        res[name] = ts  # ts[0:2] = warm-ups
-        print(name, ts, "median", sorted(ts[2:])[1], flush=True)
+            cpu.append(round(tree_cpu_s(me) - c0, 2))
+        res[name] = {"wall": ts, "cpu_s": cpu}  # [0:2] = warm-ups
+        print(name, "wall", ts, "median", sorted(ts[2:])[1],
+              "cpu_s", cpu, "median", sorted(cpu[2:])[1], flush=True)
     print("probe_post", probe(spark), flush=True)
     print(json.dumps(res))
 

@@ -195,6 +195,59 @@ def test_evolved_column_survives_later_batches_in_other_buckets(
     assert rows[key_a].extra is None
 
 
+@pytest.mark.parametrize("kind", ["cow", "mor"])
+def test_inline_select_list_built_once_per_schema(
+    spark, sf_dir, tmp_path, kind
+):
+    """Both sinks share one inline collector that builds its select
+    Columns once per batch schema: a second batch of the same schema
+    reuses the very same Columns, and a schema-evolved batch builds new
+    ones and lands its new column."""
+    from debezium_spark.sinks.mor import LogMergeSink
+
+    env = accounts_changefeed(spark, sf_dir)
+    path = str(tmp_path / kind)
+    if kind == "cow":
+        sink = ParquetMergeSink(spark, path, ["id"], num_buckets=4)
+    else:
+        sink = LogMergeSink(spark, path, ["id"], compact_every=0)
+    collector = sink._inline
+    built = []
+    build = collector._build
+    collector._build = lambda schema: built.append(schema) or build(schema)
+
+    def not_inline(*a, **k):
+        raise AssertionError("the batch left the inline path")
+
+    # every batch below must take the Arrow inline path
+    if kind == "cow":
+        sink._try_collect_inline = not_inline
+    else:
+        sink._delta_frame = not_inline
+
+    first = _mk_event(env, key_id=1, op="c", pos=1)
+    sink.write_batch(first, 0)
+    cols = collector._selects[first.schema][2]
+    second = _mk_event(env, key_id=2, op="c", pos=2, status="silver")
+    sink.write_batch(second, 1)
+    assert len(built) == 1
+    assert collector._selects[second.schema][2] is cols
+
+    evolved = _mk_event(env, key_id=3, op="c", pos=3).select(
+        "key",
+        F.col("before").withField("tier", F.lit(None).cast("string"))
+        .alias("before"),
+        F.col("after").withField("tier", F.lit("T1")).alias("after"),
+        "op", "source", "transaction", "ts_ms",
+    )
+    sink.write_batch(evolved, 2)
+    assert len(built) == 2
+    assert collector._selects[evolved.schema][2] is not cols
+    rows = {r["id"]: r.asDict() for r in sink.read().collect()}
+    assert rows[3]["tier"] == "T1" and rows[1]["tier"] is None
+    assert rows[2]["status"] == "silver"
+
+
 def test_asof_join_null_in_matched_right_row_stays_null(spark):
     """The matched right row travels as one struct: a NULL column in the
     latest right row must NOT fall back to an older right row's value."""

@@ -1765,3 +1765,248 @@ def test_vectorized_kernel_bug_surfaces(monkeypatch):
             pa.array([0], type=pa.int64()),
             pa.array([encode_insert(5, [("t", "1")])], type=pa.binary()),
         )
+
+
+# ---------------------------------------------------------------------------
+# Envelope kernel: the Arrow-built maps and name lists against the JVM
+# lambda projection they replaced
+# ---------------------------------------------------------------------------
+#: ``_name_and_stamp``'s output: the projection's input
+_NAMED_SCHEMA = (
+    "lsn long, kind string, schema string, table string,"
+    " col_names array<string>, before_kind string,"
+    " before array<struct<k:string, v:string>>,"
+    " after array<struct<k:string, v:string>>,"
+    " xid long, commit_ts_us long"
+)
+
+
+def _envelope_select_reference(named):
+    """The JVM-side envelope projection the data kernel used to end in:
+    ``zip_with`` pairs each positional cell with its column name, then
+    ``filter`` + ``transform`` + ``map_from_entries`` build the text map
+    and ``filter`` + ``transform`` the 'n'/'u' name lists. The parity
+    reference of ``_envelope_batch``."""
+    from pyspark.sql import functions as F
+
+    def with_names(cells):
+        return F.zip_with(
+            F.col("col_names"),
+            cells,
+            lambda n, c: F.struct(
+                n.alias("name"), c["k"].alias("k"), c["v"].alias("v")
+            ),
+        )
+
+    def text_map(named_cells):
+        return F.map_from_entries(
+            F.transform(
+                F.filter(named_cells, lambda x: x["k"] == "t"),
+                lambda x: F.struct(
+                    x["name"].alias("key"), x["v"].alias("value")
+                ),
+            )
+        )
+
+    def names_where(named_cells, kind):
+        return F.transform(
+            F.filter(named_cells, lambda x: x["k"] == kind),
+            lambda x: x["name"],
+        )
+
+    b = with_names(F.col("before"))
+    a = with_names(F.col("after"))
+    op = (
+        F.when(F.col("kind") == "insert", F.lit("c"))
+        .when(F.col("kind") == "update", F.lit("u"))
+        .otherwise(F.lit("d"))
+    )
+    has_b, has_a = F.col("before").isNotNull(), F.col("after").isNotNull()
+    return named.select(
+        "lsn", op.alias("op"), "schema", "table", "xid", "commit_ts_us",
+        "before_kind",
+        F.when(has_b, text_map(b)).alias("before"),
+        F.when(has_b, names_where(b, "n")).alias("before_nulls"),
+        F.when(has_a, text_map(a)).alias("after"),
+        F.when(has_a, names_where(a, "n")).alias("after_nulls"),
+        F.when(has_a, names_where(a, "u")).alias("after_toasted"),
+    )
+
+
+def _named_batch(msgs, flags=None, relations=(), open_at_start=False):
+    """One micro-batch of ``(lsn, message)`` decoded the way the data
+    kernel does up to naming and stamping (control fold, ``_frame_batch``,
+    ``_name_and_stamp``); ``flags`` marks protocol-v2 in-segment messages,
+    ``relations`` are RELATIONs parsed in earlier batches. Returns the
+    named batch and the control plane."""
+    import pyarrow as pa
+
+    from debezium_spark.sources.pgoutput import (
+        _ControlPlane,
+        _frame_batch,
+        _name_and_stamp,
+        _name_index,
+        _registry_rows,
+        _version_rows,
+    )
+
+    flags = list(flags or [False] * len(msgs))
+    rows = [(lsn, m, f) for (lsn, m), f in zip(msgs, flags)]
+    ctl = _ControlPlane(
+        [r for r in rows if r[1][:1] in (b"R", b"B", b"S", b"E", b"c", b"A")],
+        open_at_start=open_at_start,
+        flagged=True,
+    )
+    data = [r for r in rows if r[1][:1] in (b"I", b"U", b"D")]
+    frame = _frame_batch(
+        pa.array([r[0] for r in data], type=pa.int64()),
+        pa.array([r[1] for r in data], type=pa.binary()),
+        pa.array([r[2] for r in data]) if any(flags) else None,
+    )
+    names = _name_index(
+        _version_rows(_registry_rows([*relations, *ctl.relations]))
+    )
+    return _name_and_stamp(frame, names, ctl.begins, ctl.commits), ctl
+
+
+def _kernel_and_reference(spark, named):
+    """The same named rows through ``_envelope_batch`` (a mapInArrow with
+    the kernel's output schema) and through the lambda projection."""
+    import pyarrow as pa
+
+    from debezium_spark.sources.pgoutput import (
+        _ENVELOPE_SCHEMA,
+        _envelope_batch,
+    )
+
+    df = spark.createDataFrame(
+        pa.Table.from_batches([named]), schema=_NAMED_SCHEMA
+    )
+
+    def run(batches):
+        for b in batches:
+            yield _envelope_batch(b)
+
+    return (
+        df.mapInArrow(run, _ENVELOPE_SCHEMA),
+        _envelope_select_reference(df),
+    )
+
+
+def test_envelope_kernel_matches_lambda_projection(spark):
+    """The kernel's envelope equals the lambda projection's, schema and
+    nullability included, on: an unknown relation (NULL names); NULL
+    ``before``; 'n' and 'u' cells; DELETE with 'K' and 'O' images; UPDATE
+    with and without an old tuple; a zero-column tuple; multibyte and
+    non-BMP text; repeated column names among non-'t' cells; and v2 rows
+    withheld in one batch, emitted in the next."""
+    from debezium_spark.sources.pgoutput import (
+        encode_stream_commit,
+        encode_stream_start,
+        encode_stream_stop,
+        with_stream_xid,
+    )
+
+    cols3 = [(1, "id", 20, -1), (0, "v", 25, -1), (0, "w", 25, -1)]
+    v1 = [
+        (0, encode_relation(9, "public", "t", cols3)),
+        (1, encode_relation(5, "public", "empty", [])),
+        (2, encode_relation(11, "public", "dup",
+                            [(1, "a", 25, -1), (0, "a", 25, -1)])),
+        (3, encode_begin(20, 1_000_000, 100)),
+        (4, encode_insert(9, [("t", "1"), ("t", "ünïcødé ✓"),
+                              ("t", "𝄞 😀")])),
+        (5, encode_insert(9, [("t", "2"), ("n", None), ("t", "")])),
+        (6, encode_update(9, [("t", "1"), ("u", None), ("n", None)],
+                          before=[("t", "1"), ("n", None), ("n", None)],
+                          before_kind="K")),
+        (7, encode_update(9, [("t", "2"), ("t", "x"), ("u", None)],
+                          before=[("t", "2"), ("t", "é"), ("t", "y")],
+                          before_kind="O")),
+        (8, encode_update(9, [("t", "3"), ("t", "z"), ("t", "w")])),
+        (9, encode_delete(9, [("t", "1"), ("n", None), ("n", None)], "K")),
+        (10, encode_delete(9, [("t", "2"), ("t", "x"), ("u", None)], "O")),
+        (11, encode_insert(5, [])),
+        (12, encode_delete(5, [], "O")),
+        (13, encode_insert(77, [("t", "orphan")])),  # no RELATION: no names
+        (14, encode_update(77, [("t", "o")], before=[("t", "p")],
+                           before_kind="O")),
+        (15, encode_insert(11, [("t", "1"), ("n", None)])),
+        (20, encode_commit(20, 20, 1_000_000)),
+    ]
+    named, ctl = _named_batch(v1)
+    assert named.num_rows == 12
+    batches = [named]
+    # v2: a streamed xid stays open across the batch boundary, so its rows
+    # are withheld, then re-fed with the next batch and emitted there
+    seg_a = [
+        (30, encode_stream_start(60)),
+        (31, with_stream_xid(encode_insert(9, [("t", "7"), ("t", "s"),
+                                               ("n", None)]), 60)),
+    ]
+    named_a, ctl_a = _named_batch(seg_a, [False, True], ctl.relations)
+    assert named_a.num_rows == 0
+    seg_b = [
+        seg_a[1],
+        (32, with_stream_xid(encode_update(9, [("t", "7"), ("u", None),
+                                               ("t", "ß")]), 60)),
+        (33, encode_stream_stop()),
+        (34, encode_stream_commit(60, 34, 34, 5_000_000)),
+    ]
+    named_b, _ = _named_batch(
+        seg_b, [True, True, False, False], ctl.relations, open_at_start=True
+    )
+    assert named_b.column("xid").to_pylist() == [60, 60]
+    batches.append(named_b)
+
+    for named in batches:
+        kernel, ref = _kernel_and_reference(spark, named)
+        assert kernel.schema == ref.schema
+        assert [f.nullable for f in kernel.schema.fields] == [
+            f.nullable for f in ref.schema.fields
+        ]
+        got = _rows_by_lsn(kernel.collect())
+        assert got == _rows_by_lsn(ref.collect())
+    got = {r["lsn"]: r for r in _rows_by_lsn(
+        _kernel_and_reference(spark, batches[0])[0].collect()
+    )}
+    assert got[4]["after"] == {"id": "1", "v": "ünïcødé ✓", "w": "𝄞 😀"}
+    assert got[13]["after"] is None and got[13]["after_nulls"] is None
+    assert got[11]["after"] == {} and got[11]["after_toasted"] == []
+    assert got[6]["after_toasted"] == ["v"] and got[6]["before_kind"] == "K"
+
+
+def test_envelope_count_mismatch_and_duplicate_key_raise(spark, monkeypatch):
+    """A tuple whose cell count differs from its relation's column count
+    raises naming the LSN — in the kernel, never rerouted to the row path
+    — and so does a name repeated among a row's 't' cells, which the
+    lambda projection's ``map_from_entries`` refuses too."""
+    from debezium_spark.sources import pgoutput
+
+    rel = (0, encode_relation(9, "public", "t", [(1, "id", 20, -1),
+                                                 (0, "v", 25, -1)]))
+
+    def no_row_path(*a, **k):
+        raise AssertionError("rerouted to the row path")
+
+    for cells in ([("t", "1")], [("t", "1"), ("t", "a"), ("n", None)]):
+        msgs = [rel, (7, encode_insert(9, cells))]
+        with monkeypatch.context() as m:
+            m.setattr(pgoutput, "_frame_batch_rowpath", no_row_path)
+            named, _ = _named_batch(msgs)
+            with pytest.raises(ValueError, match=r"lsn 7 carries \d cells"):
+                pgoutput._envelope_batch(named)
+        with pytest.raises(Exception, match=r"lsn 7 carries \d cells"):
+            decode_pgoutput_binary(spark, _frame(spark, msgs)).collect()
+
+    dup = [
+        (0, encode_relation(9, "public", "t", [(1, "a", 20, -1),
+                                               (0, "a", 25, -1)])),
+        (3, encode_insert(9, [("t", "1"), ("t", "2")])),
+    ]
+    named, _ = _named_batch(dup)
+    with pytest.raises(ValueError, match="Duplicate map key 'a'.*lsn 3"):
+        pgoutput._envelope_batch(named)
+    _, ref = _kernel_and_reference(spark, named)
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        ref.collect()

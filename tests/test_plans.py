@@ -635,15 +635,24 @@ def test_pgoutput_decode_is_one_kernel_without_joins(spark):
     I/U/D messages (relation versions and BEGIN intervals held
     driver-side), so the plan has no join of any kind — in particular no
     BroadcastNestedLoopJoin, whose O(txs-per-batch x data rows) cost is
-    the shape this operator exists to avoid."""
+    the shape this operator exists to avoid. The same kernel builds the
+    envelope maps and name lists in Arrow, so no interpreted higher-order
+    lambda (``zip_with``/``filter``/``transform``/``map_from_entries``)
+    runs per row after it."""
+    import re
+
     from debezium_spark.suite import load_all
 
     q = load_all()["s18_pgoutput_binary_decode"]
-    plan = (
-        q.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-    )
+    executed = q.fn(spark, SF)._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
     assert "Join" not in plan and "CartesianProduct" not in plan
     assert plan.count("MapInArrow") == 1
+    classes = set(re.findall(r'"class":"[\w.$]*\.(\w+)"', executed.toJSON()))
+    assert "MapInArrowExec" in classes
+    assert not classes & {
+        "ZipWith", "ArrayFilter", "ArrayTransform", "MapFromEntries"
+    }
 
 
 def test_binary_quant_broadcasts_queries_and_plans_literal_thresholds(
