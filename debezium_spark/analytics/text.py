@@ -1292,35 +1292,20 @@ def propagate_min_labels(sym: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def token_hash(tok: Column) -> Column:
-    """Polynomial rolling hash of a token's char codes (mod MINHASH_PRIME),
-    mixed through one affine map — same arithmetic family as minhash, so
-    the oracle reproduces it with list_reduce + ord()."""
-    P = MINHASH_PRIME
-    codes = F.transform(
-        F.sequence(F.lit(1), F.length(tok)),
-        lambda i: F.ascii(tok.substr(i, F.lit(1))).cast("long"),
-    )
-    base = F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * SHINGLE_POLY_BASE + c) % P,
-    )
-    return (base * MINHASH_A[0] + MINHASH_B[0]) % P
-
-
 def simhash(
     df: DataFrame, text_col: str = "text", bits: int = 16
 ) -> DataFrame:
     """SimHash over whitespace tokens: per-bit signed vote, sign → bit.
 
-    Arrow-batched numpy path, bit-identical to :func:`simhash_expr` (the
-    pure-expression form evaluates `bits` interpreted fold passes over the
-    token array — 16 re-walks per row). Here each *distinct* token in the
-    batch is hashed once (Zipf makes the cache hit rate high), votes are
-    one vectorized sign-sum per document, and the big-int polynomial is
-    reduced mod P only at the end (identical arithmetic: mod distributes
-    over the fold).
+    Each token hashes as a polynomial rolling hash of its char codes (mod
+    MINHASH_PRIME) mixed through one affine map — the arithmetic the
+    DuckDB oracle reproduces with list_reduce + ord(). Arrow-batched numpy
+    path: each *distinct* token in the batch is hashed once (Zipf makes
+    the cache hit rate high), votes are one vectorized sign-sum per
+    document, and the big-int polynomial is reduced mod P only at the end
+    (identical arithmetic: mod distributes over the fold). The
+    pure-expression form, which evaluates `bits` interpreted fold passes
+    over the token array, is the parity reference in tests/test_plans.py.
     """
     import re
 
@@ -1359,27 +1344,6 @@ def simhash(
 
     df = ensure_parallelism(df, target=8)
     return df.withColumn("simhash", sh(F.col(text_col)))
-
-
-def simhash_expr(
-    df: DataFrame, text_col: str = "text", bits: int = 16
-) -> DataFrame:
-    """Pure-Catalyst SimHash (no Python workers) — same bits as
-    :func:`simhash`; kept as the zero-dependency fallback and the shape
-    the DuckDB oracle mirrors."""
-    toks = tokenize(F.col(text_col))
-    hashed = F.transform(toks, token_hash)
-    out = df.withColumn("__th", hashed)
-    def bit_voter(j):
-        return lambda a, h: a + F.when(
-            F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    acc = F.lit(0).cast("long")
-    for j in range(bits):
-        vote = F.aggregate(F.col("__th"), F.lit(0), bit_voter(j))
-        acc = acc + F.when(vote > 0, F.lit(2 ** j).cast("long")).otherwise(0)
-    return out.withColumn("simhash", acc).drop("__th")
 
 
 # ---------------------------------------------------------------------------
@@ -2458,10 +2422,10 @@ _CHARLM_Q = 1_000_000_000  # per-term fixed-point scale (see below)
 
 
 def _charlm_doc_counts(base: DataFrame):
-    """Arrow path for :func:`charlm_quality`: one numpy kernel per batch
-    computes each document's distinct-bigram counts (codes → packed pair
-    ints → ``np.unique`` with counts) and distinct characters — rows
-    leave the kernel already reduced, so neither the per-character
+    """The counting kernel of :func:`charlm_quality`: one numpy kernel
+    per batch computes each document's distinct-bigram counts (codes →
+    packed pair ints → ``np.unique`` with counts) and distinct characters
+    — rows leave the kernel already reduced, so neither the per-character
     explode nor the interpreted substr lambdas ever run. Returns
     ``(db, chars)`` = ``(__id, __bg, __cnt)`` and ``(__ch,)``. The
     kernel output is lazily localCheckpoint-ed: three plan branches
@@ -2522,8 +2486,6 @@ def charlm_quality(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-document bits-per-char cross-entropy under a corpus-trained
     add-one-smoothed character-bigram model:
@@ -2549,47 +2511,17 @@ def charlm_quality(
     (millions of states, needs the binary model on every executor) would
     not; swap in a Pandas-UDF KenLM scorer for the high-fidelity variant.
 
-    ``impl='arrow'`` (default) computes each document's DISTINCT-bigram
-    counts and distinct chars in one numpy kernel (codes → pair ints →
-    np.unique with counts) — bit-identical to the expression variant
-    (it's exact counting, kept as ``impl='expr'``), but the per-char
-    interpreted Catalyst lambdas and the one-row-per-character explode
-    are gone: rows leave the kernel already reduced to distinct pairs.
-    Measured sf0.1: 2.8 s → ~1.2 s."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
+    Each document's DISTINCT-bigram counts and distinct chars come from
+    one numpy kernel (codes → pair ints → np.unique with counts) — exact
+    counting, bit-identical to the per-character substr/explode
+    expression form kept as the parity reference in
+    tests/test_components.py, but without its interpreted Catalyst
+    lambdas and one-row-per-character explode: rows leave the kernel
+    already reduced to distinct pairs. Measured sf0.1: 2.8 s → ~1.2 s."""
     norm = normalize_text(F.col(text_col))
     base = df.select(F.col(id_col).alias("__id"), norm.alias("__s"))
-    if impl == "arrow":
-        db, chars = _charlm_doc_counts(base)
-        vocab = chars.agg(F.count_distinct("__ch").alias("__v"))
-    else:
-        bigrams = F.when(
-            F.length("__s") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.length("__s") - 1),
-                lambda i: F.col("__s").substr(i, F.lit(2)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        db = (
-            base.select("__id", F.explode(bigrams).alias("__bg"))
-            .groupBy("__id", "__bg")
-            .agg(F.count("*").alias("__cnt"))
-        )
-        vocab = (
-            base.select(
-                F.explode(
-                    F.transform(
-                        F.sequence(
-                            F.lit(1), F.greatest(F.length("__s"), F.lit(1))
-                        ),
-                        lambda i: F.col("__s").substr(i, F.lit(1)),
-                    )
-                ).alias("__ch")
-            )
-            .filter(F.col("__ch") != "")
-            .agg(F.count_distinct("__ch").alias("__v"))
-        )
+    db, chars = _charlm_doc_counts(base)
+    vocab = chars.agg(F.count_distinct("__ch").alias("__v"))
     model = db.groupBy("__bg").agg(F.sum("__cnt").alias("__c"))
     ctx = (
         model.groupBy(F.col("__bg").substr(1, 1).alias("__c1"))

@@ -44,27 +44,24 @@ _ASIDE = ".aside"
 def footer_rows_exceed(env_batch: DataFrame, limit: int) -> bool:
     """True when the micro-batch's parquet footer row counts already exceed
     ``limit`` — a driver-local metadata read (no Spark job). Returns False
-    on any uncertainty (non-parquet/remote input, unreadable footer): the
-    limit(n+1) probe then decides as before."""
-    try:
-        files = env_batch.inputFiles()
-    except Exception:  # pragma: no cover - non-file-backed batch
-        return False
-    if not files:
-        return False
-    try:
-        import pyarrow.parquet as pq
+    when it cannot tell, and the limit(n+1) probe then decides: a batch
+    not backed by local parquet files (in-memory input lists none; a
+    non-parquet or remote input lists other paths) or a footer pyarrow
+    cannot read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        total = 0
-        for uri in files:
-            path = uri.removeprefix("file://").removeprefix("file:")
-            if not path.endswith(".parquet") or not os.path.exists(path):
-                return False
+    total = 0
+    for uri in env_batch.inputFiles():
+        path = uri.removeprefix("file://").removeprefix("file:")
+        if not path.endswith(".parquet") or not os.path.exists(path):
+            return False
+        try:
             total += pq.ParquetFile(path).metadata.num_rows
-            if total > limit:
-                return True
-    except Exception:  # pragma: no cover - footer read failure
-        return False
+        except (OSError, pa.ArrowException):
+            return False
+        if total > limit:
+            return True
     return False
 
 
@@ -74,10 +71,9 @@ def arrow_last_per_key(tbl, n_keys: int):
     ``__k_0..__k_{n-1}`` key columns.
 
     Order is max (pos, ts_ns, op) with nulls smallest; ties beyond the full
-    order key go to the later batch row — identical to the row path's
-    ``ok >= prev`` insertion loop (stable lexsort + keep-last reproduces
-    both the order and the tie rule) and to ``reduce_last_per_key``'s
-    window whenever the full order key differs. A NULL pos sorts smallest
+    order key go to the later batch row (stable lexsort + keep-last) —
+    identical to ``reduce_last_per_key``'s window whenever the full order
+    key differs. A NULL pos sorts smallest
     via the same null-flag trick as ts (NaN would otherwise rank LARGEST
     under lexsort, inverting the distributed window's nulls-smallest
     order)."""
@@ -102,6 +98,75 @@ def arrow_last_per_key(tbl, n_keys: int):
     return order[winners]
 
 
+def inline_decline(row_schema) -> str | None:
+    """Why the Arrow inline paths cannot carry a row field of
+    ``row_schema`` exactly, or None when they can. Pure schema check,
+    decided before any job runs:
+
+    * year-month and calendar intervals: no Arrow conversion;
+    * day-time intervals, variants, the NULL type and user-defined types,
+      at any depth: a pyarrow-written parquet file (the driver merge, the
+      MOR delta) reads back as bigint, ``struct<value,metadata>``, int
+      and the UDT's storage struct.
+
+    Every other type (integral, floating with NaN, decimal, string, char,
+    binary, boolean, date, timestamp, timestamp_ntz, and arrays, maps and
+    structs of them) reads back from both sinks as the distributed path
+    writes it."""
+    import pyspark.sql.types as T
+
+    def walk(dt, where):
+        if isinstance(dt, (T.YearMonthIntervalType, T.CalendarIntervalType)):
+            return f"{where}: {dt.simpleString()} has no Arrow conversion"
+        if isinstance(
+            dt, (T.DayTimeIntervalType, T.VariantType, T.NullType,
+                 T.UserDefinedType)
+        ):
+            return (
+                f"{where}: {dt.simpleString()} changes type through a "
+                "pyarrow parquet file"
+            )
+        if isinstance(dt, T.ArrayType):
+            return walk(dt.elementType, f"{where}[]")
+        if isinstance(dt, T.MapType):
+            return walk(dt.keyType, f"{where}{{key}}") or walk(
+                dt.valueType, f"{where}{{value}}"
+            )
+        if isinstance(dt, T.StructType):
+            for f in dt.fields:
+                reason = walk(f.dataType, f"{where}.{f.name}")
+                if reason:
+                    return reason
+        return None
+
+    for f in row_schema.fields:
+        reason = walk(f.dataType, f.name)
+        if reason:
+            return reason
+    return None
+
+
+def _as_nullable(dt):
+    """``dt`` with every nested field, element and value nullable."""
+    import pyspark.sql.types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True,
+                              f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
 class InlineCollector:
     """The inline micro-batch collect both sinks share.
 
@@ -112,8 +177,15 @@ class InlineCollector:
     come from ``arrow_last_per_key``. The select list is built once per
     batch schema (which also fixes whether ``ts_ns`` exists) and kept on
     this instance, so a steady stream of same-schema batches builds no
-    Spark expression per batch. ``num_buckets`` adds the COW sink's
-    ``__b`` target-bucket column."""
+    Spark expression per batch. Row fields leave in their all-nullable
+    form, the form the distributed path reads back: a field declaring a
+    non-null nested field is cast, because pyarrow refuses a NULL struct
+    whose children are declared non-null and Spark's Arrow-to-DataFrame
+    conversion refuses the nullable field ``toArrow`` yields for a
+    non-null nested struct. The same build declines a schema with a
+    reserved helper name or an ``inline_decline`` type: every batch of
+    it takes the distributed plan, and no job runs first.
+    ``num_buckets`` adds the COW sink's ``__b`` target-bucket column."""
 
     def __init__(self, pk_cols: list[str], num_buckets: int | None = None):
         self.pk_cols = pk_cols
@@ -122,7 +194,8 @@ class InlineCollector:
 
     def select_for(self, schema):
         """``(row_schema, where, select list)`` for a batch of ``schema``,
-        or None when a row field collides with a helper column name."""
+        or None when a row field collides with a helper column name or has
+        a type ``inline_decline`` names."""
         if schema not in self._selects:
             self._selects[schema] = self._build(schema)
         return self._selects[schema]
@@ -130,13 +203,16 @@ class InlineCollector:
     def _build(self, schema):
         import pyspark.sql.types as T
 
-        row_schema = T.StructType(schema["after"].dataType.fields)
+        declared = schema["after"].dataType
+        row_schema = _as_nullable(T.StructType(declared.fields))
         field_names = [f.name for f in row_schema.fields]
         reserved = {"__op", "__pos", "__ts", "__deleted"}
         if self.num_buckets is not None:
             reserved.add("__b")
-        if reserved & set(field_names) or any(
-            f.startswith("__k_") for f in field_names
+        if (
+            reserved & set(field_names)
+            or any(f.startswith("__k_") for f in field_names)
+            or inline_decline(row_schema)
         ):
             return None
         keys = [F.col(f"key.{c}") for c in self.pk_cols]
@@ -147,34 +223,39 @@ class InlineCollector:
             else [F.pmod(F.hash(*keys), F.lit(self.num_buckets)).alias("__b")]
         )
         is_delete = F.col("op") == "d"
+
+        def state(f):
+            c = F.when(is_delete, F.col(f"before.{f.name}")).otherwise(
+                F.col(f"after.{f.name}")
+            )
+            if declared[f.name].dataType != f.dataType:
+                c = c.cast(f.dataType)
+            return c.alias(f.name)
+
         sel = [
             F.col("op").alias("__op"),
             F.col("source.pos").alias("__pos"),
             ts.cast("long").alias("__ts"),
             *bucket,
             *[k.alias(f"__k_{i}") for i, k in enumerate(keys)],
-            *[
-                F.when(is_delete, F.col(f"before.{f}"))
-                .otherwise(F.col(f"after.{f}"))
-                .alias(f)
-                for f in field_names
-            ],
+            *[state(f) for f in row_schema.fields],
         ]
         return row_schema, F.col("op").isNotNull(), sel
 
     def collect(self, env_batch: DataFrame, max_rows: int):
         """Pull one micro-batch inline: ``(tbl, won, row_schema)`` with the
         collected rows and their last-per-key survivors, or None to take
-        the distributed plan — an over-``max_rows`` batch (the parquet
-        footers decide without a job when they can), a truncate (the
-        distributed plan owns its semantics), or a name collision."""
+        the distributed plan — a schema ``select_for`` declines (no job
+        runs), an over-``max_rows`` batch (the parquet footers decide
+        without a job when they can), or a truncate (the distributed plan
+        owns its semantics)."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        if max_rows <= 0 or footer_rows_exceed(env_batch, max_rows):
+        if max_rows <= 0:
             return None
         built = self.select_for(env_batch.schema)
-        if built is None:
+        if built is None or footer_rows_exceed(env_batch, max_rows):
             return None
         row_schema, where, sel = built
         tbl = env_batch.filter(where).select(*sel).limit(max_rows + 1).toArrow()
@@ -309,11 +390,14 @@ class ParquetMergeSink:
         self.table_name = table_name
         self._schema_version = 0
         # Micro-batches at or below this row count take the inline path:
-        # ONE collect materializes the batch driver-side, the K4 reduction
-        # runs in Python, and the MERGE joins against a broadcast local
-        # relation — 2 Spark jobs per batch instead of 3+, and the batch
-        # files are scanned once instead of once per plan subtree. Batches
-        # above the bound (backfills) keep the fully distributed plan.
+        # ONE collect pulls the batch driver-side as Arrow (the shared
+        # InlineCollector), the K4 reduction is a numpy lexsort, and the
+        # MERGE runs driver-side (below) or joins against a broadcast
+        # local relation — 1-2 Spark jobs per batch instead of 3+, and the
+        # batch files are scanned once instead of once per plan subtree.
+        # Batches above the bound (backfills), and every batch of a schema
+        # the collector declines (reserved helper names, ``inline_decline``
+        # types), keep the fully distributed plan.
         self.inline_max_rows = inline_max_rows
         # When an inline batch's AFFECTED buckets together hold at most
         # this many on-disk rows (parquet footer counts, no job), the
@@ -389,8 +473,8 @@ class ParquetMergeSink:
     def _detect_evolution(self, row_cols: list[str], min_pos) -> None:
         """K6 schema-evolution detection against the on-disk column set; see
         write_batch for why the sidecar (not one sampled footer) is the
-        authority. ``min_pos`` is a callable returning the batch's min
-        source.pos, invoked only when a change is actually recorded."""
+        authority. ``min_pos`` is the batch's min source.pos (None for an
+        empty batch), recorded when a change is."""
         if self.schema_evolution != "basic":
             return
         if self._has_buckets():
@@ -415,49 +499,8 @@ class ParquetMergeSink:
                 self.table_name,
                 self._schema_version,
                 [*row_cols, BUCKET_COL],
-                int(min_pos() or 0),
+                int(min_pos or 0),
             )
-
-    def _footer_rows_exceed_limit(self, env_batch: DataFrame) -> bool:
-        """See :func:`footer_rows_exceed` (module-level, shared with the
-        MOR sink's inline delta path)."""
-        return footer_rows_exceed(env_batch, self.inline_max_rows)
-
-    def _prepare_inline_arrow(self, env_batch: DataFrame, epoch_id):
-        """Arrow-vectorized inline micro-batch preparation: the shared
-        ``InlineCollector`` pulls the batch and picks its last-per-key
-        survivors (a stable numpy lexsort on (pos, ts_ns, op) plus a
-        keep-last dedup on the key columns); the chosen rows go back to
-        the JVM as ONE Arrow batch.
-
-        Returns ``("done", None)`` when the batch was fully handled,
-        ``("inline", (won, affected, row_schema))`` ready for the merge,
-        or ``("distributed", None)`` to take the distributed plan. Raises
-        on the unexpected — write_batch falls back to the row-based path.
-        """
-        import pyarrow.compute as pc
-
-        got = self._inline.collect(env_batch, self.inline_max_rows)
-        if got is None:
-            return ("distributed", None)
-        tbl, won, row_schema = got
-        field_names = [f.name for f in row_schema.fields]
-        if tbl.num_rows == 0:
-            self._detect_evolution(field_names, lambda: 0)
-            if not self._has_buckets():
-                self._write_schema_sidecar(row_schema)
-            return ("done", None)
-        affected = sorted(set(tbl.column("__b").to_pylist()))
-        # Evolution is recorded LAST: everything above can throw (Arrow
-        # conversion, exotic types), and write_batch's fallback re-runs
-        # _write_batch_inline which detects again — recording earlier would
-        # double-increment the schema version and write a duplicate history
-        # row for the same batch.
-        self._detect_evolution(
-            field_names,
-            lambda: int(pc.min(tbl.column("__pos")).as_py() or 0),
-        )
-        return ("inline", (won, affected, row_schema))
 
     def _flat_local_from_won(self, won, row_schema):
         """Survivor Arrow table -> the one-partition local change relation
@@ -492,15 +535,15 @@ class ParquetMergeSink:
         buckets are small: pyarrow reads the touched bucket files (no
         job), the upsert anti-join is a key-set filter, and the merged
         buckets go back through the shared staging+swap protocol — the
-        batch's ONLY Spark job stays the collect in
-        ``_prepare_inline_arrow``. Returns True when fully handled;
+        batch's ONLY Spark job stays the ``InlineCollector`` collect.
+        Returns True when fully handled;
         returns False (no side effects) whenever exactness or scale is at
         risk: non-upsert modes, no table yet, floating-point or nested
         key columns (Spark's NaN/complex equality differs from Python's),
         a survivor whose key struct differs from its state PK (the Spark
         path re-buckets by STATE pk — unreproducible without Spark's
-        hash), over-threshold target buckets, or target files whose arrow
-        types don't cast to the batch's."""
+        hash), over-threshold target buckets, or target files pyarrow
+        cannot read or whose arrow types don't cast to the batch's."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -543,7 +586,12 @@ class ParquetMergeSink:
             )
             files_by_bucket[b] = fs
             for p in fs:
-                total += pq.ParquetFile(p).metadata.num_rows
+                try:
+                    total += pq.ParquetFile(p).metadata.num_rows
+                except (OSError, pa.lib.ArrowException):
+                    # a footer pyarrow cannot read, e.g. a variant column
+                    # the distributed path wrote: Spark merges the batch
+                    return False
             if total > self.inline_merge_target_rows:
                 return False
 
@@ -631,128 +679,33 @@ class ParquetMergeSink:
         self._swap_staged(staging, affected, row_schema)
         return True
 
-    def _try_collect_inline(self, env_batch: DataFrame):
-        """Inline fast path: materialize the micro-batch driver-side in ONE
-        job (rows + their target bucket), or return None to take the
-        distributed path. Falls back for over-threshold batches (backfills
-        must never be collected) and for truncate-carrying batches (the
-        distributed plan owns the clear-target semantics)."""
-        if self.inline_max_rows <= 0:
-            return None
-        if self._footer_rows_exceed_limit(env_batch):
-            # Backfill short-circuit: the batch's parquet footers already
-            # prove it is over the inline threshold — skip the probe job
-            # entirely instead of paying a wasted collect on every backfill
-            # batch. Footer counts are pre-filter (an upper bound), so this
-            # only ever declines inlining conservatively, never wrongly
-            # inlines.
-            return None
-        bucket = F.pmod(
-            F.hash(*[F.col(f"key.{c}") for c in self.pk_cols]),
-            F.lit(self.num_buckets),
-        )
-        rows = (
-            env_batch.filter(F.col("op").isNotNull())
-            .withColumn("__b", bucket)
-            .limit(self.inline_max_rows + 1)
-            .collect()
-        )
-        if len(rows) > self.inline_max_rows:
-            return None
-        if any(r["op"] == OP_TRUNCATE for r in rows):
-            return None
-        return rows
+    def _write_inline(self, tbl, won, row_schema, epoch_id) -> None:
+        """Merge one batch the shared ``InlineCollector`` pulled (``tbl``,
+        its last-per-key survivors ``won``). The driver-side merge
+        (``_merge_inline_driver``) takes it when its bounds hold; when that
+        declines — no table yet, a non-upsert mode, float or nested keys,
+        touched buckets over ``inline_merge_target_rows``, or on-disk
+        files pyarrow cannot read or cast — the survivors go back to the
+        JVM as ONE Arrow batch and the Spark MERGE joins against that
+        local relation, so the collect already paid is not repeated."""
+        import pyarrow.compute as pc
 
-    def _write_batch_inline(self, env_batch: DataFrame, rows, epoch_id) -> None:
-        import pyspark.sql.types as T
-
-        row_schema = T.StructType(env_batch.schema["after"].dataType.fields)
         field_names = [f.name for f in row_schema.fields]
         self._detect_evolution(
-            field_names,
-            lambda: min((r["source"]["pos"] for r in rows), default=0),
+            field_names, pc.min(tbl.column("__pos")).as_py()
         )
-        if not rows:
+        if tbl.num_rows == 0:
             if not self._has_buckets():
                 self._write_schema_sidecar(row_schema)
             return
-
-        # K4 reduction (last event per key by stream position) in Python —
-        # the join logic itself is still merge_flat_changes, shared with the
-        # distributed path. Position ties break on (ts_ns, op) descending
-        # with nulls smallest — the same secondary order
-        # reduce_last_per_key's window uses, so both paths pick the same
-        # survivor whenever the full order key differs.
-        # The order key is computed ONCE per row and stored beside the
-        # winner (recomputing it per comparison doubled the Python work of
-        # the inline hot loop — Row field access is name-lookup, not slot).
-        has_ts = "ts_ns" in rows[0].__fields__
-        latest: dict = {}
-        n_key = len(self.pk_cols)
-        for r in rows:
-            ts = r["ts_ns"] if has_ts else None
-            op = r["op"]
-            pos = r["source"]["pos"]
-            ok = (
-                # NULL pos sorts smallest, matching both the distributed
-                # window (nulls first ascending) and the Arrow path's
-                # null-flag lexsort key.
-                float("-inf") if pos is None else pos,
-                float("-inf") if ts is None else ts,
-                "" if op is None else op,
-            )
-            # A keyless event (op 'm' message / schema-change) groups under
-            # the all-null key, mirroring the distributed window's null-key
-            # partition.
-            k = tuple(r["key"]) if r["key"] is not None else (None,) * n_key
-            prev = latest.get(k)
-            if prev is None or ok >= prev[0]:
-                latest[k] = (ok, r)
-        data = []
-        for _, r in latest.values():
-            deleted = r["op"] == "d"
-            state = r["before"] if deleted else r["after"]
-            vals = tuple(
-                None if state is None else state[f] for f in field_names
-            )
-            data.append((*vals, deleted, r["op"]))
-        flat_schema = T.StructType(
-            [
-                # Nullable regardless of the event schema: a delete-rewrite
-                # row legitimately carries NULL state fields.
-                *(T.StructField(f.name, f.dataType, True) for f in row_schema.fields),
-                T.StructField("__deleted", T.BooleanType(), False),
-                T.StructField("__op", T.StringType(), True),
-            ]
-        )
-        # Arrow conversion + a single partition: a 32-slice pickled local
-        # relation costs ~0.3s PER EVALUATION (and the merge plan evaluates
-        # the change side twice — broadcast build + union leg); one Arrow
-        # batch makes it effectively free. Fall back to the row-based
-        # conversion for types Arrow can't take from pandas (nested structs)
-        # AND when a genuine NaN is present — pandas can't distinguish NaN
-        # from NULL in a float column, so the Arrow path would turn a real
-        # NaN value into NULL (the tuple path preserves both).
-        import pandas as pd
-
-        has_nan = any(
-            isinstance(v, float) and v != v for row in data for v in row
-        )
-        col_names = [f.name for f in flat_schema.fields]
-        try:
-            if has_nan:
-                raise ValueError("NaN present: pandas would conflate with null")
-            pdf = pd.DataFrame(data, columns=col_names)
-            flat_local = self.spark.createDataFrame(pdf, schema=flat_schema)
-        except Exception:
-            flat_local = self.spark.createDataFrame(data, flat_schema)
-        flat_local = flat_local.coalesce(1)
-
-        affected = sorted({r["__b"] for r in rows})
+        affected = sorted(set(tbl.column("__b").to_pylist()))
+        if self._merge_inline_driver(won, affected, row_schema, epoch_id):
+            return
+        flat_local = self._flat_local_from_won(won, row_schema)
         target = self._read_target(row_schema)
-        target_sub = target.filter(F.col(BUCKET_COL).isin(affected)).drop(
-            BUCKET_COL
-        )
+        target_sub = target.filter(
+            F.col(BUCKET_COL).isin(affected)
+        ).drop(BUCKET_COL)
         merged = merge_flat_changes(
             target_sub,
             flat_local,
@@ -768,62 +721,17 @@ class ParquetMergeSink:
 
     def write_batch(self, env_batch: DataFrame, epoch_id: int | None = None) -> None:
         self._recover_swap()
-        try:
-            verdict, payload = self._prepare_inline_arrow(env_batch, epoch_id)
-        except Exception:  # pragma: no cover - Arrow-unfriendly schema
-            verdict, payload = None, None
-        if verdict == "done":
+        got = self._inline.collect(env_batch, self.inline_max_rows)
+        if got is not None:
+            self._write_inline(*got, epoch_id)
             return
-        if verdict == "inline":
-            won, affected, row_schema = payload
-            if self._merge_inline_driver(won, affected, row_schema,
-                                         epoch_id):
-                return
-            flat_local = self._flat_local_from_won(won, row_schema)
-            target = self._read_target(row_schema)
-            target_sub = target.filter(
-                F.col(BUCKET_COL).isin(affected)
-            ).drop(BUCKET_COL)
-            merged = merge_flat_changes(
-                target_sub,
-                flat_local,
-                self.pk_cols,
-                insert_mode=self.insert_mode,
-                broadcast=True,
-            )
-            out = merged.withColumn(BUCKET_COL, self._bucket_of())
-            self._stage_and_swap(
-                out, affected, has_truncate=False, row_schema=row_schema,
-                epoch_id=epoch_id,
-            )
-            return
-        if verdict is None:
-            # Row-based inline fallback (kept for Arrow-unfriendly shapes).
-            rows = self._try_collect_inline(env_batch)
-            if rows is not None:
-                self._write_batch_inline(env_batch, rows, epoch_id)
-                return
         flat_like = extract_new_record_state(
             env_batch.filter(F.col("op").isNotNull()), delete_handling="drop"
         )
         target = self._read_target(flat_like.schema)
-        # Evolution detection against the authoritative on-disk column set:
-        # the _schema.json sidecar written after every batch. A bare
-        # spark.read.parquet(path).schema samples ONE footer; after an
-        # evolution the buckets are heterogeneous, and sampling a
-        # pre-evolution bucket would re-classify an existing column as
-        # "added". The explicit-schema target read above already surfaces
-        # genuinely-new columns as NULL for old buckets, so detection here
-        # only feeds the schema-history registry — it must never rewrite
-        # target columns.
-        self._detect_evolution(
-            flat_like.columns,
-            lambda: env_batch.agg(F.min("source.pos")).collect()[0][0],
-        )
-
-        # Affected buckets + truncate flag in ONE aggregation job: the
-        # Delta-MERGE-style pruning step, driver cost O(num_buckets), never
-        # O(rows).
+        # Affected buckets, truncate flag and min position in ONE
+        # aggregation job: the Delta-MERGE-style pruning step, driver cost
+        # O(num_buckets), never O(rows).
         stats = env_batch.agg(
             F.max(
                 F.when(F.col("op") == OP_TRUNCATE, 1).otherwise(0)
@@ -834,7 +742,18 @@ class ParquetMergeSink:
                     F.lit(self.num_buckets),
                 )
             ).alias("buckets"),
+            F.min("source.pos").alias("min_pos"),
         ).collect()[0]
+        # Evolution detection against the authoritative on-disk column set:
+        # the _schema.json sidecar written after every batch. A bare
+        # spark.read.parquet(path).schema samples ONE footer; after an
+        # evolution the buckets are heterogeneous, and sampling a
+        # pre-evolution bucket would re-classify an existing column as
+        # "added". The explicit-schema target read above already surfaces
+        # genuinely-new columns as NULL for old buckets, so detection here
+        # only feeds the schema-history registry — it must never rewrite
+        # target columns.
+        self._detect_evolution(flat_like.columns, stats["min_pos"])
         has_truncate = bool(stats["has_trunc"])
         if has_truncate:
             affected = None  # whole table rewrite (truncate clears it anyway)

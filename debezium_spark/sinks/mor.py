@@ -112,7 +112,8 @@ class LogMergeSink:
         # DRIVER with pyarrow — zero further Spark jobs. One job per batch
         # instead of the distributed delta plan's 3-4 (broadcast truncate
         # agg + window shuffle + write). Batches above the bound
-        # (backfills) keep the fully distributed plan.
+        # (backfills), and batches of a schema the collector declines,
+        # keep the fully distributed plan.
         self.inline_max_rows = inline_max_rows
         self._inline = InlineCollector(pk_cols)
         os.makedirs(self._delta_root, exist_ok=True)
@@ -192,9 +193,9 @@ class LogMergeSink:
         row fields + ``__deleted`` + ``__op`` — exactly the distributed
         ``_delta_frame`` schema, types carried unchanged from the
         envelope's Arrow conversion), or ``None`` to take the distributed
-        path (over-threshold batch, truncate present, reserved-name
-        collision). Raises on the unexpected — write_batch falls back to
-        the distributed plan."""
+        path: a schema the collector declines (reserved helper names,
+        ``inline_decline`` types), an over-threshold batch, or a truncate.
+        Any other error surfaces from write_batch."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -244,10 +245,7 @@ class LogMergeSink:
                 f"(marker epoch={m}, neg_floor={floor}); a delta written "
                 "there would be invisible"
             )
-        try:
-            inline_tbl = self._prepare_delta_inline(env_batch)
-        except Exception:  # pragma: no cover - Arrow-unfriendly schema
-            inline_tbl = None
+        inline_tbl = self._prepare_delta_inline(env_batch)
         delta = None if inline_tbl is not None else self._delta_frame(env_batch)
         cols = (
             set(inline_tbl.column_names)

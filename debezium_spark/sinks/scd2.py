@@ -28,6 +28,8 @@ the corpus.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -90,25 +92,29 @@ class Scd2Sink:
         )
 
     def _existing(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        """The table, or None before its first write (no ``__bucket=`` dir
+        yet). A table that exists but cannot be read raises: treating it
+        as absent would rewrite its touched buckets from the batch alone
+        and drop their history."""
+        if not os.path.isdir(self.path) or not any(
+            e.startswith("__bucket=") for e in os.listdir(self.path)
+        ):
             return None
+        return self.spark.read.parquet(self.path)
 
     # -- contract ----------------------------------------------------------
     def write_batch(
         self, env_batch: DataFrame, epoch_id: int | None = None
     ) -> None:
-        batch = self._flatten(env_batch)
-        if not batch.head(1):
+        batch = self._flatten(env_batch).withColumn(
+            "__bucket", self._bucket(*self.key_cols)
+        )
+        # one aggregation: the touched buckets, empty for an empty batch
+        touched_buckets = batch.agg(F.collect_set("__bucket")).first()[0]
+        if not touched_buckets:
             return
-        batch = batch.withColumn("__bucket", self._bucket(*self.key_cols))
         existing = self._existing()
         if existing is not None:
-            touched_buckets = [
-                r["__bucket"]
-                for r in batch.select("__bucket").distinct().collect()
-            ]
             in_scope = existing.filter(
                 F.col("__bucket").isin(touched_buckets)
             )

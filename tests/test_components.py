@@ -734,20 +734,60 @@ def test_charlm_quality_separates_fluent_from_gibberish(spark):
     assert out[5]["n_bigrams"] == 0 and out[5]["bits_per_char"] is None
 
 
+def _charlm_counts_expr(base):
+    """Per-character substr/explode form of charlm_quality's counting: the
+    parity reference for the numpy kernel. ``base`` is ``(__id, __s)``
+    with normalized text; returns the per-document bigram counts
+    ``(__id, __bg, __cnt)`` and the vocabulary size ``(__v,)``."""
+    bigrams = F.when(
+        F.length("__s") >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.length("__s") - 1),
+            lambda i: F.col("__s").substr(i, F.lit(2)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    db = (
+        base.select("__id", F.explode(bigrams).alias("__bg"))
+        .groupBy("__id", "__bg")
+        .agg(F.count("*").alias("__cnt"))
+    )
+    vocab = (
+        base.select(
+            F.explode(
+                F.transform(
+                    F.sequence(
+                        F.lit(1), F.greatest(F.length("__s"), F.lit(1))
+                    ),
+                    lambda i: F.col("__s").substr(i, F.lit(1)),
+                )
+            ).alias("__ch")
+        )
+        .filter(F.col("__ch") != "")
+        .agg(F.count_distinct("__ch").alias("__v"))
+    )
+    return db, vocab
+
+
 def test_charlm_arrow_equals_expr(spark, sf_dir):
-    """impl='arrow' (numpy distinct-bigram kernel) must equal the
-    expression variant exactly — it's exact counting, so any diff is a
-    kernel bug (packing, unicode decode), not float luck."""
-    from debezium_spark.analytics.text import charlm_quality
+    """The numpy distinct-bigram kernel must equal the expression form
+    exactly — it's exact counting, so any diff is a kernel bug (packing,
+    unicode decode), not float luck. charlm_quality scores from these
+    counts and the vocabulary size alone."""
+    from debezium_spark.analytics.text import (
+        _charlm_doc_counts,
+        normalize_text,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = sorted(map(tuple, charlm_quality(docs, impl="expr").collect()))
-    b = sorted(map(tuple, charlm_quality(docs, impl="arrow").collect()))
-    assert a == b
-    import pytest
-
-    with pytest.raises(ValueError):
-        charlm_quality(docs, impl="bogus")
+    base = docs.select(
+        F.col("doc_id").alias("__id"), normalize_text(F.col("text")).alias("__s")
+    )
+    db, chars = _charlm_doc_counts(base)
+    want_db, want_vocab = _charlm_counts_expr(base)
+    assert sorted(map(tuple, db.collect())) == sorted(
+        map(tuple, want_db.collect())
+    )
+    assert chars.distinct().count() == want_vocab.first()["__v"] > 0
 
 
 def test_incremental_spans_vs_index(spark):

@@ -137,6 +137,57 @@ def test_schema_evolution_records_to_registry(spark, sf_dir, tmp_path):
     assert rows[2] == "T1" and rows[1] is None
 
 
+def test_distributed_evolution_batch_runs_no_extra_job(spark, tmp_path):
+    """On the distributed path the batch's min position comes out of the
+    same aggregation as its touched buckets and truncate flag: a batch
+    that evolves the schema runs as many Spark jobs as one that does not,
+    and the registry records the batch's min position."""
+    from debezium_spark.envelope import make_envelope
+
+    class Registry:  # records in Python, so it runs no job of its own
+        def __init__(self):
+            self.rows = []
+
+        def record(self, table, version, cols, pos):
+            self.rows.append((table, version, cols, pos))
+
+    def batch(rows, extra=False):
+        df = spark.createDataFrame(rows, "id long, op string, pos long")
+        tier = [F.lit("T1").alias("tier")] if extra else []
+        row = F.struct(F.col("id"), *tier)
+        return make_envelope(
+            df, key=F.struct(F.col("id")),
+            before=F.when(F.col("op") == "d", row),
+            after=F.when(F.col("op") != "d", row),
+            op=F.col("op"), db="db", table="t", pos=F.col("pos"),
+        )
+
+    reg = Registry()
+    sink = ParquetMergeSink(
+        spark, str(tmp_path / "t"), ["id"], num_buckets=1,
+        inline_max_rows=0, schema_registry=reg, table_name="t",
+    )
+    sc = spark.sparkContext
+
+    def jobs(env, epoch):
+        group = f"cow-distributed-evolution-{epoch}"
+        sc.setJobGroup(group, "distributed evolution")
+        try:
+            sink.write_batch(env, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sink.write_batch(batch([(1, "c", 1)]), 0)
+    plain = jobs(batch([(2, "c", 7)]), 1)
+    evolved = jobs(batch([(3, "c", 9), (4, "c", 8)], extra=True), 2)
+    assert evolved == plain
+    assert reg.rows == [("t", 1, ["id", "tier", "__bucket"], 8)]
+    assert sorted(map(tuple, sink.read().collect())) == [
+        (1, None), (2, None), (3, "T1"), (4, "T1"),
+    ]
+
+
 def test_evolved_column_survives_later_batches_in_other_buckets(
     spark, sf_dir, tmp_path
 ):
@@ -197,7 +248,7 @@ def test_evolved_column_survives_later_batches_in_other_buckets(
 
 @pytest.mark.parametrize("kind", ["cow", "mor"])
 def test_inline_select_list_built_once_per_schema(
-    spark, sf_dir, tmp_path, kind
+    spark, sf_dir, tmp_path, monkeypatch, kind
 ):
     """Both sinks share one inline collector that builds its select
     Columns once per batch schema: a second batch of the same schema
@@ -221,7 +272,9 @@ def test_inline_select_list_built_once_per_schema(
 
     # every batch below must take the Arrow inline path
     if kind == "cow":
-        sink._try_collect_inline = not_inline
+        from debezium_spark.sinks import merge
+
+        monkeypatch.setattr(merge, "merge_changes", not_inline)
     else:
         sink._delta_frame = not_inline
 
@@ -475,20 +528,24 @@ def test_net_effect_compaction_semantics(spark):
 def test_inline_probe_short_circuits_on_footer_counts(spark, tmp_path):
     """Backfill batches skip the limit(n+1) probe job entirely: parquet
     footer row counts (a driver-local metadata read) already prove the
-    batch is over the inline threshold. In-memory batches and under-limit
-    files keep the probe's verdict."""
-    from debezium_spark.sinks.merge import ParquetMergeSink
+    batch is over the inline threshold. In-memory batches, unreadable
+    footers and under-limit files keep the probe's verdict."""
+    from debezium_spark.sinks.merge import footer_rows_exceed
 
     p = str(tmp_path / "batch")
     spark.range(100).write.parquet(p)
     file_backed = spark.read.parquet(p)
-    small = ParquetMergeSink(spark, str(tmp_path / "t1"), ["id"], inline_max_rows=10)
-    big = ParquetMergeSink(spark, str(tmp_path / "t2"), ["id"], inline_max_rows=1000)
-    assert small._footer_rows_exceed_limit(file_backed) is True
-    assert big._footer_rows_exceed_limit(file_backed) is False
+    assert footer_rows_exceed(file_backed, 10) is True
+    assert footer_rows_exceed(file_backed, 1000) is False
     # no files behind it → footer check abstains (probe decides)
     mem = spark.range(100)
-    assert small._footer_rows_exceed_limit(mem) is False
+    assert footer_rows_exceed(mem, 10) is False
+    # a footer pyarrow cannot read → abstains too
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_bytes(b"not a parquet file")
+    unreadable = spark.read.schema("id long").parquet(str(bad))
+    assert footer_rows_exceed(unreadable, 10) is False
 
 
 def test_events_leaves_session_timezone_untouched(spark, sf_dir):

@@ -232,12 +232,55 @@ def test_near_dup_pairs_runs_no_repartition_or_shingle_arrays(spark, sf_dir):
     assert plan.count("MapInArrow") == 2  # the MinHash and Jaccard kernels
 
 
+def _simhash_expr(df, text_col="text", bits=16):
+    """Pure-Catalyst SimHash: the parity reference for the numpy kernel.
+
+    Each token hashes as a polynomial rolling hash of its char codes (mod
+    MINHASH_PRIME) through one affine map, the shape the DuckDB oracle
+    mirrors; each bit is one interpreted vote fold over the token hashes."""
+    from debezium_spark.analytics.text import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_PRIME,
+        SHINGLE_POLY_BASE,
+        tokenize,
+    )
+
+    P = MINHASH_PRIME
+
+    def token_hash(tok):
+        codes = F.transform(
+            F.sequence(F.lit(1), F.length(tok)),
+            lambda i: F.ascii(tok.substr(i, F.lit(1))).cast("long"),
+        )
+        base = F.aggregate(
+            codes,
+            F.lit(0).cast("long"),
+            lambda acc, c: (acc * SHINGLE_POLY_BASE + c) % P,
+        )
+        return (base * MINHASH_A[0] + MINHASH_B[0]) % P
+
+    def bit_voter(j):
+        return lambda a, h: a + F.when(
+            F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
+        ).otherwise(-1)
+
+    out = df.withColumn(
+        "__th", F.transform(tokenize(F.col(text_col)), token_hash)
+    )
+    acc = F.lit(0).cast("long")
+    for j in range(bits):
+        vote = F.aggregate(F.col("__th"), F.lit(0), bit_voter(j))
+        acc = acc + F.when(vote > 0, F.lit(2 ** j).cast("long")).otherwise(0)
+    return out.withColumn("simhash", acc).drop("__th")
+
+
 def test_simhash_numpy_matches_expression_variant(spark, sf_dir):
-    from debezium_spark.analytics.text import simhash, simhash_expr
+    from debezium_spark.analytics.text import simhash
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     a = simhash(docs).select("doc_id", "simhash")
-    b = simhash_expr(docs).select("doc_id", "simhash")
+    b = _simhash_expr(docs).select("doc_id", "simhash")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 

@@ -159,3 +159,49 @@ def test_streaming_feed_matches_batch_operator(spark, sf_dir, tmp_path):
         .collect()
     }
     assert after == before
+
+
+def test_unreadable_table_raises_and_keeps_files(spark, sink):
+    """A table that exists but cannot be read is not "no table": the
+    write raises and every file stays as it was. Treating the read error
+    as an absent table rewrote the touched bucket from the batch alone,
+    dropping the other keys' and the key's earlier versions."""
+    import glob
+    import os
+
+    sink.write_batch(
+        _env(spark, [(1, "c", "A", 1.0, 10), (2, "c", "B", 2.0, 11)]), 0
+    )
+    files = sorted(glob.glob(os.path.join(sink.path, "__bucket=*", "*")))
+    assert files
+    for p in files:
+        with open(p, "wb") as f:
+            f.write(b"garbage")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        sink.write_batch(_env(spark, [(1, "u", "C", 3.0, 20)]), 1)
+    assert sorted(glob.glob(os.path.join(sink.path, "__bucket=*", "*"))) == files
+    for p in files:
+        with open(p, "rb") as f:
+            assert f.read() == b"garbage"
+
+
+def test_batch_job_budget(spark, sink):
+    """The touched buckets and the empty-batch check are one aggregation:
+    a batch on an existing table runs 10 Spark jobs (12 when a head(1)
+    and a separate distinct().collect() of the buckets ran first)."""
+    sc = spark.sparkContext
+    jobs = []
+    batches = [
+        _env(spark, [(1, "c", "A", 1.0, 10), (2, "c", "B", 2.0, 11)]),
+        _env(spark, [(1, "u", "C", 3.0, 20)]),
+    ]
+    for epoch, batch in enumerate(batches):
+        group = f"scd2-job-budget-{epoch}"
+        sc.setJobGroup(group, "scd2 job budget")
+        try:
+            sink.write_batch(batch, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] == 10, jobs
+    assert _versions(sink)[(1, 10)] == (20, False, "A")
