@@ -329,7 +329,6 @@ def lsh_candidate_pairs(
     num_hashes: int = 8,
     rows_per_band: int = 2,
     k: int = 5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Banded-LSH near-dup candidate pairs (a < b), joined within buckets only.
 
@@ -338,36 +337,51 @@ def lsh_candidate_pairs(
     all-pairs comparison; at 100 TB the bucket join shuffles O(docs·bands)
     small rows, and AQE's skew-join splits any pathological bucket.
 
-    ``impl='arrow'`` (default) emits each bucket's pairs from a numpy hot
-    loop behind ONE mapInPandas over the bucket-key shuffle — in-bucket
-    pair counts are quadratic in bucket size (the sf0.1 fixtures hit ~600k
-    raw pairs from 5k docs), and Catalyst evaluates the per-pair
-    struct/filter lambdas interpreted, which made pair EMISSION (not the
-    shuffle, not the signatures) the whole stage's cost. Identical pair
-    set, same first-matching-band suppression, same shuffle shape;
-    ``impl='expr'`` keeps the pure-expression variant (the spec and the
-    zero-Python fallback, property-tested equal).
+    Pairs come from a numpy hot loop behind ONE mapInPandas over the
+    bucket-key shuffle (``_lsh_candidate_pairs_arrow``) — in-bucket pair
+    counts are quadratic in bucket size (the sf0.1 fixtures hit ~600k raw
+    pairs from 5k docs), and Catalyst evaluates the per-pair struct/filter
+    lambdas interpreted, which made pair EMISSION (not the shuffle, not
+    the signatures) the whole stage's cost.
 
-    The arrow path's numpy kernel needs integral doc ids (its output
-    schema is ``a long, b long``); for string/decimal/other id types the
-    call transparently takes the expression variant, which orders any
-    orderable type via least/greatest. NULL texts (→ NULL signatures) are
-    handled identically by both: NULL band keys group together, and the
-    all-NULL bucket's pairs emit exactly once (from band 0)."""
-    if impl == "arrow":
-        from pyspark.sql import types as T
+    The kernel needs integral doc ids (its output schema is ``a long, b
+    long``) and packed numeric band keys (``rows_per_band`` ≤ 2). Any
+    other input takes the pure-expression variant
+    (``_lsh_candidate_pairs_expr``: identical pair set, same
+    first-matching-band suppression, same shuffle shape), which orders
+    any orderable id type via least/greatest and keys wide bands by md5.
+    NULL texts (→ NULL signatures) are handled identically by both: NULL
+    band keys group together, and the all-NULL bucket's pairs emit
+    exactly once (from band 0)."""
+    from pyspark.sql import types as T
 
-        if isinstance(
+    variant = (
+        _lsh_candidate_pairs_arrow
+        if rows_per_band <= 2
+        and isinstance(
             df.schema[id_col].dataType,
             (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        ):
-            return _lsh_candidate_pairs_arrow(
-                df, text_col, id_col,
-                num_hashes=num_hashes, rows_per_band=rows_per_band, k=k,
-            )
-        impl = "expr"  # non-integral ids: numpy int64 kernel can't hold them
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r} (want 'arrow' or 'expr')")
+        )
+        else _lsh_candidate_pairs_expr
+    )
+    return variant(
+        df, text_col, id_col,
+        num_hashes=num_hashes, rows_per_band=rows_per_band, k=k,
+    )
+
+
+def _lsh_candidate_pairs_expr(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    num_hashes: int,
+    rows_per_band: int,
+    k: int,
+) -> DataFrame:
+    """Pure-expression pair emission for :func:`lsh_candidate_pairs`: the
+    route for non-integral ids and wide (md5-keyed) bands, and the spec
+    the Arrow kernel is tested against."""
     num_bands = num_hashes // rows_per_band
     sig = minhash_signature(
         df.select(id_col, text_col), text_col, num_hashes, k
@@ -477,15 +491,8 @@ def _lsh_candidate_pairs_arrow(
     its rows by bucket, takes triu indices per bucket, applies the
     first-matching-band suppression as vectorized column compares, and
     emits canonical (a < b) pairs. Per-partition group loop is O(buckets /
-    partitions) Python iterations; everything per-pair is numpy."""
-    if rows_per_band > 2:
-        # Wide bands use md5 string keys; the numeric fast path doesn't
-        # apply, and the expression variant is already fine there.
-        return lsh_candidate_pairs(
-            df, text_col, id_col,
-            num_hashes=num_hashes, rows_per_band=rows_per_band, k=k,
-            impl="expr",
-        )
+    partitions) Python iterations; everything per-pair is numpy. Needs
+    integral ids and ``rows_per_band`` ≤ 2 (packed numeric band keys)."""
     num_bands = num_hashes // rows_per_band
     sig = minhash_signature(
         df.select(id_col, text_col), text_col, num_hashes, k

@@ -944,7 +944,6 @@ def semdedup(
     iterations: int = 1,
     threshold: float = 0.95,
     centroids: DataFrame | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """SemDeDup — semantic (embedding-space) deduplication via cluster
     pruning (Abbas et al. 2023, arXiv:2303.09540): k-means the corpus,
@@ -972,19 +971,19 @@ def semdedup(
     to reuse a trained index — train-once/dedup-many, same lifecycle as
     ``knn_ivf``'s prebuilt path.
 
-    ``impl='arrow'`` (default) runs the pairwise stage as a numpy kernel
-    behind ONE applyInPandas over the cell grouping — in-cell pair counts
+    The pairwise stage runs as a numpy kernel behind ONE applyInPandas
+    over the cell grouping (``_semdedup_arrow``) — in-cell pair counts
     are quadratic in cell size and Catalyst evaluates the per-pair fold
     lambdas interpreted, which makes pair SCORING (not the shuffle, not
     the training) the stage's whole cost, exactly as x6's LSH pair
     emission before its Arrow kernel. The kernel folds dot/norm sums with
     ``np.cumsum`` — the same left-to-right IEEE addition order as the
-    column-expression fold — so both impls (and the relational replay)
-    agree bit-for-bit; ``impl='expr'`` keeps the pure-expression variant,
-    property-tested equal. Non-integral id columns transparently take the
-    expression variant (the kernel's output schema is ``long``).
-    Zero-norm vectors are undefined input in every variant (cosine has no
-    value there); the kernel never marks them duplicates.
+    column-expression fold — so both variants (and the relational
+    replay) agree bit-for-bit. Non-integral id columns take the
+    pure-expression variant (``_semdedup_expr``; the kernel's output
+    schema is ``long``). Zero-norm vectors are undefined input in every
+    variant (cosine has no value there); the kernel never marks them
+    duplicates.
 
     Returns (``id_col``, cell, is_dup) for every input vector.
     """
@@ -1000,17 +999,25 @@ def semdedup(
         )
     )
     member = _nearest_cells(vectors, cents, id_col, vec_col, nprobe=1)
-    if impl == "arrow":
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
+    variant = (
+        _semdedup_arrow
         if isinstance(
             vectors.schema[id_col].dataType,
             (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        ):
-            return _semdedup_arrow(member, id_col, vec_col, threshold)
-        impl = "expr"
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r} (want 'arrow' or 'expr')")
+        )
+        else _semdedup_expr
+    )
+    return variant(member, id_col, vec_col, threshold)
+
+
+def _semdedup_expr(
+    member: DataFrame, id_col: str, vec_col: str, threshold: float
+) -> DataFrame:
+    """Pure-expression pairwise stage of :func:`semdedup`: a within-cell
+    self-join scored by column folds — the route for non-integral ids,
+    and the spec the numpy kernel is tested against."""
     e = member.select(
         F.col("cell"),
         F.col(id_col),

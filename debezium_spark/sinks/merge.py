@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import os
 
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -113,7 +114,6 @@ def inline_decline(row_schema) -> str | None:
     binary, boolean, date, timestamp, timestamp_ntz, and arrays, maps and
     structs of them) reads back from both sinks as the distributed path
     writes it."""
-    import pyspark.sql.types as T
 
     def walk(dt, where):
         if isinstance(dt, (T.YearMonthIntervalType, T.CalendarIntervalType)):
@@ -148,8 +148,6 @@ def inline_decline(row_schema) -> str | None:
 
 def _as_nullable(dt):
     """``dt`` with every nested field, element and value nullable."""
-    import pyspark.sql.types as T
-
     if isinstance(dt, T.StructType):
         return T.StructType(
             [
@@ -201,8 +199,6 @@ class InlineCollector:
         return self._selects[schema]
 
     def _build(self, schema):
-        import pyspark.sql.types as T
-
         declared = schema["after"].dataType
         row_schema = _as_nullable(T.StructType(declared.fields))
         field_names = [f.name for f in row_schema.fields]
@@ -364,6 +360,15 @@ class ParquetMergeSink:
     evolution mode ``basic`` adds missing optional columns from the event
     schema (JdbcSinkConnectorConfig.java:158-163,
     JdbcChangeEventSink.java:195-238).
+
+    Each batch takes one of three merges, chosen on the driver: the
+    driver merge (``_merge_inline_driver``: ONE job, the collect), path 2
+    (a collected batch the driver merge declines, joined as an Arrow
+    local relation) or the distributed branch (``_write_distributed``),
+    whose one stats aggregation decides the touched buckets and the
+    truncate. Path 2 and the distributed branch share one Spark tail
+    (``_merge_spark``). A batch lacking a column the table holds keeps
+    that column's values on every row it does not rewrite.
     """
 
     def __init__(
@@ -429,14 +434,7 @@ class ParquetMergeSink:
         happens to carry a narrower record schema."""
         import json
 
-        import pyspark.sql.types as T
-
-        prev = self._sidecar_schema()
-        if prev is not None:
-            have = {f.name for f in schema.fields}
-            schema = T.StructType(
-                [*schema.fields, *(f for f in prev.fields if f.name not in have)]
-            )
+        schema = self._target_schema(schema)
         os.makedirs(self.path, exist_ok=True)
         tmp = os.path.join(self.path, "_schema.json.tmp")
         with open(tmp, "w") as f:
@@ -446,8 +444,6 @@ class ParquetMergeSink:
     def _sidecar_schema(self):
         import json
 
-        import pyspark.sql.types as T
-
         p = os.path.join(self.path, "_schema.json")
         try:
             with open(p) as f:
@@ -455,26 +451,26 @@ class ParquetMergeSink:
         except (OSError, ValueError, KeyError):
             return None
 
-    def _read_target(self, row_schema) -> DataFrame:
-        import pyspark.sql.types as T
-
-        if self._has_buckets():
-            # Explicit schema (event schema + bucket column): no footer
-            # merging pass, and buckets written before a schema evolution
-            # read the new columns as NULL — same effect as mergeSchema at
-            # a fraction of the planning cost.
-            schema = T.StructType(
-                [*row_schema.fields, T.StructField(BUCKET_COL, T.IntegerType())]
-            )
-            return self.spark.read.schema(schema).parquet(self.path)
-        empty = self.spark.createDataFrame([], row_schema)
-        return empty.withColumn(BUCKET_COL, F.lit(0))
+    def _target_schema(self, row_schema):
+        """The schema a batch of ``row_schema`` merges under: its row
+        fields, then every column the table holds (the sidecar's union)
+        that the batch lacks."""
+        sidecar = self._sidecar_schema()
+        if sidecar is None:
+            return row_schema
+        have = set(row_schema.fieldNames())
+        return T.StructType(
+            [*row_schema.fields,
+             *(f for f in sidecar.fields if f.name not in have)]
+        )
 
     def _detect_evolution(self, row_cols: list[str], min_pos) -> None:
-        """K6 schema-evolution detection against the on-disk column set; see
-        write_batch for why the sidecar (not one sampled footer) is the
-        authority. ``min_pos`` is the batch's min source.pos (None for an
-        empty batch), recorded when a change is."""
+        """K6 schema-evolution detection against the on-disk column set:
+        the sidecar's union, never one sampled footer (after an evolution
+        the buckets are heterogeneous, and a pre-evolution footer would
+        re-classify an existing column as added). It only feeds the
+        schema-history registry. ``min_pos`` is the batch's min
+        source.pos (None for an empty batch), recorded when a change is."""
         if self.schema_evolution != "basic":
             return
         if self._has_buckets():
@@ -507,7 +503,6 @@ class ParquetMergeSink:
         the Spark-side MERGE joins against."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyspark.sql.types as T
 
         field_names = [f.name for f in row_schema.fields]
         deleted = pc.fill_null(pc.equal(won.column("__op"), "d"), False)
@@ -536,29 +531,46 @@ class ParquetMergeSink:
         job), the upsert anti-join is a key-set filter, and the merged
         buckets go back through the shared staging+swap protocol — the
         batch's ONLY Spark job stays the ``InlineCollector`` collect.
-        Returns True when fully handled;
-        returns False (no side effects) whenever exactness or scale is at
-        risk: non-upsert modes, no table yet, floating-point or nested
+        A table's first batch reads no files. Returns True when fully
+        handled; returns False (no side effects) whenever exactness or
+        scale is at risk: non-upsert modes, floating-point or nested
         key columns (Spark's NaN/complex equality differs from Python's),
         a survivor whose key struct differs from its state PK (the Spark
         path re-buckets by STATE pk — unreproducible without Spark's
-        hash), over-threshold target buckets, or target files pyarrow
+        hash), an on-disk column the batch lacks of an ``inline_decline``
+        type, over-threshold target buckets, or target files pyarrow
         cannot read or whose arrow types don't cast to the batch's."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        if (
-            self.insert_mode != "upsert"
-            or self.inline_merge_target_rows <= 0
-            or not self._has_buckets()
-        ):
+        if self.insert_mode != "upsert" or self.inline_merge_target_rows <= 0:
             return False
         field_names = [f.name for f in row_schema.fields]
+        schema = self._target_schema(row_schema)
+        extra = T.StructType(schema.fields[len(field_names):])
+        if inline_decline(extra):
+            return False
         batch_schema = pa.schema(
             [won.schema.field(f) for f in field_names]
+            + [pa.field(f.name, to_arrow_type(_as_nullable(f.dataType)))
+               for f in extra.fields]
         )
+
+        def conform(t):
+            # ``t`` under batch_schema; a column it lacks (a pre-evolution
+            # bucket, or an on-disk column the batch lacks) reads NULL,
+            # as in the Spark tail's explicit-schema read
+            return pa.table(
+                [
+                    t.column(f.name).cast(f.type) if f.name in t.column_names
+                    else pa.nulls(t.num_rows, type=f.type)
+                    for f in batch_schema
+                ],
+                schema=batch_schema,
+            )
         for c in self.pk_cols:
             t = batch_schema.field(c).type
             if pa.types.is_floating(t) or pa.types.is_nested(t):
@@ -615,19 +627,7 @@ class ParquetMergeSink:
                         keys.add(kt)
                 parts = []
                 for p in files_by_bucket[b]:
-                    t = pq.read_table(p)
-                    cols = []
-                    for f in batch_schema:
-                        if f.name in t.column_names:
-                            col = t.column(f.name)
-                            if col.type != f.type:
-                                col = col.cast(f.type)
-                        else:
-                            # pre-evolution bucket: new columns read NULL,
-                            # same as _read_target's explicit-schema read
-                            col = pa.nulls(t.num_rows, type=f.type)
-                        cols.append(col)
-                    tt = pa.table(cols, schema=batch_schema)
+                    tt = conform(pq.read_table(p))
                     if keys:
                         mask = np.fromiter(
                             (
@@ -645,10 +645,8 @@ class ParquetMergeSink:
                         if not mask.all():
                             tt = tt.filter(pa.array(mask))
                     parts.append(tt)
-                alive = sub.filter(
-                    pa.array(~deleted[sel])
-                ).select(field_names)
-                parts.append(alive.cast(batch_schema))
+                alive = sub.filter(pa.array(~deleted[sel])).select(field_names)
+                parts.append(conform(alive))
                 merged_by_bucket[b] = pa.concat_tables(parts)
         except pa.lib.ArrowException:
             # Any Arrow read/cast failure (ArrowInvalid, but also
@@ -676,18 +674,19 @@ class ParquetMergeSink:
                 compression="snappy",
             )
         os.makedirs(staging, exist_ok=True)
-        self._swap_staged(staging, affected, row_schema)
+        self._swap_staged(staging, affected, schema)
         return True
 
     def _write_inline(self, tbl, won, row_schema, epoch_id) -> None:
         """Merge one batch the shared ``InlineCollector`` pulled (``tbl``,
         its last-per-key survivors ``won``). The driver-side merge
-        (``_merge_inline_driver``) takes it when its bounds hold; when that
-        declines — no table yet, a non-upsert mode, float or nested keys,
-        touched buckets over ``inline_merge_target_rows``, or on-disk
-        files pyarrow cannot read or cast — the survivors go back to the
-        JVM as ONE Arrow batch and the Spark MERGE joins against that
-        local relation, so the collect already paid is not repeated."""
+        (``_merge_inline_driver``) takes it when its bounds hold, a new
+        table's first batch included; when that declines — a non-upsert
+        mode, float or nested keys, touched buckets over
+        ``inline_merge_target_rows``, or on-disk files pyarrow cannot read
+        or cast — the survivors go back to the JVM as ONE Arrow batch
+        (path 2) and ``_merge_spark`` joins against that local relation,
+        so the collect already paid is not repeated."""
         import pyarrow.compute as pc
 
         field_names = [f.name for f in row_schema.fields]
@@ -701,22 +700,9 @@ class ParquetMergeSink:
         affected = sorted(set(tbl.column("__b").to_pylist()))
         if self._merge_inline_driver(won, affected, row_schema, epoch_id):
             return
-        flat_local = self._flat_local_from_won(won, row_schema)
-        target = self._read_target(row_schema)
-        target_sub = target.filter(
-            F.col(BUCKET_COL).isin(affected)
-        ).drop(BUCKET_COL)
-        merged = merge_flat_changes(
-            target_sub,
-            flat_local,
-            self.pk_cols,
-            insert_mode=self.insert_mode,
-            broadcast=True,
-        )
-        out = merged.withColumn(BUCKET_COL, self._bucket_of())
-        self._stage_and_swap(
-            out, affected, has_truncate=False, row_schema=row_schema,
-            epoch_id=epoch_id,
+        self._merge_spark(
+            self._flat_local_from_won(won, row_schema), affected, row_schema,
+            epoch_id,
         )
 
     def write_batch(self, env_batch: DataFrame, epoch_id: int | None = None) -> None:
@@ -724,18 +710,24 @@ class ParquetMergeSink:
         got = self._inline.collect(env_batch, self.inline_max_rows)
         if got is not None:
             self._write_inline(*got, epoch_id)
-            return
-        flat_like = extract_new_record_state(
-            env_batch.filter(F.col("op").isNotNull()), delete_handling="drop"
-        )
-        target = self._read_target(flat_like.schema)
-        # Affected buckets, truncate flag and min position in ONE
-        # aggregation job: the Delta-MERGE-style pruning step, driver cost
-        # O(num_buckets), never O(rows).
-        stats = env_batch.agg(
-            F.max(
-                F.when(F.col("op") == OP_TRUNCATE, 1).otherwise(0)
-            ).alias("has_trunc"),
+        else:
+            self._write_distributed(env_batch, epoch_id)
+
+    def _write_distributed(self, env_batch: DataFrame, epoch_id) -> None:
+        """A batch the inline collector declined. ONE aggregation job
+        yields its touched buckets, min position and last truncate
+        position — the Delta-MERGE-style pruning step, driver cost
+        O(num_buckets), never O(rows). The change set is then planned as
+        ``merge_changes`` builds it, with the truncate already decided:
+        it drops every event before it and clears the table, so
+        ``_merge_spark`` reads no old bucket. The truncate position is
+        batch-wide, as ``merge_changes``' target clear is: a sink holds
+        one table (``MultiTableSink`` slices per table before it)."""
+        events = env_batch.filter(F.col("op").isNotNull())
+        is_trunc = F.col("op") == OP_TRUNCATE
+        stats = events.agg(
+            F.max(is_trunc).alias("has_trunc"),
+            F.max(F.when(is_trunc, F.col("source.pos"))).alias("trunc_pos"),
             F.collect_set(
                 F.pmod(
                     F.hash(*[F.col(f"key.{c}") for c in self.pk_cols]),
@@ -744,44 +736,47 @@ class ParquetMergeSink:
             ).alias("buckets"),
             F.min("source.pos").alias("min_pos"),
         ).collect()[0]
-        # Evolution detection against the authoritative on-disk column set:
-        # the _schema.json sidecar written after every batch. A bare
-        # spark.read.parquet(path).schema samples ONE footer; after an
-        # evolution the buckets are heterogeneous, and sampling a
-        # pre-evolution bucket would re-classify an existing column as
-        # "added". The explicit-schema target read above already surfaces
-        # genuinely-new columns as NULL for old buckets, so detection here
-        # only feeds the schema-history registry — it must never rewrite
-        # target columns.
-        self._detect_evolution(flat_like.columns, stats["min_pos"])
-        has_truncate = bool(stats["has_trunc"])
-        if has_truncate:
-            affected = None  # whole table rewrite (truncate clears it anyway)
-            target_sub = target.drop(BUCKET_COL)
+        changes = events.filter(~is_trunc)
+        affected = stats["buckets"]
+        if stats["has_trunc"]:
+            affected = None
+            if stats["trunc_pos"] is not None:
+                changes = changes.filter(
+                    F.col("source.pos") >= stats["trunc_pos"]
+                )
+        flat = extract_new_record_state(
+            reduce_last_per_key(changes), delete_handling="rewrite",
+            add_fields=("op",),
+        )
+        row_schema = T.StructType(flat.schema.fields[:-2])  # less __deleted, __op
+        self._detect_evolution(row_schema.fieldNames(), stats["min_pos"])
+        self._merge_spark(flat, affected, row_schema, epoch_id)
+
+    def _merge_spark(self, flat: DataFrame, affected, row_schema,
+                     epoch_id) -> None:
+        """The Spark merge tail of path 2 and the distributed branch.
+        ``flat`` is the reduced change set (row fields + ``__deleted`` +
+        ``__op``, unique per key); ``affected`` the touched buckets, or
+        None when a truncate cleared the table. Reads only those buckets
+        (explicit schema: no footer merging pass, and a column the batch
+        or an old bucket lacks reads NULL), merges, stages and swaps."""
+        schema = self._target_schema(row_schema)
+        if affected is None or not self._has_buckets():
+            target = self.spark.createDataFrame([], schema)
         else:
-            affected = stats["buckets"]
-            # Partition filter → parquet reads only the touched buckets.
-            target_sub = target.filter(
-                F.col(BUCKET_COL).isin(affected)
-            ).drop(BUCKET_COL)
-
-        merged = merge_changes(
-            target_sub,
-            env_batch,
-            self.pk_cols,
-            insert_mode=self.insert_mode,
-            broadcast_changes=True,  # a micro-batch by construction
-        )
-        out = merged.withColumn(BUCKET_COL, self._bucket_of())
-        self._stage_and_swap(
-            out, affected, has_truncate=has_truncate,
-            row_schema=flat_like.schema, epoch_id=epoch_id,
-        )
-
-    def _stage_and_swap(
-        self, out: DataFrame, affected, *, has_truncate: bool, row_schema,
-        epoch_id,
-    ) -> None:
+            on_disk = T.StructType(
+                [*schema.fields, T.StructField(BUCKET_COL, T.IntegerType())]
+            )
+            target = (
+                self.spark.read.schema(on_disk).parquet(self.path)
+                .filter(F.col(BUCKET_COL).isin(affected)).drop(BUCKET_COL)
+            )
+        for f in schema.fields[len(row_schema.fields):]:
+            flat = flat.withColumn(f.name, F.lit(None).cast(f.dataType))
+        out = merge_flat_changes(
+            target, flat, self.pk_cols, insert_mode=self.insert_mode,
+            broadcast=True,  # a micro-batch by construction
+        ).withColumn(BUCKET_COL, self._bucket_of())
         # Stage-then-swap: ONE job writes the merged buckets to a staging
         # dir (reading the live target is safe — nothing is overwritten),
         # then bucket directories move into place with driver fs renames.
@@ -795,7 +790,8 @@ class ParquetMergeSink:
         # deleted keys already absent) — so checkpoint-driven re-delivery
         # converges, which is the exactly-once-in-effect contract. Within
         # one bucket the rename-aside swap (``_replace_dir``) keeps a whole
-        # copy of its rows outside the staging dir a replay deletes.
+        # copy of its rows outside the staging dir a replay deletes. A
+        # truncate (``affected`` None) swaps the whole table dir.
         #
         # The pre-write repartition on the bucket id bounds the table's file
         # count: each touched bucket gets exactly ONE new file per batch
@@ -810,19 +806,20 @@ class ParquetMergeSink:
         staging = f"{self.path}.staging-{epoch_id if epoch_id is not None else 'x'}"
         shutil.rmtree(staging, ignore_errors=True)
         out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-
-        if has_truncate or not self._has_buckets():
+        if affected is None:
             self._replace_dir(staging, self.path)
-            self._write_schema_sidecar(row_schema)
-            return
-        self._swap_staged(staging, affected, row_schema)
+            self._write_schema_sidecar(schema)
+        else:
+            self._swap_staged(staging, affected, schema)
 
     def _swap_staged(self, staging: str, affected, row_schema) -> None:
         """Move staged bucket dirs into place (driver fs renames) and drop
-        emptied buckets; shared by the Spark write path and the driver-side
-        inline merge so the swap/crash-consistency protocol exists once."""
+        emptied buckets; shared by the Spark merge tail and the driver-side
+        inline merge so the swap/crash-consistency protocol exists once.
+        A table's first batch creates the table dir here."""
         import shutil
 
+        os.makedirs(self.path, exist_ok=True)
         written = set()
         for entry in os.listdir(staging):
             if entry.startswith(f"{BUCKET_COL}="):

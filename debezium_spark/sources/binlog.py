@@ -2150,6 +2150,31 @@ def _decode_rows_batch_vectorized(msg_arr, registry, include_query):
     return out_batches[0]
 
 
+def _rows_batch(msg_arr, registry, include_query):
+    """Decode one Arrow batch of binlog events into a RecordBatch.
+
+    The vectorized kernel takes the batch; a batch it declines goes whole
+    to the per-row ``parse_event`` replay, which raises the reference's
+    exact error for malformed input. Only the kernel's own decline reasons
+    reroute: ``ValueError`` from its slice and exactness guards,
+    ``IndexError`` from a read past the buffer, ``pa.ArrowInvalid`` from
+    the strict UTF-8 validation. Any other exception is a bug and
+    surfaces."""
+    import pyarrow as pa
+
+    if len(msg_arr) == 0:
+        return _rows_batch_rowpath([], registry, include_query)
+    if isinstance(msg_arr, pa.ChunkedArray):  # pragma: no cover
+        msg_arr = msg_arr.combine_chunks()
+    try:
+        return _decode_rows_batch_vectorized(msg_arr, registry, include_query)
+    except (ValueError, IndexError, pa.ArrowInvalid):
+        pass
+    return _rows_batch_rowpath(
+        (v.as_py() for v in msg_arr), registry, include_query
+    )
+
+
 # ---------------------------------------------------------------------------
 # distributed decode
 # ---------------------------------------------------------------------------
@@ -2241,30 +2266,14 @@ def decode_binlog_rows(
     keep the exact per-row path and all outputs re-interleave in
     (message, embedded-event) order. Any batch whose rows events leave
     the vectorized slice falls back whole to the per-row path, which
-    raises the reference's exact errors for malformed input."""
+    raises the reference's exact errors for malformed input (see
+    ``_rows_batch`` for which kernel errors decline to it)."""
     if registry is None:
         registry = table_map_registry(df, msg_col=msg_col)
 
     def run(batches):
-        import pyarrow as pa
-
         for batch in batches:
-            if batch.num_rows == 0:
-                yield _rows_batch_rowpath([], registry, include_query)
-                continue
-            msg_arr = batch.column(0)
-            if isinstance(msg_arr, pa.ChunkedArray):  # pragma: no cover
-                msg_arr = msg_arr.combine_chunks()
-            try:
-                yield _decode_rows_batch_vectorized(
-                    msg_arr, registry, include_query
-                )
-                continue
-            except Exception:  # noqa: BLE001 - fall back to exact path
-                pass
-            yield _rows_batch_rowpath(
-                (v.as_py() for v in msg_arr), registry, include_query
-            )
+            yield _rows_batch(batch.column(0), registry, include_query)
 
     schema = _ROW_SCHEMA + (", query string" if include_query else "")
     return df.select(msg_col).mapInArrow(run, schema)

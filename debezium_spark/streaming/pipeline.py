@@ -171,12 +171,13 @@ class ChangeDataPipeline:
         for t in self.transforms:
             out = t(out)
         self.sink.write_batch(out, epoch_id)
-        if self.heartbeat is not None:
+        if self.heartbeat is not None and self.heartbeat.due():
             # Offsets advance with the committed batch; the heartbeat records
             # liveness + the high-water position (HeartbeatImpl.java:84-92).
             # Aggregated over the PRE-transform batch: the offset high-water
             # mark belongs to the raw envelope stream, and unwrap-style
-            # transforms legitimately drop the source struct.
+            # transforms legitimately drop the source struct. Only a batch
+            # the heartbeat emits on pays for the aggregation job.
             agg = batch_df.agg(
                 F.max("source.pos").alias("p"), F.count("*").alias("n")
             ).collect()[0]

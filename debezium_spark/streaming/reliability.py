@@ -33,13 +33,19 @@ class Heartbeat:
         self._last_emit_ms = 0
         os.makedirs(os.path.dirname(path), exist_ok=True)
 
+    def due(self) -> bool:
+        """Whether the interval has elapsed, so the next ``maybe_emit``
+        writes a record; a caller skips gathering a record's fields
+        otherwise."""
+        return int(time.time() * 1000) - self._last_emit_ms >= self.interval_ms
+
     def maybe_emit(self, *, pos: int | None, rows_in_batch: int) -> bool:
         """Called once per micro-batch (HeartbeatImpl.heartbeat :84-92):
         emits when the interval has elapsed, recording the current offset
         so downstream consumers see progress even with zero data rows."""
-        now = int(time.time() * 1000)
-        if now - self._last_emit_ms < self.interval_ms:
+        if not self.due():
             return False
+        now = int(time.time() * 1000)
         self._last_emit_ms = now
         with open(self.path, "a") as f:
             f.write(json.dumps({

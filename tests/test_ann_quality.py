@@ -345,7 +345,11 @@ def test_semdedup_arrow_equals_expr(spark):
     not approximately."""
     import numpy as np
 
-    from debezium_spark.analytics.vectors import semdedup
+    from debezium_spark.analytics.vectors import (
+        _nearest_cells,
+        _semdedup_arrow,
+        _semdedup_expr,
+    )
 
     rng = np.random.default_rng(11)
     base = rng.normal(size=(6, 8))
@@ -358,9 +362,9 @@ def test_semdedup_arrow_equals_expr(spark):
         [(j, [float(x) for x in base[j]], 1) for j in range(6)],
         "cell int, cvec array<double>, n_members long",
     )
-    kw = dict(threshold=0.9, centroids=cents)
-    got_a = semdedup(emb, impl="arrow", **kw).collect()
-    got_e = semdedup(emb, impl="expr", **kw).collect()
+    member = _nearest_cells(emb, cents, "vec_id", "embedding", nprobe=1)
+    got_a = _semdedup_arrow(member, "vec_id", "embedding", 0.9).collect()
+    got_e = _semdedup_expr(member, "vec_id", "embedding", 0.9).collect()
     key = lambda r: (r["vec_id"], r["cell"], r["is_dup"])
     assert sorted(map(key, got_a)) == sorted(map(key, got_e))
     assert any(r["is_dup"] for r in got_a)  # the fixture has real dups

@@ -1222,6 +1222,36 @@ def test_vectorized_rows_decode_falls_outside_slice():
             pa.array([bad], type=pa.binary()), {7: jtm}, False)
 
 
+def test_vectorized_kernel_bug_surfaces(monkeypatch):
+    """Only the kernel's declared decline reasons reroute a batch to the
+    row path; any other exception is a bug and surfaces."""
+    import pyarrow as pa
+
+    from debezium_spark.sources import binlog
+
+    msgs = _vec_fixture()
+    reg = {}
+    for raw in msgs:
+        if raw[HEADER_LEN - 15] == TABLE_MAP_EVENT:
+            tm = parse_table_map(raw[HEADER_LEN:])
+            reg[tm["table_id"]] = tm
+    arr = pa.array(msgs, type=pa.binary())
+    expected = binlog._rows_batch_rowpath(msgs, reg, False).to_pylist()
+
+    def declines(msg_arr, registry, include_query):
+        raise ValueError("outside the vectorized slice")
+
+    monkeypatch.setattr(binlog, "_decode_rows_batch_vectorized", declines)
+    assert binlog._rows_batch(arr, reg, False).to_pylist() == expected
+
+    def broken(msg_arr, registry, include_query):
+        raise TypeError("kernel bug")
+
+    monkeypatch.setattr(binlog, "_decode_rows_batch_vectorized", broken)
+    with pytest.raises(TypeError, match="kernel bug"):
+        binlog._rows_batch(arr, reg, False)
+
+
 def test_decode_binlog_rows_spark_fast_and_fallback(spark):
     """End-to-end through mapInArrow: a vectorizable stream and a
     multi-row (fallback) stream both match the per-row semantics."""

@@ -112,15 +112,23 @@ def test_boilerplate_ngrams_covers_every_document(spark):
     assert by_id[99]["boiler_ratio"] == 0.0
 
 
+#: ``lsh_candidate_pairs``' defaults, spelled out for the private variant
+_LSH = dict(text_col="text", id_col="doc_id", num_hashes=8, rows_per_band=2,
+            k=5)
+
+
 def test_lsh_pair_impls_identical(spark, sf_dir):
     """The Arrow pair-emission fast path must produce EXACTLY the
     expression variant's pair set — same buckets, same canonical (a<b)
     form, same first-matching-band duplicate suppression."""
-    from debezium_spark.analytics.text import lsh_candidate_pairs
+    from debezium_spark.analytics.text import (
+        _lsh_candidate_pairs_expr,
+        lsh_candidate_pairs,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     arrow = sorted(map(tuple, lsh_candidate_pairs(docs).collect()))
-    expr = sorted(map(tuple, lsh_candidate_pairs(docs, impl="expr").collect()))
+    expr = sorted(map(tuple, _lsh_candidate_pairs_expr(docs, **_LSH).collect()))
     assert arrow == expr
     assert arrow, "fixtures should produce candidate pairs"
 
@@ -130,14 +138,17 @@ def test_lsh_pairs_null_text_matches_expr(spark):
     their NULL band keys exactly like the expression groupBy does (one
     NULL bucket per band, pairs emitted once from band 0) instead of
     crashing on a NaN→int64 cast."""
-    from debezium_spark.analytics.text import lsh_candidate_pairs
+    from debezium_spark.analytics.text import (
+        _lsh_candidate_pairs_expr,
+        lsh_candidate_pairs,
+    )
 
     rows = [(i, "shared near duplicate text body " * 4) for i in range(4)]
     rows += [(10, None), (11, None), (12, None)]
     rows += [(20, f"unique text number twenty {20}")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     arrow = sorted(map(tuple, lsh_candidate_pairs(docs).collect()))
-    expr = sorted(map(tuple, lsh_candidate_pairs(docs, impl="expr").collect()))
+    expr = sorted(map(tuple, _lsh_candidate_pairs_expr(docs, **_LSH).collect()))
     assert arrow == expr
     # the three NULL docs pair with each other exactly once
     assert {(10, 11), (10, 12), (11, 12)} <= set(arrow)
@@ -145,15 +156,18 @@ def test_lsh_pairs_null_text_matches_expr(spark):
 
 def test_lsh_pairs_string_ids_fall_back_to_expr(spark):
     """Non-integral id columns can't ride the int64 numpy kernel; the
-    default impl='arrow' call must transparently produce the expression
-    variant's result instead of a cast ValueError mid-task."""
-    from debezium_spark.analytics.text import lsh_candidate_pairs
+    call must take the expression variant and produce its result instead
+    of a cast ValueError mid-task."""
+    from debezium_spark.analytics.text import (
+        _lsh_candidate_pairs_expr,
+        lsh_candidate_pairs,
+    )
 
     rows = [(f"doc-{i}", "shared near duplicate text body " * 4) for i in range(3)]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     got = sorted(map(tuple, lsh_candidate_pairs(docs).collect()))
     expr = sorted(
-        map(tuple, lsh_candidate_pairs(docs, impl="expr").collect())
+        map(tuple, _lsh_candidate_pairs_expr(docs, **_LSH).collect())
     )
     assert got == expr
     assert ("doc-0", "doc-1") in set(got)

@@ -271,12 +271,10 @@ def test_inline_select_list_built_once_per_schema(
         raise AssertionError("the batch left the inline path")
 
     # every batch below must take the Arrow inline path
-    if kind == "cow":
-        from debezium_spark.sinks import merge
-
-        monkeypatch.setattr(merge, "merge_changes", not_inline)
-    else:
-        sink._delta_frame = not_inline
+    monkeypatch.setattr(
+        sink, "_write_distributed" if kind == "cow" else "_delta_frame",
+        not_inline,
+    )
 
     first = _mk_event(env, key_id=1, op="c", pos=1)
     sink.write_batch(first, 0)
@@ -600,7 +598,7 @@ def test_driver_inline_merge_matches_spark_paths(spark, sf_dir, tmp_path):
     b = [tuple(r) for r in spk.read().orderBy("id").collect()]
     c = [tuple(r) for r in dist.read().orderBy("id").collect()]
     assert a == b == c and len(a) > 0
-    # the driver path genuinely ran (batch 1; batch 0 had no buckets yet)
+    # the driver path genuinely ran
     assert glob.glob(str(tmp_path / "drv" / "__bucket=*" / "*-inline*"))
 
 

@@ -47,6 +47,52 @@ def test_heartbeat_advances_through_pipeline(spark, sf_dir, tmp_path):
     assert recs and recs[-1]["pos"] == env.agg(F.max("source.pos")).collect()[0][0]
 
 
+def test_heartbeat_aggregates_only_when_due(spark, tmp_path):
+    """The pipeline gathers a heartbeat record's pos and row count (one
+    aggregation job) only on a batch where the heartbeat emits: a
+    not-due heartbeat adds no job to the batch, a due one records the
+    batch's high-water position and row count."""
+    import uuid
+
+    from debezium_spark.envelope import make_envelope
+    from debezium_spark.streaming import ChangeDataPipeline
+
+    df = spark.createDataFrame([(1, 5), (2, 9), (3, 7)], "id long, pos long")
+    row = F.struct(F.col("id"))
+    batch = make_envelope(
+        df, key=row, before=F.lit(None).cast("struct<id:long>"), after=row,
+        op=F.lit("c"), db="db", table="t", pos=F.col("pos"),
+    )
+
+    class NoJobSink:
+        def write_batch(self, df, epoch_id=None):
+            pass
+
+    hb = Heartbeat(str(tmp_path / "hb.jsonl"), interval_ms=10**9)
+    hb.maybe_emit(pos=None, rows_in_batch=0)  # the interval starts now
+    pipe = ChangeDataPipeline(
+        spark, feed_dir=str(tmp_path / "feed"), envelope_schema=batch.schema,
+        sink=NoJobSink(), checkpoint_dir=str(tmp_path / "ckpt"),
+        heartbeat=hb,
+    )
+    sc = spark.sparkContext
+
+    def jobs(epoch):
+        group = f"heartbeat-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "heartbeat")
+        try:
+            pipe._dispatch(batch, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(0) == 0
+    assert len(hb.read()) == 1
+    hb.interval_ms = 0
+    assert jobs(1) > 0
+    assert hb.read()[-1]["pos"] == 9 and hb.read()[-1]["rows"] == 3
+
+
 def test_guardrails():
     ok = validate_guardrails(["a", "b"], max_collections=2)
     assert ok == ["a", "b"]

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 import pyspark.sql.types as T
 
 from debezium_spark.envelope import make_envelope
-from debezium_spark.sinks import merge
 from debezium_spark.sinks.merge import ParquetMergeSink, inline_decline
 from debezium_spark.sinks.mor import LogMergeSink
 
@@ -108,11 +107,12 @@ def _table(sink):
     return got.schema, sorted(got.toJSON().collect())
 
 
-def _write_both(spark, tmp_path, kind, batches, inline_only=False):
-    """Write ``batches`` through an inline-enabled and a distributed-only
-    sink; returns both sinks. With ``inline_only``, the inline sink's
-    writes fail if they reach the distributed plan."""
-    inline = _sink(spark, kind, str(tmp_path / "inline"))
+def _write_both(spark, tmp_path, kind, batches, inline_only=False, **kw):
+    """Write ``batches`` through an inline-enabled sink (options ``kw``)
+    and a distributed-only sink; returns both sinks. With
+    ``inline_only``, the inline sink's writes fail if they reach the
+    distributed plan."""
+    inline = _sink(spark, kind, str(tmp_path / "inline"), **kw)
     dist = _sink(spark, kind, str(tmp_path / "dist"), inline_max_rows=0)
 
     def not_inline(*a, **k):
@@ -121,31 +121,39 @@ def _write_both(spark, tmp_path, kind, batches, inline_only=False):
     for epoch, batch in enumerate(batches):
         with pytest.MonkeyPatch.context() as m:
             if inline_only:
-                if kind == "cow":
-                    m.setattr(merge, "merge_changes", not_inline)
-                else:
-                    m.setattr(inline, "_delta_frame", not_inline)
+                m.setattr(
+                    inline,
+                    "_write_distributed" if kind == "cow" else "_delta_frame",
+                    not_inline,
+                )
             inline.write_batch(batch, epoch)
         dist.write_batch(batch, epoch)
     return inline, dist
 
 
-@pytest.mark.parametrize("kind", ["cow", "mor"])
-def test_type_matrix_inline_matches_distributed(spark, tmp_path, kind):
+@pytest.mark.parametrize(
+    "kind,opts",
+    [("cow", {}), ("cow", {"inline_merge_target_rows": 0}), ("mor", {})],
+    ids=["cow", "cow-path2", "mor"],
+)
+def test_type_matrix_inline_matches_distributed(spark, tmp_path, kind, opts):
     """Every inline-carriable type takes the inline path in both sinks and
-    reads back with the distributed path's Spark types and values. For
-    COW the first batch merges through the local relation (no table yet)
-    and the second through the driver-side merge."""
+    reads back with the distributed path's Spark types and values. COW
+    merges both batches driver-side, or with ``inline_merge_target_rows=0``
+    through the local relation (path 2)."""
     batches = [_sql_batch(spark, rows, _MATRIX) for rows in _BATCHES]
     row_schema = T.StructType(batches[0].schema["after"].dataType.fields)
     assert inline_decline(row_schema) is None
     inline, dist = _write_both(
-        spark, tmp_path, kind, batches, inline_only=True
+        spark, tmp_path, kind, batches, inline_only=True, **opts
     )
     assert _table(inline) == _table(dist)
     assert inline.read().filter(F.isnan("f64") & F.isnan("f32")).count() == 1
     if kind == "cow":
-        assert glob.glob(str(tmp_path / "inline" / "__bucket=*" / "*-inline*"))
+        driver_files = glob.glob(
+            str(tmp_path / "inline" / "__bucket=*" / "*-inline*")
+        )
+        assert bool(driver_files) == (not opts)
 
 
 @pytest.mark.parametrize("kind", ["cow", "mor"])
