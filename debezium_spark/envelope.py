@@ -90,6 +90,25 @@ def _null_struct(schema: T.StructType) -> Column:
     return F.lit(None).cast(schema)
 
 
+#: make_envelope's constant Columns, kept for one JVM gateway
+_CONSTANTS: dict = {}
+
+
+def _constant(key, build) -> Column:
+    """The Column ``build()`` makes, built once per JVM gateway and ``key``
+    and then reused, so a stream of batches builds ``make_envelope``'s
+    constant Columns (NULLs, the literal db/table names, already aliased)
+    once. Keys are bounded by the tables a pipeline names."""
+    from pyspark import SparkContext
+
+    if _CONSTANTS.get("gateway") is not SparkContext._gateway:
+        _CONSTANTS.clear()
+        _CONSTANTS["gateway"] = SparkContext._gateway
+    if key not in _CONSTANTS:
+        _CONSTANTS[key] = build()
+    return _CONSTANTS[key]
+
+
 def wrap_snapshot(
     df: DataFrame,
     key_cols: list[str],
@@ -158,14 +177,21 @@ def make_envelope(
     ts_ns: Column | None = None,
 ) -> DataFrame:
     """Generic envelope constructor for change feeds (Envelope.java:257-362)."""
-    db_c = F.lit(db) if isinstance(db, str) else db
-    table_c = F.lit(table) if isinstance(table, str) else table
+    def named(c, name):
+        if isinstance(c, str):
+            return _constant((name, c), lambda: F.lit(c).alias(name))
+        if c is None:
+            return _constant(
+                (name, None), lambda: F.lit(None).cast("string").alias(name)
+            )
+        return c.alias(name)
+
     src = F.struct(
-        db_c.alias("db"),
-        table_c.alias("table"),
+        named(db, "db"),
+        named(table, "table"),
         pos.cast("long").alias("pos"),
-        (tx_id if tx_id is not None else F.lit(None).cast("string")).alias("tx_id"),
-        F.lit(None).cast("string").alias("snapshot"),
+        named(tx_id, "tx_id"),
+        named(None, "snapshot"),
     )
     return df.select(
         key.alias("key"),
@@ -173,7 +199,10 @@ def make_envelope(
         after.alias("after"),
         op.alias("op"),
         src.alias("source"),
-        _null_struct(transaction_schema()).alias("transaction"),
+        _constant(
+            "transaction",
+            lambda: _null_struct(transaction_schema()).alias("transaction"),
+        ),
         (ts_ms if ts_ms is not None else F.lit(0)).cast("long").alias("ts_ms"),
         (
             ts_us

@@ -7,12 +7,14 @@ optionally gated by predicates, Predicates.java:26).
 
 Spark shape: each spec resolves to a DataFrame→DataFrame callable; the
 chain is function composition, so Catalyst still sees one fused plan (no
-materialization between steps).
+materialization between steps). A transform builds its Columns on its
+first batch and keeps them, so a stream of batches builds none after that.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,22 +41,18 @@ def _mk_filter(cfg: dict) -> Transform:
 
 
 def _mk_skip_ops(cfg: dict) -> Transform:
-    from debezium_spark.operators.filter import skipped_operations
+    from debezium_spark.operators.filter import kept_operations
 
     ops = tuple(o for o in cfg.get("skipped.operations", "t").split(",") if o)
-    return lambda df: skipped_operations(df, ops)
+    keep = cache(lambda: kept_operations(ops))
+    return lambda df: df.filter(keep())
 
 
 def _mk_mask(cfg: dict) -> Transform:
     cols = [c for c in cfg["columns"].split(",") if c]
     mask = cfg.get("mask", "***")
-
-    def apply(df: DataFrame) -> DataFrame:
-        for c in cols:
-            df = df.withColumn(c, F.lit(mask))
-        return df
-
-    return apply
+    masked = cache(lambda: {c: F.lit(mask) for c in cols})
+    return lambda df: df.withColumns(masked())
 
 
 def _mk_route(cfg: dict) -> Transform:

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -23,11 +23,16 @@ def filter_records(df: DataFrame, condition: str) -> DataFrame:
     return df.filter(F.expr(condition))
 
 
+def kept_operations(skip: Iterable[str] = ("t",)) -> Column:
+    """T22's predicate: true for an op not in ``skip``, and for a tombstone
+    (NULL op)."""
+    return ~F.col("op").isin(list(skip)) | F.col("op").isNull()
+
+
 def skipped_operations(df: DataFrame, skip: Iterable[str] = ("t",)) -> DataFrame:
     """T22: drop ops by code; default skips truncates
     (CommonConnectorConfig.java:865)."""
-    skip = list(skip)
-    return df.filter(~F.col("op").isin(skip) | F.col("op").isNull())
+    return df.filter(kept_operations(skip))
 
 
 def schema_change_filter(df: DataFrame, include_types: Iterable[str]) -> DataFrame:

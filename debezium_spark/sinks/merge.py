@@ -34,36 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.envelope import OP_TRUNCATE
+from debezium_spark.inline import footer_rows_exceed
 from debezium_spark.operators.reduce import apply_truncates, reduce_last_per_key
 from debezium_spark.operators.unwrap import extract_new_record_state
 
 BUCKET_COL = "__bucket"
 #: name suffix of a dir renamed aside during a swap (``_replace_dir``)
 _ASIDE = ".aside"
-
-
-def footer_rows_exceed(env_batch: DataFrame, limit: int) -> bool:
-    """True when the micro-batch's parquet footer row counts already exceed
-    ``limit`` — a driver-local metadata read (no Spark job). Returns False
-    when it cannot tell, and the limit(n+1) probe then decides: a batch
-    not backed by local parquet files (in-memory input lists none; a
-    non-parquet or remote input lists other paths) or a footer pyarrow
-    cannot read."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    total = 0
-    for uri in env_batch.inputFiles():
-        path = uri.removeprefix("file://").removeprefix("file:")
-        if not path.endswith(".parquet") or not os.path.exists(path):
-            return False
-        try:
-            total += pq.ParquetFile(path).metadata.num_rows
-        except (OSError, pa.ArrowException):
-            return False
-        if total > limit:
-            return True
-    return False
 
 
 def arrow_last_per_key(tbl, n_keys: int):

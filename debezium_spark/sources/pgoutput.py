@@ -43,7 +43,10 @@ action. The same kernel then builds the envelope columns in Arrow (the
 name-keyed ``before``/``after`` maps and the NULL/TOAST name lists), so
 no per-row JVM expression follows it. Protocol v2 (PG14 streamed
 transactions — the reference pins proto_version 1, so this is the scale
-extension) is decoded alongside v1.
+extension) is decoded alongside v1. The stream decoder
+(``PgOutputStreamDecoder``) runs the same fold and kernel on the driver
+instead for a micro-batch under its inline bound: one Arrow collect of
+the raw messages, and the envelope leaves as a local relation.
 
 No live Postgres exists in this sandbox, so fixtures are generated
 offline by the encoder half below (byte-identical to the protocol; the
@@ -54,9 +57,14 @@ message type).
 from __future__ import annotations
 
 import struct
+from collections import Counter
+from functools import partial
+from itertools import repeat
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from debezium_spark.inline import footer_rows_exceed
 
 #: replication message codes handled by the decoder
 #: (PgOutputMessageDecoder.java:95-115); anything else parses to
@@ -494,6 +502,24 @@ def _be(data, idx, nbytes):
     return v
 
 
+def _binary_offsets(msg_arr):
+    """A binary Arrow array's data buffer (uint8) and each message's start
+    and end byte offsets (int64), as numpy views of its buffers."""
+    import numpy as np
+
+    bufs = msg_arr.buffers()
+    o = msg_arr.offset
+    offs = np.frombuffer(bufs[1], dtype=np.int32)[
+        o : o + len(msg_arr) + 1
+    ].astype(np.int64)
+    data = (
+        np.frombuffer(bufs[2], dtype=np.uint8)
+        if bufs[2] is not None
+        else np.zeros(0, dtype=np.uint8)
+    )
+    return data, offs[:-1], offs[1:]
+
+
 def _walk_tuples(data, pos, limit):
     """Vectorized TupleData walk over many messages at once: ``pos`` holds
     each message's tuple-start byte offset and ``limit`` its message's end
@@ -632,13 +658,7 @@ def _decode_data_vectorized(lsn_arr, msg_arr):
         # large_binary (64-bit offsets) would misread below; the row
         # path handles it
         raise ValueError(f"unexpected arrow type {msg_arr.type}")
-    o = msg_arr.offset
-    offs = np.frombuffer(msg_arr.buffers()[1], dtype=np.int32)[
-        o : o + len(msg_arr) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(msg_arr.buffers()[2], dtype=np.uint8)
-    starts = offs[:-1]
-    ends = offs[1:]
+    data, starts, ends = _binary_offsets(msg_arr)
     n = len(starts)
     # the shortest data message: code, int32 relid, tuple marker, int16 ncols
     if np.any(ends - starts < 8):
@@ -899,13 +919,36 @@ def _stamp_expr(segments, lsn_col: str):
     return cond
 
 
+def _segment_flags(lsn, segments):
+    """``_stamp_expr`` in numpy over an int64 LSN array: strict membership
+    in any of the segment intervals."""
+    import numpy as np
+
+    flags = np.zeros(len(lsn), dtype=bool)
+    for s, e in segments:
+        term = lsn > s
+        if e is not None:
+            term &= lsn < e
+        flags |= term
+    return flags
+
+
 #: first bytes of the control messages the driver folds: RELATION, BEGIN,
-#: Stream Start/Stop/Commit/Abort (a raw-byte prefix compare, codegen)
-_CONTROL_FILTER = (
-    "substring({msg}, 1, 1) IN (X'52', X'42', X'53', X'45', X'63', X'41')"
-)
+#: Stream Start/Stop/Commit/Abort
+_CONTROL_CODES = b"RBSEcA"
 #: first bytes of the data messages the kernel decodes: INSERT/UPDATE/DELETE
-_DATA_FILTER = "substring({msg}, 1, 1) IN (X'49', X'55', X'44')"
+_DATA_CODES = b"IUD"
+
+
+def _first_byte_filter(codes: bytes) -> str:
+    """A raw-byte prefix compare on ``{msg}`` (codegen) for ``codes``."""
+    return "substring({msg}, 1, 1) IN (%s)" % ", ".join(
+        f"X'{c:02X}'" for c in codes
+    )
+
+
+_CONTROL_FILTER = _first_byte_filter(_CONTROL_CODES)
+_DATA_FILTER = _first_byte_filter(_DATA_CODES)
 
 
 def _message_filters(msg_col: str) -> tuple:
@@ -1003,29 +1046,37 @@ class _ControlPlane:
         self.begins = np.array(begins, dtype=np.int64).reshape(-1, 4)
 
 
+def _control_rows(
+    df: DataFrame,
+    where,
+    msg_col: str,
+    lsn_col: str,
+    in_stream_col: str | None = None,
+) -> list[tuple]:
+    """ONE prefix-filtered collect (``where``: the control predicate of
+    ``_message_filters``) of the frame's control messages as ``(lsn, msg,
+    in-segment flag or None)`` rows for ``_ControlPlane``. Control
+    messages are bounded by tables × schema changes plus transactions per
+    batch."""
+    sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
+    rows = df.filter(where).select(*sel).collect()
+    return [
+        (r[0], bytes(r[1]), r[2] if in_stream_col else None) for r in rows
+    ]
+
+
 def _control_plane(
     df: DataFrame,
     where,
     msg_col: str,
     lsn_col: str,
     in_stream_col: str | None = None,
-    open_at_start: bool = False,
-    carried_begin: tuple | None = None,
 ) -> _ControlPlane:
-    """ONE prefix-filtered collect (``where``: the control predicate of
-    ``_message_filters``) of the frame's control messages, folded
-    driver-side. Control messages are bounded by tables × schema changes
-    plus transactions per batch."""
-    sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
-    rows = df.filter(where).select(*sel).collect()
+    """The frame's control messages (``_control_rows``) folded
+    driver-side."""
     return _ControlPlane(
-        [
-            (r[0], bytes(r[1]), r[2] if in_stream_col else None)
-            for r in rows
-        ],
-        open_at_start=open_at_start,
+        _control_rows(df, where, msg_col, lsn_col, in_stream_col),
         flagged=in_stream_col is not None,
-        carried_begin=carried_begin,
     )
 
 
@@ -1343,37 +1394,45 @@ def _envelope_batch(named):
     )
 
 
+def _envelope_kernel(lsn_arr, msg_arr, flags, names, begins, commits):
+    """One Arrow batch of data messages to finished envelope rows:
+    ``_frame_batch``, ``_name_and_stamp``, ``_envelope_batch``. The
+    distributed plan runs it per Arrow batch in a Python worker, the
+    stream decoder's inline route on the driver."""
+    frame = _frame_batch(lsn_arr, msg_arr, flags)
+    return _envelope_batch(_name_and_stamp(frame, names, begins, commits))
+
+
 def _decode_data(
     df: DataFrame,
     where,
     msg_col: str,
     lsn_col: str,
     in_stream_col: str | None,
-    versions,
+    names: dict,
     ctl: _ControlPlane,
 ) -> DataFrame:
-    """The data plane: ONE ``mapInArrow`` over the frame's I/U/D messages
-    (``where``: the data predicate of ``_message_filters``) decodes each
-    Arrow batch and emits its finished envelope rows (``_frame_batch``,
-    ``_name_and_stamp``, ``_envelope_batch``); no JVM projection follows.
-    It runs inside the consumer's action — no job of its own. The naming
-    table and the BEGIN/commit state travel in the kernel's closure:
-    O(relation versions + transactions in the batch), and PySpark
-    broadcasts any pickled command over 1 MB by itself."""
-    names = _name_index(versions)
+    """The distributed data plane: ONE ``mapInArrow`` over the frame's
+    I/U/D messages (``where``: the data predicate of ``_message_filters``)
+    runs ``_envelope_kernel`` on each Arrow batch; no JVM projection
+    follows. It runs inside the consumer's action — no job of its own.
+    The naming table (``_name_index``) and the BEGIN/commit state travel
+    in the kernel's closure: O(relation versions + transactions in the
+    batch), and PySpark broadcasts any pickled command over 1 MB by
+    itself."""
     begins, commits = ctl.begins, ctl.commits
     sel = [lsn_col, msg_col] + ([in_stream_col] if in_stream_col else [])
     has_stream = in_stream_col is not None
 
     def run(batches):
         for batch in batches:
-            frame = _frame_batch(
+            yield _envelope_kernel(
                 batch.column(0),
                 batch.column(1),
                 batch.column(2) if has_stream else None,
-            )
-            yield _envelope_batch(
-                _name_and_stamp(frame, names, begins, commits)
+                names,
+                begins,
+                commits,
             )
 
     return df.filter(where).select(*sel).mapInArrow(run, _ENVELOPE_SCHEMA)
@@ -1442,8 +1501,33 @@ def decode_pgoutput_binary(
             ).collect()
         ]
     return _decode_data(
-        df, data_where, msg_col, lsn_col, in_stream_col, versions, ctl
+        df, data_where, msg_col, lsn_col, in_stream_col, _name_index(versions),
+        ctl,
     )
+
+
+#: a micro-batch decodes on the driver from one Arrow collect while its
+#: messages plus the pending protocol-v2 rows stay within this bound — the
+#: sinks' default ``inline_max_rows``; a larger batch takes the
+#: distributed plan
+_INLINE_MAX_MESSAGES = 32768
+
+
+def _first_bytes(msg_arr):
+    """Each message's first byte (0, which no message code is, for a NULL
+    or empty message), read in numpy from a binary Arrow array's
+    buffers."""
+    import numpy as np
+
+    first = np.zeros(len(msg_arr), dtype=np.uint8)
+    if not len(msg_arr):
+        return first
+    data, starts, ends = _binary_offsets(msg_arr)
+    ok = ends > starts
+    if msg_arr.null_count:
+        ok &= msg_arr.is_valid().to_numpy(zero_copy_only=False)
+    first[ok] = data[starts[ok]]
+    return first
 
 
 class PgOutputStreamDecoder:
@@ -1463,17 +1547,31 @@ class PgOutputStreamDecoder:
             lambda b, _: sink.write(dec.decode_batch(b))
         )
 
-    Each batch costs ONE Spark job of its own: the control-plane collect
-    (``_ControlPlane``); the data kernel runs inside the consumer's
-    action. The persisted state is (a) the parsed 'R' list — bounded by
-    tables × schema changes, the same budget as schema history — and the
-    last BEGIN interval seen, which stamps a v1 transaction's rows that
+    Routes, counted in ``routes``:
+
+    * ``inline``: a batch whose messages plus the pending v2 rows fit
+      ``_INLINE_MAX_MESSAGES`` (the parquet footers decide an over-bound
+      batch without a job, else a ``limit(n+1)`` probe) is ONE Arrow
+      collect of its raw ``(lsn, msg)`` rows. The control fold
+      (``_ControlPlane``) and the data kernel (``_envelope_kernel``) run
+      on the driver, as the reference decodes on its one connector
+      thread, and the envelope goes downstream as
+      ``createDataFrame(arrow)`` — a local relation, which the consumer's
+      projections fold into: no Python worker runs.
+    * ``over_bound`` and ``pending_distributed``: a batch over the bound,
+      or any batch while the distributed route's pending buffer holds
+      rows, takes the distributed plan — the control-plane collect (one
+      job) plus the ``mapInArrow`` kernel inside the consumer's action.
+
+    The persisted state is (a) the parsed 'R' list — bounded by tables ×
+    schema changes, the same budget as schema history — and the last
+    BEGIN interval seen, which stamps a v1 transaction's rows that
     continue into the next micro-batch; plus, for protocol-v2 streamed
-    transactions, (b) whether a stream segment
-    was left open at the batch boundary and (c) the raw in-segment rows
-    of still-uncommitted txs (bounded by open streamed-tx size — the same
-    buffer the server itself holds before v2 existed), localCheckpointed
-    only in a batch that leaves a streamed xid unresolved (a second job).
+    transactions, (b) whether a stream segment was left open at the batch
+    boundary and (c) the in-segment rows of still-uncommitted txs
+    (bounded by open streamed-tx size — the same buffer the server itself
+    holds before v2 existed): an Arrow table on the inline route, a
+    DataFrame localCheckpointed by the distributed route (a second job).
     Segment membership is DERIVED from the Stream Start/Stop framing per
     batch, never caller-stamped. A tx streamed across micro-batches emits
     exactly once — in the batch whose Stream Commit arrives; an aborted
@@ -1484,14 +1582,24 @@ class PgOutputStreamDecoder:
     reference does — it keeps no cross-restart tx buffer either)."""
 
     def __init__(self, spark, bootstrap: list[tuple[int, dict]] | None = None):
+        from pyspark.sql.types import StructType
+
         self.spark = spark
         self._relations: list[tuple[int, dict]] = list(bootstrap or [])
+        self._names = _name_index(
+            _version_rows(_registry_rows(self._relations))
+        )
         self._open_segment = False
         self._last_begin: tuple | None = None
-        self._pending: DataFrame | None = None
+        # in-segment rows of still-open streamed xids: an Arrow (lsn, msg)
+        # RecordBatch from the inline route, a DataFrame from the
+        # distributed one
+        self._pending = None
         self._pending_xids: set[int] = set()
+        self._schema = StructType.fromDDL(_ENVELOPE_SCHEMA)
         # msg column -> its (control, data) predicates, parsed once
         self._filters: dict[str, tuple] = {}
+        self.routes: Counter = Counter()
 
     @property
     def relations(self) -> list[tuple[int, dict]]:
@@ -1500,33 +1608,131 @@ class PgOutputStreamDecoder:
     def decode_batch(
         self, batch_df: DataFrame, msg_col: str = "msg", lsn_col: str = "lsn"
     ) -> DataFrame:
-        if msg_col not in self._filters:
-            self._filters[msg_col] = _message_filters(msg_col)
-        ctl_where, data_where = self._filters[msg_col]
-        ctl = _control_plane(
-            batch_df, ctl_where, msg_col, lsn_col,
-            open_at_start=self._open_segment, carried_begin=self._last_begin,
+        if isinstance(self._pending, DataFrame):
+            return self._decode_distributed(
+                batch_df, msg_col, lsn_col, "pending_distributed"
+            )
+        raw = self._collect_inline(batch_df, msg_col, lsn_col)
+        if raw is None:
+            return self._decode_distributed(
+                batch_df, msg_col, lsn_col, "over_bound"
+            )
+        self.routes["inline"] += 1
+        return self._decode_inline(batch_df.sparkSession, raw)
+
+    def _fold(self, rows) -> _ControlPlane:
+        """Fold one batch's control rows and carry the decoder state."""
+        ctl = _ControlPlane(
+            rows, open_at_start=self._open_segment,
+            carried_begin=self._last_begin,
         )
         self._open_segment = ctl.open_at_end
         if len(ctl.begins):
             self._last_begin = tuple(int(v) for v in ctl.begins[-1])
-        self._relations.extend(ctl.relations)
-        versions = _version_rows(_registry_rows(self._relations))
+        if ctl.relations:
+            self._relations.extend(ctl.relations)
+            self._names = _name_index(
+                _version_rows(_registry_rows(self._relations))
+            )
+        # Stream Start names every streamed xid, so the xids still open
+        # after this batch are known without touching the data.
+        self._pending_xids = (self._pending_xids | ctl.started) - ctl.resolved
+        return ctl
+
+    def _collect_inline(self, batch_df, msg_col, lsn_col):
+        """The batch's raw ``(lsn, msg)`` rows as one Arrow table, or None
+        when they and the pending rows exceed ``_INLINE_MAX_MESSAGES``."""
+        bound = _INLINE_MAX_MESSAGES - (
+            0 if self._pending is None else self._pending.num_rows
+        )
+        if bound < 0 or footer_rows_exceed(batch_df, bound):
+            return None
+        raw = batch_df.select(lsn_col, msg_col).limit(bound + 1).toArrow()
+        return raw if raw.num_rows <= bound else None
+
+    def _decode_inline(self, session, raw) -> DataFrame:
+        """The collected rows decoded on the driver: the control fold, then
+        the data kernel over the v1 rows and, as a kernel batch of their
+        own (the row path), the in-segment rows after the pending ones."""
+        import numpy as np
+        import pyarrow as pa
+
+        lsn = raw.column(0).combine_chunks().cast(pa.int64())
+        msg = raw.column(1).combine_chunks().cast(pa.binary())
+        first = _first_bytes(msg)
+        at = np.flatnonzero(np.isin(first, list(_CONTROL_CODES)))
+        ctl = self._fold(
+            zip(lsn.take(at).to_pylist(), msg.take(at).to_pylist(),
+                repeat(None))
+        )
+        rows = pa.RecordBatch.from_arrays([lsn, msg], ["lsn", "msg"]).filter(
+            pa.array(np.isin(first, list(_DATA_CODES)))
+        )
+        in_seg = _segment_flags(
+            rows.column(0).to_numpy(zero_copy_only=False), ctl.segments
+        )
+        seg = rows.filter(pa.array(in_seg))
+        if self._pending is not None:
+            seg = pa.RecordBatch.from_arrays(
+                [pa.concat_arrays(c) for c in zip(self._pending.columns,
+                                                  seg.columns)],
+                ["lsn", "msg"],
+            )
+        kernel = partial(
+            _envelope_kernel, names=self._names, begins=ctl.begins,
+            commits=ctl.commits,
+        )
+        v1 = rows.filter(pa.array(~in_seg))
+        parts = [kernel(v1.column(0), v1.column(1), None)]
+        if seg.num_rows:
+            parts.append(
+                kernel(seg.column(0), seg.column(1),
+                       pa.repeat(True, seg.num_rows))
+            )
+        self._pending = None
+        if self._pending_xids and seg.num_rows:
+            # the int32 xid every in-segment message carries at bytes 2-5
+            data, starts, _ = _binary_offsets(seg.column(1))
+            xid = _be(data, starts + 1, 4)
+            self._pending = seg.filter(
+                pa.array(~np.isin(xid, list(ctl.resolved)))
+            )
+        return session.createDataFrame(
+            pa.Table.from_batches(parts), self._schema
+        )
+
+    def _decode_distributed(self, batch_df, msg_col, lsn_col, reason):
+        """The decline route: the control-plane collect plus the
+        ``mapInArrow`` data kernel (``_decode_data``)."""
+        import pyarrow as pa
+
+        self.routes[reason] += 1
+        if msg_col not in self._filters:
+            self._filters[msg_col] = _message_filters(msg_col)
+        ctl_where, data_where = self._filters[msg_col]
+        ctl = self._fold(_control_rows(batch_df, ctl_where, msg_col, lsn_col))
         if not ctl.segments and self._pending is None:
             # a plain v1 batch: no framing column, no pending buffer
             return _decode_data(
-                batch_df, data_where, msg_col, lsn_col, None, versions, ctl
+                batch_df, data_where, msg_col, lsn_col, None, self._names, ctl
             )
 
         work = batch_df.select(
             lsn_col, msg_col,
             _stamp_expr(ctl.segments, lsn_col).alias("__in_stream"),
         )
-        if self._pending is not None:
-            work = self._pending.unionByName(work)
-        # Stream Start names every streamed xid, so the xids still open
-        # after this batch are known without touching the data.
-        self._pending_xids = (self._pending_xids | ctl.started) - ctl.resolved
+        pending = self._pending
+        if isinstance(pending, pa.RecordBatch):
+            # the inline route's buffer rejoins as a local relation
+            pending = batch_df.sparkSession.createDataFrame(
+                pa.table([
+                    pending.column(0), pending.column(1),
+                    pa.repeat(True, pending.num_rows),
+                ], [lsn_col, msg_col, "__in_stream"]),
+                f"{lsn_col} long, {msg_col} binary, __in_stream boolean",
+            )
+        if pending is not None:
+            work = pending.unionByName(work)
         if self._pending_xids:
             # Every in-segment message carries its xid at bytes 2-5 (v2's
             # int32 prefix) — extracted JVM-side, no Python in the split.
@@ -1546,7 +1752,7 @@ class PgOutputStreamDecoder:
         # The kernel withholds in-segment rows whose xid has no Stream
         # Commit in this batch, so `work` needs no ready-side filter.
         return _decode_data(
-            work, data_where, msg_col, lsn_col, "__in_stream", versions, ctl
+            work, data_where, msg_col, lsn_col, "__in_stream", self._names, ctl
         )
 
 

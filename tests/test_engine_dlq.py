@@ -206,6 +206,53 @@ def test_config_driven_transform_chain(spark, sf_dir, tmp_path):
         chain_from_config({"transforms": "x", "transforms.x.type": "nope"})
 
 
+def test_chain_builds_its_columns_once(spark, monkeypatch):
+    """A config-built chain builds its Columns on its first batch and keeps
+    them: a second same-schema batch through skip-ops and mask costs at
+    most 15 py4j round trips from this thread (85 when every batch built
+    its own)."""
+    import threading
+
+    import py4j.clientserver as cs
+
+    from debezium_spark.operators.chain import chain_from_config
+
+    chain = chain_from_config(
+        {
+            "transforms": "skip,mask",
+            "transforms.skip.type": "skip-ops",
+            "transforms.skip.skipped.operations": "t",
+            "transforms.mask.type": "mask",
+            "transforms.mask.columns": "note",
+        }
+    )
+
+    def run(i):
+        df = spark.createDataFrame(
+            [(i, "c", "x"), (i + 1, "t", None)],
+            "pos long, op string, note string",
+        )
+        calls = 0
+        send = cs.ClientServerConnection.send_command
+        me = threading.current_thread()
+
+        def counting(conn, command):
+            nonlocal calls
+            calls += threading.current_thread() is me
+            return send(conn, command)
+
+        with monkeypatch.context() as m:
+            m.setattr(cs.ClientServerConnection, "send_command", counting)
+            for t in chain:
+                df = t(df)
+        return df, calls
+
+    run(0)
+    out, calls = run(10)
+    assert calls <= 15, calls
+    assert [tuple(r) for r in out.collect()] == [(10, "c", "***")]
+
+
 def test_chain_through_engine_notifying(spark, sf_dir, tmp_path):
     from debezium_spark.operators.chain import chain_from_config
 

@@ -528,7 +528,7 @@ def test_inline_probe_short_circuits_on_footer_counts(spark, tmp_path):
     footer row counts (a driver-local metadata read) already prove the
     batch is over the inline threshold. In-memory batches, unreadable
     footers and under-limit files keep the probe's verdict."""
-    from debezium_spark.sinks.merge import footer_rows_exceed
+    from debezium_spark.inline import footer_rows_exceed
 
     p = str(tmp_path / "batch")
     spark.range(100).write.parquet(p)

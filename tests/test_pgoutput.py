@@ -259,7 +259,7 @@ def test_type_message():
     }
 
 
-def test_stream_decoder_carries_relations_across_batches(spark):
+def test_stream_decoder_carries_relations_across_batches(spark, monkeypatch):
     """A RELATION message from micro-batch 1 must still name tuples in
     micro-batch 2 (which carries no 'R' of its own), and a schema-change
     'R' in a later batch versions the registry from its LSN on."""
@@ -270,46 +270,49 @@ def test_stream_decoder_carries_relations_across_batches(spark):
             [(lsn, bytearray(m)) for lsn, m in rows], "lsn long, msg binary"
         )
 
-    dec = PgOutputStreamDecoder(spark)
-    b1 = frame([
-        (0, encode_relation(9, "public", "t", [(1, "id", 20, -1),
-                                               (0, "v", 25, -1)])),
-        (1, encode_begin(3, 1_000_000, 100)),
-        (2, encode_insert(9, [("t", "1"), ("t", "a")])),
-        (3, encode_commit(3, 3, 1_000_000)),
-    ])
-    out1 = {r["lsn"]: r for r in dec.decode_batch(b1).collect()}
-    assert out1[2]["after"] == {"id": "1", "v": "a"}
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        b1 = frame([
+            (0, encode_relation(9, "public", "t", [(1, "id", 20, -1),
+                                                   (0, "v", 25, -1)])),
+            (1, encode_begin(3, 1_000_000, 100)),
+            (2, encode_insert(9, [("t", "1"), ("t", "a")])),
+            (3, encode_commit(3, 3, 1_000_000)),
+        ])
+        out1 = {r["lsn"]: r for r in dec.decode_batch(b1).collect()}
+        assert out1[2]["after"] == {"id": "1", "v": "a"}
 
-    # batch 2: NO relation message — the persisted registry names it
-    b2 = frame([
-        (4, encode_begin(6, 2_000_000, 101)),
-        (5, encode_insert(9, [("t", "2"), ("n", None)])),
-        (6, encode_commit(6, 6, 2_000_000)),
-    ])
-    out2 = {r["lsn"]: r for r in dec.decode_batch(b2).collect()}
-    assert out2[5]["after"] == {"id": "2"}
-    assert out2[5]["after_nulls"] == ["v"]
-    assert out2[5]["xid"] == 101
+        # batch 2: NO relation message — the persisted registry names it
+        b2 = frame([
+            (4, encode_begin(6, 2_000_000, 101)),
+            (5, encode_insert(9, [("t", "2"), ("n", None)])),
+            (6, encode_commit(6, 6, 2_000_000)),
+        ])
+        out2 = {r["lsn"]: r for r in dec.decode_batch(b2).collect()}
+        assert out2[5]["after"] == {"id": "2"}
+        assert out2[5]["after_nulls"] == ["v"]
+        assert out2[5]["xid"] == 101
 
-    # batch 3: schema change, then data under the NEW relation version
-    b3 = frame([
-        (7, encode_relation(9, "public", "t", [(1, "id", 20, -1),
-                                               (0, "v", 25, -1),
-                                               (0, "w", 23, -1)])),
-        (8, encode_begin(10, 3_000_000, 102)),
-        (9, encode_insert(9, [("t", "3"), ("t", "b"), ("t", "7")])),
-        (10, encode_commit(10, 10, 3_000_000)),
-    ])
-    out3 = {r["lsn"]: r for r in dec.decode_batch(b3).collect()}
-    assert out3[9]["after"] == {"id": "3", "v": "b", "w": "7"}
-    # restart recovery surface: relations are exportable and re-feedable
-    dec2 = PgOutputStreamDecoder(spark, bootstrap=dec.relations)
-    out2b = {r["lsn"]: r for r in dec2.decode_batch(frame([
-        (11, encode_insert(9, [("t", "4"), ("n", None), ("n", None)])),
-    ])).collect()}
-    assert out2b[11]["after"] == {"id": "4"}
-    assert sorted(out2b[11]["after_nulls"]) == ["v", "w"]
+        # batch 3: schema change, then data under the NEW relation version
+        b3 = frame([
+            (7, encode_relation(9, "public", "t", [(1, "id", 20, -1),
+                                                   (0, "v", 25, -1),
+                                                   (0, "w", 23, -1)])),
+            (8, encode_begin(10, 3_000_000, 102)),
+            (9, encode_insert(9, [("t", "3"), ("t", "b"), ("t", "7")])),
+            (10, encode_commit(10, 10, 3_000_000)),
+        ])
+        out3 = {r["lsn"]: r for r in dec.decode_batch(b3).collect()}
+        assert out3[9]["after"] == {"id": "3", "v": "b", "w": "7"}
+        # restart recovery surface: relations are exportable and re-feedable
+        dec2 = PgOutputStreamDecoder(spark, bootstrap=dec.relations)
+        out2b = {r["lsn"]: r for r in dec2.decode_batch(frame([
+            (11, encode_insert(9, [("t", "4"), ("n", None), ("n", None)])),
+        ])).collect()}
+        assert out2b[11]["after"] == {"id": "4"}
+        assert sorted(out2b[11]["after_nulls"]) == ["v", "w"]
+        _assert_route(dec, route)
+        _assert_route(dec2, route)
 
 
 def test_protocol_v2_stream_messages():
@@ -466,12 +469,13 @@ def test_v2_framing_derived_end_to_end(spark):
     assert out[5]["after"] == {"id": "2"}
 
 
-def test_v2_subtransaction_abort_raises(spark):
+def test_v2_subtransaction_abort_raises(spark, monkeypatch):
     """Partial-tx rollback (abort of a subtransaction only) is
     unsupported — raise, never silently emit a corrupted tx."""
     import pytest as _pytest
 
     from debezium_spark.sources.pgoutput import (
+        PgOutputStreamDecoder,
         decode_pgoutput_binary,
         encode_stream_abort,
         encode_stream_start,
@@ -491,9 +495,14 @@ def test_v2_subtransaction_abort_raises(spark):
     )
     with _pytest.raises(ValueError, match="subtransaction"):
         decode_pgoutput_binary(spark, df)
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        with _pytest.raises(ValueError, match="subtransaction"):
+            dec.decode_batch(df)
+        _assert_route(dec, route)
 
 
-def test_stream_decoder_v2_tx_across_micro_batches(spark):
+def test_stream_decoder_v2_tx_across_micro_batches(spark, monkeypatch):
     """A tx streamed across two micro-batches lands exactly once (in the
     batch whose Stream Commit arrives); an aborted streamed tx is
     discarded. Segment membership is derived by the reader fold, with
@@ -512,47 +521,49 @@ def test_stream_decoder_v2_tx_across_micro_batches(spark):
             [(lsn, bytearray(m)) for lsn, m in rows], "lsn long, msg binary"
         )
 
-    dec = PgOutputStreamDecoder(spark)
-    # batch 1: relation + first segment of tx 60 (left OPEN at the
-    # boundary — the row at lsn 3 is in-segment only via carried state)
-    out1 = dec.decode_batch(frame([
-        (0, encode_relation(9, "public", "t", [(1, "id", 20, -1)])),
-        (1, encode_stream_start(60)),
-        (2, with_stream_xid(encode_insert(9, [("t", "1")]), 60)),
-        (3, with_stream_xid(encode_insert(9, [("t", "2")]), 60)),
-    ])).collect()
-    assert out1 == []  # nothing committed yet
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        # batch 1: relation + first segment of tx 60 (left OPEN at the
+        # boundary — the row at lsn 3 is in-segment only via carried state)
+        out1 = dec.decode_batch(frame([
+            (0, encode_relation(9, "public", "t", [(1, "id", 20, -1)])),
+            (1, encode_stream_start(60)),
+            (2, with_stream_xid(encode_insert(9, [("t", "1")]), 60)),
+            (3, with_stream_xid(encode_insert(9, [("t", "2")]), 60)),
+        ])).collect()
+        assert out1 == []  # nothing committed yet
 
-    # batch 2: segment closes, second segment streams, commit arrives
-    out2 = {r["lsn"]: r for r in dec.decode_batch(frame([
-        (4, encode_stream_stop()),
-        (5, encode_stream_start(60, first_segment=False)),
-        (6, with_stream_xid(encode_insert(9, [("t", "3")]), 60)),
-        (7, encode_stream_stop()),
-        (8, encode_stream_commit(60, 8, 8, 5_000_000)),
-    ])).collect()}
-    assert set(out2) == {2, 3, 6}  # the whole tx, exactly once
-    assert all(r["xid"] == 60 and r["commit_ts_us"] == 5_000_000
-               for r in out2.values())
-    assert out2[2]["after"] == {"id": "1"}
-    assert out2[6]["after"] == {"id": "3"}
+        # batch 2: segment closes, second segment streams, commit arrives
+        out2 = {r["lsn"]: r for r in dec.decode_batch(frame([
+            (4, encode_stream_stop()),
+            (5, encode_stream_start(60, first_segment=False)),
+            (6, with_stream_xid(encode_insert(9, [("t", "3")]), 60)),
+            (7, encode_stream_stop()),
+            (8, encode_stream_commit(60, 8, 8, 5_000_000)),
+        ])).collect()}
+        assert set(out2) == {2, 3, 6}  # the whole tx, exactly once
+        assert all(r["xid"] == 60 and r["commit_ts_us"] == 5_000_000
+                   for r in out2.values())
+        assert out2[2]["after"] == {"id": "1"}
+        assert out2[6]["after"] == {"id": "3"}
 
-    # batch 3: a streamed tx that ABORTS never lands
-    out3 = dec.decode_batch(frame([
-        (9, encode_stream_start(61)),
-        (10, with_stream_xid(encode_insert(9, [("t", "9")]), 61)),
-        (11, encode_stream_stop()),
-        (12, encode_stream_abort(61, 61)),
-    ])).collect()
-    assert out3 == []
-    # batch 4: and it stays gone (nothing lingers in the pending buffer)
-    out4 = {r["lsn"]: r for r in dec.decode_batch(frame([
-        (13, encode_begin(15, 9_000_000, 70)),
-        (14, encode_insert(9, [("t", "5")])),
-        (15, encode_commit(15, 15, 9_000_000)),
-    ])).collect()}
-    assert set(out4) == {14}
-    assert out4[14]["after"] == {"id": "5"} and out4[14]["xid"] == 70
+        # batch 3: a streamed tx that ABORTS never lands
+        out3 = dec.decode_batch(frame([
+            (9, encode_stream_start(61)),
+            (10, with_stream_xid(encode_insert(9, [("t", "9")]), 61)),
+            (11, encode_stream_stop()),
+            (12, encode_stream_abort(61, 61)),
+        ])).collect()
+        assert out3 == []
+        # batch 4: and it stays gone (nothing lingers in the pending buffer)
+        out4 = {r["lsn"]: r for r in dec.decode_batch(frame([
+            (13, encode_begin(15, 9_000_000, 70)),
+            (14, encode_insert(9, [("t", "5")])),
+            (15, encode_commit(15, 15, 9_000_000)),
+        ])).collect()}
+        assert set(out4) == {14}
+        assert out4[14]["after"] == {"id": "5"} and out4[14]["xid"] == 70
+        _assert_route(dec, route)
 
 
 def test_typed_projection_schema_and_values(spark):
@@ -1527,7 +1538,32 @@ def _frame(spark, rows):
     )
 
 
-def test_micro_batch_decode_matches_row_fold(spark):
+def _over_routes(monkeypatch):
+    """Yield each ``PgOutputStreamDecoder`` route with that route forced:
+    ``inline`` (the driver-side Arrow collect) as configured, then
+    ``distributed`` (control collect plus ``mapInArrow``) by an inline
+    bound of 0 messages. A loop, not a parametrization, so each test
+    keeps its one id."""
+    from debezium_spark.sources import pgoutput
+
+    for route, bound in (("inline", None), ("distributed", 0)):
+        with monkeypatch.context() as m:
+            if bound is not None:
+                m.setattr(pgoutput, "_INLINE_MAX_MESSAGES", bound)
+            yield route
+
+
+def _assert_route(dec, route):
+    """Every batch ``dec`` decoded took ``route``."""
+    assert dec.routes
+    if route == "inline":
+        assert set(dec.routes) == {"inline"}, dec.routes
+    else:
+        assert set(dec.routes) <= {"over_bound", "pending_distributed"}, \
+            dec.routes
+
+
+def test_micro_batch_decode_matches_row_fold(spark, monkeypatch):
     """Both decode APIs agree with the row-by-row reference fold on a
     batch of several transactions over two relations, with a RELATION
     re-sent mid-batch with an added column (rows on each side of its LSN
@@ -1566,11 +1602,13 @@ def test_micro_batch_decode_matches_row_fold(spark):
     assert _rows_by_lsn(
         decode_pgoutput_binary(spark, df, registry=reg).collect()
     ) == want
-    dec = PgOutputStreamDecoder(spark)
-    assert _rows_by_lsn(dec.decode_batch(df).collect()) == want
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        assert _rows_by_lsn(dec.decode_batch(df).collect()) == want
+        _assert_route(dec, route)
 
 
-def test_overlapping_begin_intervals_raise(spark):
+def test_overlapping_begin_intervals_raise(spark, monkeypatch):
     """v1 transactions are serialized onto the stream, so two BEGIN
     intervals that overlap are corrupt input: the control-plane fold
     raises instead of stamping a row with two transactions."""
@@ -1582,11 +1620,20 @@ def test_overlapping_begin_intervals_raise(spark):
         (4, encode_insert(9, [("t", "2")])),
         (6, encode_commit(6, 6, 2_000_000)),
     ]
+    from debezium_spark.sources.pgoutput import PgOutputStreamDecoder
+
     with pytest.raises(ValueError, match="overlap"):
         decode_pgoutput_binary(spark, _frame(spark, msgs))
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        with pytest.raises(ValueError, match="overlap"):
+            dec.decode_batch(_frame(spark, msgs))
+        _assert_route(dec, route)
 
 
-def test_stream_decoder_v2_matches_row_fold_across_batches(spark):
+def test_stream_decoder_v2_matches_row_fold_across_batches(
+    spark, monkeypatch
+):
     """Protocol v2 across micro-batches against the reference fold: an
     uncommitted streamed xid is withheld while its segment is open, then
     emitted exactly once in the batch whose Stream Commit arrives; a v1
@@ -1623,32 +1670,38 @@ def test_stream_decoder_v2_matches_row_fold_across_batches(spark):
             (11, encode_stream_commit(60, 11, 11, 5_000_000)),
         ],
     ]
-    dec = PgOutputStreamDecoder(spark)
-    seen: list = []
-    emitted = 0
-    for batch in batches:
-        seen += batch
-        ref = _ref_fold(seen)
-        want = sorted(ref[emitted:], key=lambda d: d["lsn"])
-        emitted = len(ref)
-        assert _rows_by_lsn(dec.decode_batch(_frame(spark, batch)).collect()) \
-            == want
-    assert emitted == 4 and dec._pending is None
-    with pytest.raises(ValueError, match="subtransaction"):
-        dec.decode_batch(_frame(spark, [
-            (12, encode_stream_start(61)),
-            (13, with_stream_xid(encode_insert(9, [("t", "4"), ("n", None)]),
-                                 61)),
-            (14, encode_stream_stop()),
-            (15, encode_stream_abort(61, 62)),
-        ]))
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        seen: list = []
+        emitted = 0
+        for batch in batches:
+            seen += batch
+            ref = _ref_fold(seen)
+            want = sorted(ref[emitted:], key=lambda d: d["lsn"])
+            emitted = len(ref)
+            assert _rows_by_lsn(dec.decode_batch(_frame(spark, batch)).collect()) \
+                == want
+        assert emitted == 4 and dec._pending is None
+        _assert_route(dec, route)
+        with pytest.raises(ValueError, match="subtransaction"):
+            dec.decode_batch(_frame(spark, [
+                (12, encode_stream_start(61)),
+                (13, with_stream_xid(encode_insert(9, [("t", "4"), ("n", None)]),
+                                     61)),
+                (14, encode_stream_stop()),
+                (15, encode_stream_abort(61, 62)),
+            ]))
 
 
-def test_stream_decoder_job_budget(spark, tmp_path):
-    """A v1 micro-batch decodes with ONE Spark job of its own (the
-    control-plane collect); the data kernel runs inside the consumer's
-    action. A v2 batch that leaves a segment open adds exactly one job:
-    the pending buffer's checkpoint."""
+def test_stream_decoder_job_budget(spark, tmp_path, monkeypatch):
+    """Spark jobs per file-backed micro-batch, the consumer's action
+    included. Inline: a v1 batch runs 2 (the raw Arrow collect and the
+    consumer's), and a v2 batch that leaves a segment open runs 2 as
+    well, since its pending rows stay in Arrow; the decoded batch's plan
+    holds no Python-worker operator. Distributed: 2 for v1 (the control
+    collect and the consumer's action, which runs the ``mapInArrow``
+    kernel), and 3 for the open segment (plus the pending buffer's
+    checkpoint)."""
     from debezium_spark.sources.pgoutput import (
         PgOutputStreamDecoder,
         encode_stream_start,
@@ -1666,25 +1719,38 @@ def test_stream_decoder_job_budget(spark, tmp_path):
         (4, encode_stream_start(60)),
         (5, with_stream_xid(encode_insert(9, [("t", "2")]), 60)),
     ]
-    dec = PgOutputStreamDecoder(spark)
     sc = spark.sparkContext
-    jobs = []
-    for i, rows in enumerate((v1, v2_open)):
-        path = str(tmp_path / f"b{i}")
-        _frame(spark, rows).coalesce(1).write.parquet(path)
-        batch = spark.read.parquet(path)  # a file-backed micro-batch
-        group = f"pgoutput-job-budget-{i}"
-        sc.setJobGroup(group, "job budget")
-        try:
-            out = dec.decode_batch(batch).toArrow()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        assert out.num_rows == (1 if i == 0 else 0)
-    assert jobs == [2, 3]
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        jobs, plans = [], []
+        for i, rows in enumerate((v1, v2_open)):
+            path = str(tmp_path / f"{route}-b{i}")
+            _frame(spark, rows).coalesce(1).write.parquet(path)
+            batch = spark.read.parquet(path)  # a file-backed micro-batch
+            group = f"pgoutput-job-budget-{route}-{i}"
+            sc.setJobGroup(group, "job budget")
+            try:
+                decoded = dec.decode_batch(batch)
+                out = decoded.toArrow()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            plans.append(
+                decoded._jdf.queryExecution().executedPlan().toString()
+            )
+            assert out.num_rows == (1 if i == 0 else 0)
+        _assert_route(dec, route)
+        if route == "inline":
+            assert jobs == [2, 2]
+            assert not any("MapInArrow" in p for p in plans), plans
+        else:
+            assert jobs == [2, 3]
+            assert "MapInArrow" in plans[0]
 
 
-def test_stream_decoder_v1_tx_across_micro_batches(spark, tmp_path):
+def test_stream_decoder_v1_tx_across_micro_batches(
+    spark, tmp_path, monkeypatch
+):
     """A v1 transaction whose BEGIN lands in one micro-batch and whose rows
     continue into the next stamps every row with its xid and commit ts
     (the decoder carries the last BEGIN interval across batches), at the
@@ -1703,28 +1769,165 @@ def test_stream_decoder_v1_tx_across_micro_batches(spark, tmp_path):
             (5, encode_insert(9, [("t", "3")])),  # after the commit: no tx
         ],
     ]
-    dec = PgOutputStreamDecoder(spark)
-    sc = spark.sparkContext
-    jobs, rows = [], []
-    for i, msgs in enumerate(batches):
-        path = str(tmp_path / f"b{i}")
-        _frame(spark, msgs).coalesce(1).write.parquet(path)
-        batch = spark.read.parquet(path)  # a file-backed micro-batch
-        group = f"pgoutput-v1-carry-{i}"
-        sc.setJobGroup(group, "v1 carry")
-        try:
-            out = dec.decode_batch(batch).toArrow()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        rows += out.select(["lsn", "xid", "commit_ts_us"]).to_pylist()
-    assert jobs == [2, 2]
-    assert sorted((r["lsn"], r["xid"], r["commit_ts_us"]) for r in rows) == [
-        (2, 70, 1_000_000), (3, 70, 1_000_000), (5, None, None),
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        sc = spark.sparkContext
+        jobs, rows = [], []
+        for i, msgs in enumerate(batches):
+            path = str(tmp_path / f"{route}-b{i}")
+            _frame(spark, msgs).coalesce(1).write.parquet(path)
+            batch = spark.read.parquet(path)  # a file-backed micro-batch
+            group = f"pgoutput-v1-carry-{route}-{i}"
+            sc.setJobGroup(group, "v1 carry")
+            try:
+                out = dec.decode_batch(batch).toArrow()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            rows += out.select(["lsn", "xid", "commit_ts_us"]).to_pylist()
+        assert jobs == [2, 2]
+        assert sorted((r["lsn"], r["xid"], r["commit_ts_us"]) for r in rows) == [
+            (2, 70, 1_000_000), (3, 70, 1_000_000), (5, None, None),
+        ]
+        # replaying the second batch keeps the carried BEGIN once (no overlap)
+        again = dec.decode_batch(_frame(spark, batches[1])).collect()
+        assert sorted((r["lsn"], r["xid"]) for r in again) == [(3, 70), (5, None)]
+        _assert_route(dec, route)
+
+
+def test_stream_decoder_counts_routes(spark, monkeypatch):
+    """``routes`` counts each batch's route: a three-batch v1 stream takes
+    only the inline route, and with the inline bound at 0 the same stream
+    takes only the over-bound decline."""
+    from debezium_spark.sources import pgoutput
+
+    rel = encode_relation(9, "public", "t", [(1, "id", 20, -1)])
+    batches = [
+        [(0, rel), (1, encode_begin(3, 1_000_000, 70)),
+         (2, encode_insert(9, [("t", "1")])), (3, encode_commit(3, 3, 1))],
+        [(4, encode_begin(6, 2_000_000, 71)),
+         (5, encode_update(9, [("t", "1")])), (6, encode_commit(6, 6, 2))],
+        [(7, encode_begin(9, 3_000_000, 72)),
+         (8, encode_delete(9, [("t", "1")])), (9, encode_commit(9, 9, 3))],
     ]
-    # replaying the second batch keeps the carried BEGIN once (no overlap)
-    again = dec.decode_batch(_frame(spark, batches[1])).collect()
-    assert sorted((r["lsn"], r["xid"]) for r in again) == [(3, 70), (5, None)]
+    for bound, want in ((None, "inline"), (0, "over_bound")):
+        with monkeypatch.context() as m:
+            if bound is not None:
+                m.setattr(pgoutput, "_INLINE_MAX_MESSAGES", bound)
+            dec = pgoutput.PgOutputStreamDecoder(spark)
+            ops = [
+                r["op"] for b in batches
+                for r in dec.decode_batch(_frame(spark, b)).collect()
+            ]
+        assert ops == ["c", "u", "d"]
+        assert dec.routes == {want: 3}
+
+
+def test_stream_decoder_v2_tx_crosses_routes(spark, monkeypatch):
+    """Decoder state crosses a route switch in both directions, against
+    the reference fold. Streamed tx 60 opens on the inline route (its rows
+    held in Arrow), continues on an over-bound batch (the Arrow rows
+    rejoin the distributed plan, which leaves a DataFrame buffer), and
+    commits on a batch the DataFrame buffer keeps distributed; it emits
+    exactly once. v1 tx 70 begins there and continues into the next
+    batch, back on the inline route, where streamed tx 61 opens and then
+    commits inline."""
+    from debezium_spark.sources import pgoutput
+    from debezium_spark.sources.pgoutput import (
+        encode_stream_commit,
+        encode_stream_start,
+        encode_stream_stop,
+        with_stream_xid,
+    )
+
+    def seg_insert(xid, v):
+        return with_stream_xid(encode_insert(9, [("t", v), ("n", None)]), xid)
+
+    batches = [
+        (None, [
+            (0, encode_relation(9, "public", "t", [(1, "id", 20, -1),
+                                                   (0, "v", 25, -1)])),
+            (1, encode_stream_start(60)),
+            (2, seg_insert(60, "1")),
+            (3, seg_insert(60, "2")),
+        ]),
+        (0, [
+            (4, seg_insert(60, "3")),
+            (5, encode_stream_stop()),
+            (6, encode_begin(8, 1_000_000, 69)),
+            (7, encode_insert(9, [("t", "4"), ("t", "a")])),
+            (8, encode_commit(8, 8, 1_000_000)),
+        ]),
+        (None, [
+            (9, encode_stream_start(60, first_segment=False)),
+            (10, seg_insert(60, "5")),
+            (11, encode_stream_stop()),
+            (12, encode_stream_commit(60, 12, 12, 5_000_000)),
+            (13, encode_begin(16, 2_000_000, 70)),
+            (14, encode_insert(9, [("t", "6"), ("t", "b")])),
+        ]),
+        (None, [
+            (15, encode_update(9, [("t", "6"), ("u", None)])),
+            (16, encode_commit(16, 16, 2_000_000)),
+            (17, encode_stream_start(61)),
+            (18, seg_insert(61, "7")),
+        ]),
+        (None, [
+            (19, seg_insert(61, "8")),
+            (20, encode_stream_stop()),
+            (21, encode_stream_commit(61, 21, 21, 6_000_000)),
+        ]),
+    ]
+    dec = pgoutput.PgOutputStreamDecoder(spark)
+    seen: list = []
+    emitted, routes = 0, []
+    for bound, batch in batches:
+        seen += batch
+        ref = _ref_fold(seen)
+        want = sorted(ref[emitted:], key=lambda d: d["lsn"])
+        emitted = len(ref)
+        before = dict(dec.routes)
+        with monkeypatch.context() as m:
+            if bound is not None:
+                m.setattr(pgoutput, "_INLINE_MAX_MESSAGES", bound)
+            got = dec.decode_batch(_frame(spark, batch)).collect()
+        assert _rows_by_lsn(got) == want
+        (route,) = [k for k, v in dec.routes.items() if v != before.get(k)]
+        routes.append(route)
+    assert routes == [
+        "inline", "over_bound", "pending_distributed", "inline", "inline",
+    ]
+    assert [r["xid"] for r in _ref_fold(seen)] == [
+        69, 60, 60, 60, 60, 70, 70, 61, 61,
+    ]
+    assert dec._pending is None
+
+
+def test_stream_decoder_malformed_data_raises_row_path_error(
+    spark, monkeypatch
+):
+    """A malformed data message raises the error ``parse_message`` gives
+    for it on both routes: on the driver (inline) or from the kernel's
+    Python worker (distributed)."""
+    import re
+
+    from debezium_spark.sources.pgoutput import PgOutputStreamDecoder
+
+    bad = encode_insert(9, [("t", "abc")])[:-2]
+    with pytest.raises(Exception) as want:
+        parse_message(bad)
+    msgs = [
+        (0, encode_relation(9, "public", "t", [(1, "id", 20, -1)])),
+        (1, encode_insert(9, [("t", "1")])),
+        (2, bad),
+    ]
+    for route in _over_routes(monkeypatch):
+        dec = PgOutputStreamDecoder(spark)
+        with pytest.raises(Exception, match=re.escape(str(want.value))) as got:
+            dec.decode_batch(_frame(spark, msgs)).collect()
+        if route == "inline":
+            assert type(got.value) is type(want.value)
+        _assert_route(dec, route)
 
 
 def test_truncated_data_message_raises_row_path_error():
