@@ -11,6 +11,12 @@ Design rules (these survive a 1000-executor / 100 TB scale-up):
 * Near-dup candidate generation joins only within LSH band buckets
   (banding → band-key equi-join), never all-pairs, and exact Jaccard is
   computed for candidate pairs only.
+* An input under the shared inline bound (``INLINE_MAX_ROWS``, the one the
+  merge sinks and the pgoutput decoder use) comes to the driver in ONE
+  Arrow collect and runs the same numpy kernels there, as
+  ``near_dup_pairs`` does: no shuffle and no Python worker for a few
+  thousand documents. A larger input, or one a kernel cannot take, keeps
+  the distributed plan, and the route taken is counted.
 * Hashes are md5-derived 60-bit ints so the DuckDB oracle can reproduce them
   exactly (Spark's `hash` is murmur3, DuckDB's is wyhash — not portable).
 """
@@ -18,12 +24,15 @@ Design rules (these survive a 1000-executor / 100 TB scale-up):
 from __future__ import annotations
 
 import operator
+from collections import Counter
 from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from debezium_spark.inline import INLINE_MAX_ROWS, footer_rows_exceed
 
 TOKEN_SPLIT_RE = r"\s+"
 
@@ -353,20 +362,26 @@ def lsh_candidate_pairs(
     NULL texts (→ NULL signatures) are handled identically by both: NULL
     band keys group together, and the all-NULL bucket's pairs emit
     exactly once (from band 0)."""
-    from pyspark.sql import types as T
-
     variant = (
         _lsh_candidate_pairs_arrow
-        if rows_per_band <= 2
-        and isinstance(
-            df.schema[id_col].dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        )
+        if _lsh_kernel_fits(df, id_col, rows_per_band)
         else _lsh_candidate_pairs_expr
     )
     return variant(
         df, text_col, id_col,
         num_hashes=num_hashes, rows_per_band=rows_per_band, k=k,
+    )
+
+
+def _lsh_kernel_fits(df: DataFrame, id_col: str, rows_per_band: int) -> bool:
+    """Whether the numpy bucket-pair kernel takes this input: integral ids
+    (its pairs are ``long``) and ``rows_per_band`` ≤ 2 (packed numeric
+    band keys) — read from the schema, before any job."""
+    from pyspark.sql import types as T
+
+    return rows_per_band <= 2 and isinstance(
+        df.schema[id_col].dataType,
+        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
     )
 
 
@@ -473,6 +488,56 @@ def _lsh_candidate_pairs_expr(
     )
 
 
+def _bucket_pairs(
+    ids: np.ndarray,
+    band: np.ndarray,
+    bk_null: np.ndarray,
+    bkey: np.ndarray,
+    keys: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Canonical ``(a, b)`` id pairs (a < b) of a set of band rows, each
+    bucket whole: one row per (document, band), grouped on
+    ``(band, bk_null, bkey)``; ``keys[:, c]`` is the row's document's key
+    at band ``c``.
+
+    Rows sort by bucket once; each bucket's pairs are its triu indices,
+    kept only from the FIRST band where the two documents' keys agree
+    (vectorized column compares against the earlier bands), so a pair
+    that collides in several bands emits once. The loop is O(buckets)
+    Python iterations; everything per pair is numpy."""
+    order = np.lexsort((bkey, bk_null, band))
+    ids, band, bk_null, bkey, keys = (
+        ids[order], band[order], bk_null[order], bkey[order], keys[order]
+    )
+    change = (
+        (np.diff(band) != 0)
+        | (np.diff(bk_null) != 0)
+        | (np.diff(bkey) != 0)
+    )
+    starts = np.concatenate(([0], np.flatnonzero(change) + 1))
+    ends = np.concatenate((starts[1:], [len(ids)]))
+    out_a, out_b = [], []
+    for gs, ge in zip(starts, ends):
+        size = ge - gs
+        if size < 2:
+            continue
+        iu, ju = np.triu_indices(size, 1)
+        gk = keys[gs:ge]
+        keep = np.ones(len(iu), dtype=bool)
+        # emit only from the FIRST band where the two signatures agree
+        for bprev in range(int(band[gs])):
+            keep &= gk[iu, bprev] != gk[ju, bprev]
+        if not keep.any():
+            continue
+        gi = ids[gs:ge]
+        left, right = gi[iu[keep]], gi[ju[keep]]
+        out_a.append(np.minimum(left, right))
+        out_b.append(np.maximum(left, right))
+    if not out_a:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    return np.concatenate(out_a), np.concatenate(out_b)
+
+
 def _lsh_candidate_pairs_arrow(
     df: DataFrame,
     text_col: str,
@@ -487,12 +552,9 @@ def _lsh_candidate_pairs_arrow(
     interpreted Catalyst lambdas.
 
     Shape: band rows repartition on (band, bkey) so every bucket lands
-    whole in one partition, then ONE mapInPandas pass per partition sorts
-    its rows by bucket, takes triu indices per bucket, applies the
-    first-matching-band suppression as vectorized column compares, and
-    emits canonical (a < b) pairs. Per-partition group loop is O(buckets /
-    partitions) Python iterations; everything per-pair is numpy. Needs
-    integral ids and ``rows_per_band`` ≤ 2 (packed numeric band keys)."""
+    whole in one partition, then ONE mapInPandas pass per partition runs
+    :func:`_bucket_pairs` over its rows. Needs integral ids and
+    ``rows_per_band`` ≤ 2 (packed numeric band keys)."""
     num_bands = num_hashes // rows_per_band
     sig = minhash_signature(
         df.select(id_col, text_col), text_col, num_hashes, k
@@ -541,8 +603,6 @@ def _lsh_candidate_pairs_arrow(
             pdf = pdf[~id_null]
             if not len(pdf):
                 return
-        ids = pdf["__id"].to_numpy(np.int64)
-        band = pdf["band"].to_numpy(np.int64)
         # NULL texts → NULL signatures → NULL band keys (NaN floats by the
         # time Arrow hands pandas the batch). Match the expression
         # variant's groupBy semantics exactly: NULL keys form their own
@@ -551,44 +611,19 @@ def _lsh_candidate_pairs_arrow(
         # within the all-NULL bucket the filled keys compare equal at
         # every prior band, so its pairs emit once — from band 0 only.
         bk_s = pdf["bkey"]
-        bk_null = bk_s.isna().to_numpy().astype(np.int8)  # int: np.diff-able
-        bkey = bk_s.fillna(0).to_numpy(np.int64)
-        keys = np.stack(
-            [pdf[f"k{b}"].fillna(0).to_numpy(np.int64) for b in range(nb)],
-            axis=1,
+        a, b = _bucket_pairs(
+            pdf["__id"].to_numpy(np.int64),
+            pdf["band"].to_numpy(np.int64),
+            bk_s.isna().to_numpy().astype(np.int8),  # int: np.diff-able
+            bk_s.fillna(0).to_numpy(np.int64),
+            np.stack(
+                [pdf[f"k{c}"].fillna(0).to_numpy(np.int64)
+                 for c in range(nb)],
+                axis=1,
+            ),
         )
-        order = np.lexsort((bkey, bk_null, band))
-        ids, band, bk_null, bkey, keys = (
-            ids[order], band[order], bk_null[order], bkey[order], keys[order]
-        )
-        change = (
-            (np.diff(band) != 0)
-            | (np.diff(bk_null) != 0)
-            | (np.diff(bkey) != 0)
-        )
-        starts = np.concatenate(([0], np.flatnonzero(change) + 1))
-        ends = np.concatenate((starts[1:], [len(ids)]))
-        out_a, out_b = [], []
-        for gs, ge in zip(starts, ends):
-            size = ge - gs
-            if size < 2:
-                continue
-            iu, ju = np.triu_indices(size, 1)
-            gk = keys[gs:ge]
-            keep = np.ones(len(iu), dtype=bool)
-            # emit only from the FIRST band where the two signatures agree
-            for bprev in range(int(band[gs])):
-                keep &= gk[iu, bprev] != gk[ju, bprev]
-            if not keep.any():
-                continue
-            gi = ids[gs:ge]
-            left, right = gi[iu[keep]], gi[ju[keep]]
-            out_a.append(np.minimum(left, right))
-            out_b.append(np.maximum(left, right))
-        if out_a:
-            yield pd.DataFrame(
-                {"a": np.concatenate(out_a), "b": np.concatenate(out_b)}
-            )
+        if len(a):
+            yield pd.DataFrame({"a": a, "b": b})
 
     return parted.mapInPandas(emit, schema="a long, b long")
 
@@ -625,6 +660,16 @@ def _shingle_jaccard(ta: list, tb: list, k: int) -> tuple[np.ndarray, np.ndarray
     return out, null
 
 
+#: ``near_dup_pairs`` pulls an input of at most this many documents to the
+#: driver in one Arrow collect (the shared ``INLINE_MAX_ROWS``)
+_NEAR_DUP_MAX_ROWS = INLINE_MAX_ROWS
+
+#: ``near_dup_pairs`` calls by route: ``inline``, or the reason the input
+#: took the distributed plan (``over_bound``, ``duplicate_ids``,
+#: ``kernel_decline``)
+near_dup_routes: Counter = Counter()
+
+
 def near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -637,12 +682,122 @@ def near_dup_pairs(
 ) -> DataFrame:
     """LSH candidates verified by true shingle-set Jaccard ≥ threshold.
 
-    Verification touches candidate pairs only: the pair list joins
+    Not lazy: like ``PgOutputStreamDecoder.decode_batch``, a call runs one
+    Spark job. An input of at most ``_NEAR_DUP_MAX_ROWS`` documents comes
+    to the driver as ONE Arrow collect of ``(id, normalize_text(text))``
+    (normalization stays in the JVM; the parquet footers decline a larger
+    file-backed input without a job). The driver then runs the kernels the
+    distributed plan runs — :func:`_minhash_columns`, the packed band keys,
+    :func:`_bucket_pairs` and :func:`_shingle_jaccard` — and the scored
+    pairs go downstream as ``createDataFrame(arrow)``, a local relation, so
+    no Python worker starts. Rows with a NULL id are dropped; a NULL text
+    has no pair that survives (its Jaccard is NULL).
+
+    The decline route is the distributed plan, counted in
+    ``near_dup_routes`` by reason: ``over_bound``; ``duplicate_ids``
+    (its joins multiply rows that share an id, which only that plan
+    reproduces); ``kernel_decline`` (non-integral ids or
+    ``rows_per_band`` > 2, which take :func:`_lsh_candidate_pairs_expr`).
+    There, verification touches candidate pairs only: the pair list joins
     ``(id, normalize_text(text))`` on each side (broadcast when it fits),
-    and ONE ``mapInArrow`` computes each pair's exact Jaccard
-    (:func:`_shingle_jaccard`). Rounding to 4 places and the threshold
-    filter stay JVM-side.
+    and ONE ``mapInArrow`` computes each pair's exact Jaccard.
+
+    On both routes rounding to 4 places and the threshold filter are the
+    same JVM projection.
     """
+    scored = None
+    if _lsh_kernel_fits(df, id_col, rows_per_band):
+        reason, scored = _near_dup_inline(
+            df, text_col, id_col, threshold=threshold,
+            num_hashes=num_hashes, rows_per_band=rows_per_band, k=k,
+        )
+    else:
+        reason = "kernel_decline"
+    near_dup_routes[reason] += 1
+    if scored is None:
+        scored = _near_dup_distributed(
+            df, text_col, id_col,
+            num_hashes=num_hashes, rows_per_band=rows_per_band, k=k,
+        )
+    return (
+        scored.select("a", "b", F.round("__j", 4).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _near_dup_inline(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    threshold: float,
+    num_hashes: int,
+    rows_per_band: int,
+    k: int,
+) -> tuple[str, DataFrame | None]:
+    """``("inline", scored pairs)`` computed on the driver, or
+    ``(reason, None)`` when the input takes the distributed plan."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    bound = _NEAR_DUP_MAX_ROWS
+    if footer_rows_exceed(df, bound):
+        return "over_bound", None
+    got = df.select(
+        F.col(id_col).alias("id"),
+        normalize_text(F.col(text_col)).alias("text"),
+    ).limit(bound + 1).toArrow()
+    if got.num_rows > bound:
+        return "over_bound", None
+    got = got.filter(pc.is_valid(got["id"]))
+    if len(np.unique(got["id"].to_numpy())) < got.num_rows:
+        return "duplicate_ids", None
+    # every pair with a NULL text scores NULL, which the filter drops, so
+    # NULL texts leave before the kernels (the distributed plan's NULL
+    # bucket pairs them only with each other)
+    got = got.filter(pc.is_valid(got["text"])).sort_by("id")
+    ids = got["id"].to_numpy().astype(np.int64)
+    texts = np.array(got["text"].to_pylist(), dtype=object)
+    # sorted unique ids: a row's position orders as its id does, so the
+    # kernel's (min, max) positions are the canonical (a < b) pair
+    n = len(ids)
+    num_bands = num_hashes // rows_per_band
+    sig, _ = _minhash_columns(list(texts), num_hashes, k)
+    keys = np.empty((n, num_bands), dtype=np.int64)
+    for b in range(num_bands):  # packed as bkey_of packs a band
+        packed = sig[b * rows_per_band]
+        for r in range(1, rows_per_band):
+            packed = packed * (1 << 30) + sig[b * rows_per_band + r]
+        keys[:, b] = packed
+    left, right = _bucket_pairs(
+        np.tile(np.arange(n), num_bands),
+        np.repeat(np.arange(num_bands), n),
+        np.zeros(n * num_bands, dtype=np.int8),
+        keys.T.ravel(),
+        np.tile(keys, (num_bands, 1)),
+    )
+    jac, _ = _shingle_jaccard(list(texts[left]), list(texts[right]), k)
+    # rounding to 4 places moves a value by at most 5e-5, so nothing the
+    # JVM filter keeps is dropped here
+    keep = jac >= threshold - 1e-4
+    scored = pa.table(
+        {"a": ids[left[keep]], "b": ids[right[keep]], "__j": jac[keep]}
+    )
+    return "inline", df.sparkSession.createDataFrame(scored)
+
+
+def _near_dup_distributed(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    num_hashes: int,
+    rows_per_band: int,
+    k: int,
+) -> DataFrame:
+    """The decline route: the candidate pairs of
+    :func:`lsh_candidate_pairs` joined to each side's normalized text, and
+    ONE ``mapInArrow`` of :func:`_shingle_jaccard` — pairs with ``__j``."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -677,11 +832,7 @@ def near_dup_pairs(
                 names=["a", "b", "__j"],
             )
 
-    return (
-        joined.mapInArrow(run, schema)
-        .select("a", "b", F.round("__j", 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return joined.mapInArrow(run, schema)
 
 
 def contamination_hits(

@@ -1,13 +1,19 @@
-"""The inline bound both layers decide a micro-batch by: a source decoder
-(``sources/pgoutput.py``) and the merge sinks (``sinks/``) each pull a
-batch under a row bound to the driver, and the batch's parquet footers
-decide an over-bound batch without a Spark job when they can."""
+"""The inline bound the engine decides an input by: a source decoder
+(``sources/pgoutput.py``), the merge sinks (``sinks/``) and
+``analytics.text.near_dup_pairs`` each pull an input under one row bound
+to the driver, and the input's parquet footers decide an over-bound one
+without a Spark job when they can."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import DataFrame
+
+#: the one row bound under which an input is pulled to the driver in one
+#: Arrow collect: the merge sinks' default ``inline_max_rows``, the pgoutput
+#: decoder's message bound and ``near_dup_pairs``'s document bound
+INLINE_MAX_ROWS = 32768
 
 
 def footer_rows_exceed(batch: DataFrame, limit: int) -> bool:

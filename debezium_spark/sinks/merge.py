@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.envelope import OP_TRUNCATE
-from debezium_spark.inline import footer_rows_exceed
+from debezium_spark.inline import INLINE_MAX_ROWS, footer_rows_exceed
 from debezium_spark.operators.reduce import apply_truncates, reduce_last_per_key
 from debezium_spark.operators.unwrap import extract_new_record_state
 
@@ -359,7 +359,7 @@ class ParquetMergeSink:
         num_buckets: int = 16,
         schema_registry=None,
         table_name: str = "target",
-        inline_max_rows: int = 32768,
+        inline_max_rows: int = INLINE_MAX_ROWS,
         inline_merge_target_rows: int = 1 << 18,
     ):
         self.spark = spark

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.envelope import OP_TRUNCATE
+from debezium_spark.inline import INLINE_MAX_ROWS
 from debezium_spark.operators.reduce import apply_truncates, reduce_last_per_key
 from debezium_spark.operators.unwrap import extract_new_record_state
 from debezium_spark.sinks.merge import InlineCollector
@@ -90,7 +91,7 @@ class LogMergeSink:
         compact_every: int = 8,
         schema_registry=None,
         table_name: str = "target",
-        inline_max_rows: int = 32768,
+        inline_max_rows: int = INLINE_MAX_ROWS,
     ):
         if insert_mode != "upsert":
             raise ValueError(

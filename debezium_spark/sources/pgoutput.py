@@ -64,7 +64,7 @@ from itertools import repeat
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from debezium_spark.inline import footer_rows_exceed
+from debezium_spark.inline import INLINE_MAX_ROWS, footer_rows_exceed
 
 #: replication message codes handled by the decoder
 #: (PgOutputMessageDecoder.java:95-115); anything else parses to
@@ -1507,10 +1507,9 @@ def decode_pgoutput_binary(
 
 
 #: a micro-batch decodes on the driver from one Arrow collect while its
-#: messages plus the pending protocol-v2 rows stay within this bound — the
-#: sinks' default ``inline_max_rows``; a larger batch takes the
-#: distributed plan
-_INLINE_MAX_MESSAGES = 32768
+#: messages plus the pending protocol-v2 rows stay within this bound (the
+#: shared ``INLINE_MAX_ROWS``); a larger batch takes the distributed plan
+_INLINE_MAX_MESSAGES = INLINE_MAX_ROWS
 
 
 def _first_bytes(msg_arr):

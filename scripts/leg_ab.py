@@ -5,8 +5,10 @@ job-latency probe before and after (calm floor 0.03-0.08 s/job — read
 the probes before trusting any delta). Each timed run also reports the
 CPU seconds its process tree spent (this driver, the Spark JVM, the
 Python workers): scheduler stalls inflate wall time but barely move CPU
-time, so CPU-s decides a noisy call. Pair with `git stash` to measure
-old-vs-new back-to-back in one window:
+time, so CPU-s decides a noisy call. Building the leg's DataFrame is
+timed apart (``build_wall``, ``build_cpu_s``), since some operators
+compute when called. Pair with `git stash` to measure old-vs-new
+back-to-back in one window:
 
     python scripts/leg_ab.py s32_binlog_txn_payload x6_lsh_candidates
 """
@@ -48,17 +50,27 @@ def main():
     print("probe_pre", probe(spark), flush=True)
     res, me = {}, os.getpid()
     for name in legs:
-        df = qs[name].fn(spark, sf_dir)
-        df.schema  # warm the listing/analysis
-        ts, cpu = [], []
+        ts, cpu, bts, bcpu = [], [], [], []
         for _ in range(5):
+            # built again per run and timed apart: an operator that
+            # computes when called (near_dup_pairs under its inline
+            # bound) does its work here, not in the write
+            c0, t0 = tree_cpu_s(me), time.perf_counter()
+            df = qs[name].fn(spark, sf_dir)
+            df.schema  # the listing/analysis
+            bts.append(round(time.perf_counter() - t0, 3))
+            bcpu.append(round(tree_cpu_s(me) - c0, 2))
             c0, t0 = tree_cpu_s(me), time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             ts.append(round(time.perf_counter() - t0, 3))
             cpu.append(round(tree_cpu_s(me) - c0, 2))
-        res[name] = {"wall": ts, "cpu_s": cpu}  # [0:2] = warm-ups
+        # [0:2] = warm-ups
+        res[name] = {"wall": ts, "cpu_s": cpu, "build_wall": bts,
+                     "build_cpu_s": bcpu}
         print(name, "wall", ts, "median", sorted(ts[2:])[1],
-              "cpu_s", cpu, "median", sorted(cpu[2:])[1], flush=True)
+              "cpu_s", cpu, "median", sorted(cpu[2:])[1],
+              "build_wall", bts, "median", sorted(bts[2:])[1],
+              "build_cpu_s", bcpu, "median", sorted(bcpu[2:])[1], flush=True)
     print("probe_post", probe(spark), flush=True)
     print(json.dumps(res))
 

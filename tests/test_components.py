@@ -7,6 +7,8 @@ diameter-bound propagate loop refuses.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -171,6 +173,86 @@ def test_lsh_pairs_string_ids_fall_back_to_expr(spark):
     )
     assert got == expr
     assert ("doc-0", "doc-1") in set(got)
+
+
+
+def _near_dup_edge_docs(spark, sf_dir):
+    """sf0.001 documents plus the edge rows both near-dup routes must
+    agree on: NULL texts, a NULL id, ``""`` twice, texts shorter than k,
+    non-BMP text, and a long pair whose exact Jaccard is 12499/25000 =
+    0.49996, which rounds up to a threshold of 0.5."""
+    import random
+
+    rnd = random.Random(7)
+
+    def chars(n):  # CJK code points: no 5-gram repeats at this length
+        return "".join(chr(0x4E00 + rnd.randrange(20000)) for _ in range(n))
+
+    common = chars(12503)
+    extra = [
+        (None, "a document without an id, same text as doc 1000"),
+        (1000, "a document without an id, same text as doc 1000"),
+        (1001, ""), (1002, ""), (1003, "abc"), (1004, "abd"),
+        (1005, "smile \U0001F600 here \U0001F600 now and then"),
+        (1006, "smile \U0001F600 here \U0001F603 now and then"),
+        (1007, common + "a" + chars(6249)),
+        (1008, common + "b" + chars(6250)),
+    ]
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id",
+        F.when(F.col("doc_id") % 50 != 0, F.col("text")).alias("text"),
+    )
+    return docs.unionByName(
+        spark.createDataFrame(extra, "doc_id long, text string")
+    )
+
+
+def test_near_dup_inline_matches_distributed(spark, sf_dir, monkeypatch):
+    """The driver-side near-dup route returns exactly the distributed
+    plan's sorted (a, b, jaccard) list, edge texts included, and keeps
+    the pair whose Jaccard only reaches the threshold once rounded."""
+    from debezium_spark.analytics import text
+
+    docs = _near_dup_edge_docs(spark, sf_dir)
+    before = Counter(text.near_dup_routes)
+    inline = sorted(map(tuple, text.near_dup_pairs(docs).collect()))
+    monkeypatch.setattr(text, "_NEAR_DUP_MAX_ROWS", 0)
+    dist = sorted(map(tuple, text.near_dup_pairs(docs).collect()))
+    assert text.near_dup_routes - before == Counter(
+        inline=1, over_bound=1
+    )
+    assert inline == dist
+    pairs = {(a, b): j for a, b, j in inline}
+    assert pairs[(1007, 1008)] == 0.5  # exact 0.49996
+    assert pairs[(1001, 1002)] == 1.0  # "" and "" share the "" shingle
+    assert (1003, 1004) not in pairs  # short texts: candidates, J = 0
+    assert None not in {j for j in pairs.values()}
+
+
+def test_near_dup_routes_counted(spark, sf_dir, monkeypatch):
+    """Each near-dup route is counted under its name: the inline route,
+    and the distributed plan for an over-bound input, duplicated ids and
+    ids the numpy kernel cannot take."""
+    from debezium_spark.analytics import text
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    body = "shared near duplicate text body " * 4
+    dup = spark.createDataFrame(
+        [(1, body), (1, body + "x"), (2, body)], "doc_id long, text string"
+    )
+    named = spark.createDataFrame(
+        [(f"doc-{i}", body) for i in range(3)], "doc_id string, text string"
+    )
+    before = Counter(text.near_dup_routes)
+    assert text.near_dup_pairs(docs).count() > 0
+    assert text.near_dup_pairs(dup).count() > 0
+    assert text.near_dup_pairs(named).count() == 3
+    with monkeypatch.context() as m:
+        m.setattr(text, "_NEAR_DUP_MAX_ROWS", 0)
+        assert text.near_dup_pairs(docs).count() > 0
+    assert text.near_dup_routes - before == Counter(
+        inline=1, duplicate_ids=1, kernel_decline=1, over_bound=1
+    )
 
 
 def test_interval_iso_seconds_rendering(spark):

@@ -214,22 +214,45 @@ def test_jaccard_kernel_matches_jvm_shingle_sets(spark):
     assert 1.0 in got and 0.0 in got and None in got
 
 
-def test_near_dup_pairs_runs_no_repartition_or_shingle_arrays(spark, sf_dir):
-    """On a one-partition input the near-dup chain neither round-robins
-    the documents into more Python tasks nor evaluates a per-row Python
-    UDF, and Jaccard is computed without JVM shingle arrays."""
-    from debezium_spark.analytics.text import near_dup_pairs
+def test_near_dup_pairs_runs_no_repartition_or_shingle_arrays(
+    spark, sf_dir, monkeypatch
+):
+    """On a one-partition input the distributed near-dup chain (the bound
+    at 0 forces it) neither round-robins the documents into more Python
+    tasks nor evaluates a per-row Python UDF, and Jaccard is computed
+    without JVM shingle arrays."""
+    from debezium_spark.analytics import text
 
+    monkeypatch.setattr(text, "_NEAR_DUP_MAX_ROWS", 0)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").coalesce(1)
     assert docs.rdd.getNumPartitions() == 1
     plan = (
-        near_dup_pairs(docs, threshold=0.5)
+        text.near_dup_pairs(docs, threshold=0.5)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "RoundRobinPartitioning" not in plan
     assert "ArrowEvalPython" not in plan
     assert "array_intersect" not in plan
     assert plan.count("MapInArrow") == 2  # the MinHash and Jaccard kernels
+
+
+def test_near_dup_pairs_inline_plan_has_no_python_worker_or_exchange(
+    spark, sf_dir
+):
+    """Under the inline bound the near-dup pairs are a local relation
+    computed on the driver: the plan handed downstream holds no Python
+    worker operator and no shuffle."""
+    from debezium_spark.analytics import text
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    before = text.near_dup_routes["inline"]
+    plan = (
+        text.near_dup_pairs(docs, threshold=0.5)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert text.near_dup_routes["inline"] == before + 1
+    for op in ("MapInArrow", "MapInPandas", "Exchange"):
+        assert op not in plan, op
 
 
 def _simhash_expr(df, text_col="text", bits=16):
